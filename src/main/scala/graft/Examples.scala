@@ -34,21 +34,18 @@ object Examples {
     ledgerDir: String): Unit = {
     import graft.pipelines.{HashRepairJob, MongoMarksPipeline => M, TtlFileSink}
     import graft.incremental.Ledger
-    import graft.sources.MarkStores
-    // The store seam: a live connector swaps in by format name only.
-    val store = MarkStores("jsonl", Map(
-      "marks.path" -> marksPath, "analyses.path" -> analysesPath))
     // Persist the pending set so the sink write and the ledger record
     // see the SAME snapshot (pending re-evaluates the ledger dir
     // otherwise), and record the ~4M keys distributively — never
     // collect them to the driver.
     val analyses = Ledger.pending(
-      store.analyses(spark), ledgerDir, "_id").persist()
+      M.readAnalyses(spark, analysesPath), ledgerDir, "_id").persist()
     try {
       // buildHashLookup already returns (slide, real_hash) keyed the
       // way documents() joins it — no translation step needed
       val hashes = HashRepairJob.buildHashLookup(spark, svsGlob)
-      val docs = M.documents(store.marks(spark), analyses, hashes)
+      val docs = M.documents(M.readMarks(spark, marksPath), analyses,
+        hashes)
       TtlFileSink.write(docs.select("rel_path", "ttl"), outDir)
       Ledger.record(analyses.select("_id"), ledgerDir)
     } finally {
@@ -59,10 +56,11 @@ object Examples {
     }
   }
 
-  /** MIGRATION §3: the DataSource V2 face of the live store —
-    * plain DataFrame filters; Catalyst plans the server-side pushdown
-    * (`_id >=` → start_from, nested execution_id IN → execution_ids)
-    * with zero residual re-evaluation. */
+  /** MIGRATION §3: the live store through the DataSource V2 connector
+    * over the MongoDB OP_MSG wire — plain DataFrame filters; Catalyst
+    * plans the server-side pushdown (`_id >=` → `$gte`, nested
+    * execution_id IN → `$in` in the find filter) with zero residual
+    * re-evaluation. */
   def marksViaDsv2(spark: SparkSession, host: String, port: Int,
     startFrom: String, execIds: Seq[String])
     : org.apache.spark.sql.DataFrame =

@@ -83,6 +83,10 @@ object GraftSession {
     * ContextCleaner deleting shuffle/broadcast files on small heaps
     * that would otherwise never collect. */
   def harness(cpus: String): SparkSession = {
+    // `SPARK_GRAFT_PREFER_SMJ=1` restores the pre-r22 join preference
+    // (SMJ over SHJ; broadcast unaffected) for isolated A/Bs — the
+    // driver never sets it
+    val preferSmj = sys.env.get("SPARK_GRAFT_PREFER_SMJ").contains("1")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -100,13 +104,9 @@ object GraftSession {
       // geomean 0.949, 10 queries >12% faster (u2 0.74×, v11/x12/u6
       // 0.76×, u1/v12/v10 0.81×, m5/q8 0.82×, q9 0.83×), ZERO queries
       // symmetrically slower.
-      // `SPARK_GRAFT_PREFER_SMJ=1` restores the sort-merge-only planner
-      // for isolated A/Bs (same pattern as SPARK_GRAFT_BYPASS above —
-      // the driver never sets it).
-      .config("spark.sql.join.preferSortMergeJoin",
-        if (sys.env.contains("SPARK_GRAFT_PREFER_SMJ")) "true" else "false")
+      .config("spark.sql.join.preferSortMergeJoin", preferSmj.toString)
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        if (sys.env.contains("SPARK_GRAFT_PREFER_SMJ")) "0" else "128m")
+        if (preferSmj) "0" else "128m")
       .config("spark.cleaner.periodicGC.interval", "45s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,9 +1,9 @@
 package graft
 
 /** One JSON string-literal escaper — shared by the Verify dump and
-  * the mark-store wire (SocketMarkStore), so an escaping fix lands
-  * once. Escapes backslash, quote, and EVERY control char < 0x20
-  * (\n/\r/\t as their shortcuts); a stray tab or CR in
+  * the mark-store connector's streaming offsets (`MarkIdOffset`), so
+  * an escaping fix lands once. Escapes backslash, quote, and EVERY
+  * control char < 0x20 (\n/\r/\t as their shortcuts); a stray tab or CR in
   * builder-authored SQL would otherwise break the driver's
   * json.load of the artifact. */
 object Json {

@@ -21,9 +21,9 @@ import scala.jdk.CollectionConverters._
   * conversion (`JsonRows`) is codec-agnostic.
   *
   * Truncation is LOUD: `read` throws EOFException when the stream
-  * ends inside a document — the same exactly-once discipline as the
-  * JSONL wire's end-of-page check (a severed connection must fail the
-  * task, not pass as a short page). */
+  * ends inside a document — the exactly-once discipline of the OP_MSG
+  * wire ([[MongoWire]]: a severed connection must fail the task, not
+  * pass as a short page). */
 object Bson {
   private val nf = JsonNodeFactory.instance
 

@@ -17,9 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.pipelines.MongoMarksPipeline
 
-/** DataSource V2 connector over the mark-store TCP cursor protocol —
-  * the full production-connector shape (what `mongo-spark` is to
-  * MongoDB) for the reference's primary source
+/** DataSource V2 connector over the MongoDB OP_MSG wire
+  * ([[MongoWire]]) — the full production-connector shape (what
+  * `mongo-spark` is to MongoDB) for the reference's primary source
   * (mongo-etl/mongodb_to_rdf.py:499-515; server-side indexes
   * build_indexes.sh:18-36):
   *
@@ -29,32 +29,29 @@ import graft.pipelines.MongoMarksPipeline
   *     .option("collection", "marks")      // or "analyses"
   *     .option("partitions", "8")          // id-range splits
   *     .option("batch.size", "256")        // cursor page size
-  *     .option("wire", "bson")             // BSON frames (default jsonl)
   *     .load()
   *     .filter($"_id" >= "m-010")          // pushed: start_from
   *     .filter($"provenance.analysis.execution_id".isin("e1"))
   *                                         // pushed: execution_ids
   * }}}
   *
-  * Where `MarkStore`/`SocketMarkStore` prove the WIRE contract behind
-  * an explicit API, this connector hands the same pushdown to CATALYST:
-  * `_id >= x` and `execution_id IN (…)` predicates are recognized in
-  * `pushFilters`, travel in the find request, and are REMOVED from the
-  * residual (server evaluation is exact: equality/IN are
-  * ordering-free, and `_id >=` only pushes for all-ASCII bounds,
-  * where Catalyst's UTF-8 and the server's UTF-16 orderings provably
-  * agree — non-ASCII bounds stay residual), so `.explain` shows them
-  * under PushedFilters and
+  * Catalyst plans the pushdown: `_id >= x` and `execution_id IN (…)`
+  * predicates are recognized in `pushFilters`, travel in the find
+  * command's filter document, and are REMOVED from the residual
+  * (server evaluation is exact: equality/IN are ordering-free, and
+  * `_id >=` only pushes for all-ASCII bounds, where Catalyst's UTF-8
+  * and the server's UTF-16 orderings provably agree — non-ASCII bounds
+  * stay residual), so `.explain` shows them under PushedFilters and
   * no re-filtering happens engine-side. Everything else stays residual
   * with Catalyst. Column pruning keeps only the requested TOP-LEVEL
-  * fields (documents are parsed per line anyway; pruning saves row
-  * width, not wire bytes).
+  * fields and travels as the find projection, so it saves wire bytes.
   *
-  * Execution shape matches the proven store: one driver `splits` call
-  * (the splitVector pattern), then one InputPartition per id range,
-  * each reader paging its own connection in `batch.size` chunks (the
-  * getMore loop). At 4B marks the fan-out scales with partitions and
-  * no document ever materializes outside its range reader.
+  * Execution shape: one driver-side splitVector call, then one
+  * InputPartition per id range, each reader draining its own
+  * server-side cursor over its own connection in `batch.size` pages
+  * (find, then getMore until cursor id 0). At 4B marks the fan-out
+  * scales with partitions and no document ever materializes outside
+  * its range reader.
   */
 class MarkSocketDataSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap)
@@ -205,20 +202,20 @@ private[sources] class MarkSocketScanBuilder(props: Map[String, String])
       case (Some(a), Some(b)) => Some(a.intersect(b))
       case (a, b) => a.orElse(b)
     }
-    val wire = props.getOrElse("wire", "jsonl")
-    require(Set("jsonl", "bson", "mongo").contains(wire),
-      s"unknown wire codec '$wire' (jsonl | bson | mongo)")
+    val nPartitions = props.getOrElse("partitions", "4").toInt
+    val batchSize = props.getOrElse("batch.size", "256").toInt
+    // a zero page size would getMore forever on an empty batch
+    require(nPartitions >= 1, s"partitions must be >= 1: $nPartitions")
+    require(batchSize >= 1, s"batch.size must be >= 1: $batchSize")
     new MarkSocketScan(opt("host"), opt("port").toInt, collection,
-      props.getOrElse("partitions", "4").toInt,
-      props.getOrElse("batch.size", "256").toInt,
-      required, sf, ids, wire)
+      nPartitions, batchSize, required, sf, ids)
   }
 }
 
 private[sources] class MarkSocketScan(host: String, port: Int,
   collection: String, nPartitions: Int, batchSize: Int,
   required: StructType, startFrom: Option[String],
-  execIds: Option[Seq[String]], wire: String = "jsonl")
+  execIds: Option[Seq[String]])
   extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -228,28 +225,15 @@ private[sources] class MarkSocketScan(host: String, port: Int,
       startFrom.map(s => s"start_from=$s"),
       execIds.map(ids => s"execution_ids=${ids.mkString(",")}"))
       .flatten.mkString(" ")
-    s"graft-marksocket($wire) $collection@$host:$port $push".trim
+    s"graft-marksocket $collection@$host:$port $push".trim
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // one driver-side call: range boundaries (the splitVector step —
-    // on the mongo wire, literally the splitVector command)
-    val bounds = wire match {
-      case "bson" =>
-        BsonWire.querySplits(host, port, collection, nPartitions)
-      case "mongo" =>
-        MongoWire.querySplits(host, port, collection, nPartitions)
-      case _ =>
-        MarkSocketScan.querySplits(host, port, collection, nPartitions)
-    }
-    val ranges = (None +: bounds.map(Option(_)))
-      .zip(bounds.map(Option(_)) :+ None)
-    ranges.map { case (min, max) =>
-      MarkRangePartition(host, port, collection, batchSize,
-        min, max, startFrom, execIds.map(_.toArray),
-        wire = wire): InputPartition
-    }.toArray
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    MarkSocketScan.idRanges(host, port, collection, nPartitions)
+      .map { case (min, max) =>
+        MarkRangePartition(host, port, collection, batchSize,
+          min, max, startFrom, execIds.map(_.toArray)): InputPartition
+      }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new MarkSocketReaderFactory(required)
@@ -264,52 +248,18 @@ private[sources] class MarkSocketScan(host: String, port: Int,
   override def toMicroBatchStream(checkpointLocation: String)
     : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new MarkSocketMicroBatchStream(host, port, collection, nPartitions,
-      batchSize, required, startFrom, execIds, wire)
+      batchSize, required, startFrom, execIds)
 }
 
 private[sources] object MarkSocketScan {
-  import java.io.{BufferedReader, InputStreamReader, PrintWriter}
-  import java.net.Socket
-  import java.nio.charset.StandardCharsets.UTF_8
-
-  /** Driver-side probe: highest `_id` currently in the collection
-    * (the streaming latestOffset; a live Mongo spells it
-    * `find().sort({_id:-1}).limit(1)`). None = empty collection. */
-  private[sources] def queryMaxId(host: String, port: Int,
-    collection: String): Option[String] = {
-    val req = s"""{"op":"max_id","collection":${
-      SocketMarkStore.js(collection)}}"""
-    val sock = new Socket(host, port)
-    try {
-      val out = new PrintWriter(new java.io.OutputStreamWriter(
-        sock.getOutputStream, UTF_8), true)
-      val in = new BufferedReader(
-        new InputStreamReader(sock.getInputStream, UTF_8))
-      out.println(req)
-      val line = in.readLine()
-      require(line != null, "max_id: server closed without replying")
-      val node = new ObjectMapper().readTree(line).get("max_id")
-      if (node == null || node.isNull) None else Some(node.asText())
-    } finally sock.close()
-  }
-
-  private[sources] def querySplits(host: String, port: Int,
-    collection: String, nPartitions: Int): Seq[String] = {
-    val req = s"""{"op":"splits","collection":${
-      SocketMarkStore.js(collection)},"n_splits":$nPartitions}"""
-    val sock = new Socket(host, port)
-    try {
-      val out = new PrintWriter(new java.io.OutputStreamWriter(
-        sock.getOutputStream, UTF_8), true)
-      val in = new BufferedReader(
-        new InputStreamReader(sock.getInputStream, UTF_8))
-      out.println(req)
-      val line = in.readLine()
-      require(line != null, "splits: server closed without replying")
-      val node = new ObjectMapper().readTree(line).get("splits")
-      require(node != null && node.isArray, s"bad splits reply: $line")
-      node.elements().asScala.map(_.asText()).toSeq
-    } finally sock.close()
+  /** One driver-side splitVector call → the `[min, max)` id ranges it
+    * bounds (None = open end). */
+  private[sources] def idRanges(host: String, port: Int,
+    collection: String, nPartitions: Int)
+    : Seq[(Option[String], Option[String])] = {
+    val bounds = MongoWire.querySplits(host, port, collection, nPartitions)
+      .map(Option(_))
+    (None +: bounds).zip(bounds :+ None)
   }
 }
 
@@ -317,145 +267,14 @@ private[sources] case class MarkRangePartition(host: String, port: Int,
   collection: String, batchSize: Int, minId: Option[String],
   maxId: Option[String], startFrom: Option[String],
   execIds: Option[Array[String]],
-  afterStart: Option[String] = None,
-  wire: String = "jsonl") extends InputPartition
-
-/** A paged range cursor yielding parsed documents — one per wire
-  * codec (JSONL lines, BSON frames). */
-private[sources] trait DocCursor extends Iterator[JsonNode]
-  with AutoCloseable
-
-/** The JSONL wire's cursor: SocketMarkStore's proven line pager with
-  * per-line parsing on top. */
-private[sources] final class JsonlDocCursor(
-  inner: SocketMarkStore.PagedCursor) extends DocCursor {
-  private val mapper = new ObjectMapper()
-  override def hasNext: Boolean = inner.hasNext
-  override def next(): JsonNode = mapper.readTree(inner.next())
-  override def close(): Unit = inner.close()
-}
-
-/** The BSON wire: same splits / find / getMore request shapes as the
-  * JSONL protocol, but every request and document is a BSON frame
-  * (self-length-prefixed) and a page ends with an EMPTY document —
-  * the binary analog of the blank line. EOF before the marker throws
-  * (via `Bson.read`), preserving the exactly-once task-failure
-  * semantics. */
-private[sources] object BsonWire {
-  import java.io.{BufferedInputStream, BufferedOutputStream}
-  import java.net.Socket
-  import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
-
-  private val nf = JsonNodeFactory.instance
-
-  private[sources] def findRequest(collection: String,
-    minId: Option[String], maxId: Option[String],
-    startFrom: Option[String], executionIds: Option[Seq[String]],
-    afterId: Option[String], batchSize: Int): ObjectNode = {
-    val o = nf.objectNode()
-    o.put("op", "find").put("collection", collection)
-    def opt(k: String, v: Option[String]): Unit =
-      v.fold[Unit] { o.putNull(k); () } { s => o.put(k, s); () }
-    opt("min_id", minId); opt("max_id", maxId)
-    opt("start_from", startFrom)
-    executionIds match {
-      case Some(ids) =>
-        val a = o.putArray("execution_ids"); ids.foreach(a.add)
-      case None => o.putNull("execution_ids")
-    }
-    opt("after_id", afterId)
-    o.put("batch_size", batchSize)
-    o
-  }
-
-  /** One driver-side request → single-document reply. */
-  private def roundTrip(host: String, port: Int,
-    req: ObjectNode): JsonNode = {
-    val sock = new Socket(host, port)
-    try {
-      val out = new BufferedOutputStream(sock.getOutputStream)
-      out.write(Bson.encode(req)); out.flush()
-      val reply = Bson.read(new BufferedInputStream(sock.getInputStream))
-      require(reply != null, s"${req.get("op")}: server closed without replying")
-      reply
-    } finally sock.close()
-  }
-
-  private[sources] def querySplits(host: String, port: Int,
-    collection: String, nPartitions: Int): Seq[String] = {
-    val req = nf.objectNode()
-    req.put("op", "splits").put("collection", collection)
-      .put("n_splits", nPartitions)
-    val node = roundTrip(host, port, req).get("splits")
-    require(node != null && node.isArray, s"bad splits reply: $node")
-    node.elements().asScala.map(_.asText()).toSeq
-  }
-
-  private[sources] def queryMaxId(host: String, port: Int,
-    collection: String): Option[String] = {
-    val req = nf.objectNode()
-    req.put("op", "max_id").put("collection", collection)
-    val node = roundTrip(host, port, req).get("max_id")
-    if (node == null || node.isNull) None else Some(node.asText())
-  }
-
-  /** BSON frame pager — the same getMore loop and short-page /
-    * end-of-page discipline as the JSONL `PagedCursor`. */
-  private[sources] final class BsonDocCursor(host: String, port: Int,
-    batchSize: Int, requestFor: Option[String] => ObjectNode)
-    extends DocCursor {
-    private val sock = new Socket(host, port)
-    private val out = new BufferedOutputStream(sock.getOutputStream)
-    private val in = new BufferedInputStream(sock.getInputStream)
-
-    private def page(after: Option[String]): Vector[JsonNode] = {
-      out.write(Bson.encode(requestFor(after))); out.flush()
-      val buf = Vector.newBuilder[JsonNode]
-      var doc = Bson.read(in)
-      if (doc == null) throw new java.io.EOFException(
-        "mark store connection severed before the page")
-      while (doc.size() != 0) { // empty doc = end of page
-        buf += doc
-        doc = Bson.read(in)
-        if (doc == null) throw new java.io.EOFException(
-          "mark store connection severed mid-page")
-      }
-      buf.result()
-    }
-
-    // construction-failure path must not leak the socket (see
-    // PagedCursor: close() is only guaranteed for a BUILT reader)
-    private var buf =
-      try page(None)
-      catch { case t: Throwable => close(); throw t }
-    private var i = 0
-    private var done = false
-    private def advance(): Unit =
-      while (!done && i >= buf.length) {
-        if (buf.length < batchSize) { done = true; close() }
-        else {
-          val last = buf.last.get("_id")
-          require(last != null, s"served doc has no _id: ${buf.last}")
-          buf = page(Some(last.asText())); i = 0
-          if (buf.isEmpty) { done = true; close() }
-        }
-      }
-    override def hasNext: Boolean = { advance(); !done && i < buf.length }
-    override def next(): JsonNode = {
-      advance()
-      if (done) throw new NoSuchElementException("cursor drained")
-      val d = buf(i); i += 1; d
-    }
-    override def close(): Unit = if (!sock.isClosed) sock.close()
-  }
-}
+  afterStart: Option[String] = None) extends InputPartition
 
 /** `_id` high-water-mark offset for the streaming face. `lastId`
   * None = before everything. */
 private[sources] case class MarkIdOffset(lastId: Option[String])
   extends org.apache.spark.sql.connector.read.streaming.Offset {
   override def json(): String =
-    s"""{"last_id":${lastId.fold("null")(SocketMarkStore.js)}}"""
+    s"""{"last_id":${lastId.fold("null")(graft.Json.str)}}"""
 }
 
 private[sources] object MarkIdOffset {
@@ -469,22 +288,18 @@ private[sources] object MarkIdOffset {
 private[sources] class MarkSocketMicroBatchStream(host: String,
   port: Int, collection: String, nPartitions: Int, batchSize: Int,
   required: StructType, startFrom: Option[String],
-  execIds: Option[Seq[String]], wire: String = "jsonl")
+  execIds: Option[Seq[String]])
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
   /** Smallest string strictly greater than `s` — turns an inclusive
-    * id bound into the protocol's exclusive `max_id`. */
+    * id bound into the filter's exclusive `$lt`. */
   private def successor(s: String): String = s + "\u0000"
 
   override def initialOffset(): Offset = MarkIdOffset(None)
 
   override def latestOffset(): Offset =
-    MarkIdOffset(wire match {
-      case "bson" => BsonWire.queryMaxId(host, port, collection)
-      case "mongo" => MongoWire.queryMaxId(host, port, collection)
-      case _ => MarkSocketScan.queryMaxId(host, port, collection)
-    })
+    MarkIdOffset(MongoWire.queryMaxId(host, port, collection))
 
   override def deserializeOffset(json: String): Offset =
     MarkIdOffset.fromJson(json)
@@ -496,23 +311,14 @@ private[sources] class MarkSocketMicroBatchStream(host: String,
     if (e.isEmpty || s == e) return Array.empty
     val endEx = successor(e.get) // include the high-water id itself
     // same splitVector step as the batch path; each range clamps to
-    // the (start, end] window via after_id / max_id in the request
-    val bounds = wire match {
-      case "bson" =>
-        BsonWire.querySplits(host, port, collection, nPartitions)
-      case "mongo" =>
-        MongoWire.querySplits(host, port, collection, nPartitions)
-      case _ =>
-        MarkSocketScan.querySplits(host, port, collection, nPartitions)
-    }
-    val ranges = (None +: bounds.map(Option(_)))
-      .zip(bounds.map(Option(_)) :+ None)
-    ranges.map { case (min, max) =>
-      val maxEx = max.fold(endEx)(m => if (m < endEx) m else endEx)
-      MarkRangePartition(host, port, collection, batchSize,
-        min, Some(maxEx), startFrom, execIds.map(_.toArray),
-        afterStart = s, wire = wire): InputPartition
-    }.toArray
+    // the (start, end] window via $gt / $lt in the filter document
+    MarkSocketScan.idRanges(host, port, collection, nPartitions)
+      .map { case (min, max) =>
+        val maxEx = max.fold(endEx)(m => if (m < endEx) m else endEx)
+        MarkRangePartition(host, port, collection, batchSize,
+          min, Some(maxEx), startFrom, execIds.map(_.toArray),
+          afterStart = s): InputPartition
+      }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -531,39 +337,21 @@ private[sources] class MarkSocketReaderFactory(required: StructType)
   }
 }
 
-/** One id-range: a single connection paged in batch.size chunks via
-  * the shared cursor loop, each JSON line converted straight to an
+/** One id-range: a single connection draining one server-side cursor
+  * in batch.size pages, each document converted straight to an
   * InternalRow of the (pruned) schema. */
 private[sources] class MarkRangeReader(p: MarkRangePartition,
   required: StructType) extends PartitionReader[InternalRow] {
 
-  // the cursor's after_id doubles as the streaming window's
-  // exclusive lower bound on the FIRST page (afterStart = the
-  // previous batch's high-water mark); later pages resume from the
-  // last id seen, which is always >= that bound
-  private val docs: DocCursor = p.wire match {
-    case "bson" =>
-      new BsonWire.BsonDocCursor(p.host, p.port, p.batchSize,
-        after => BsonWire.findRequest(p.collection, p.minId, p.maxId,
-          p.startFrom, p.execIds.map(_.toSeq),
-          after.orElse(p.afterStart), p.batchSize))
-    case "mongo" =>
-      // server-side cursor: continuation is the cursor itself, so
-      // only the streaming window's lower bound enters the filter.
-      // The pruned schema doubles as the find PROJECTION (mongo
-      // includes _id regardless, like the real server).
-      new MongoWire.MongoDocCursor(p.host, p.port, p.collection,
-        p.batchSize, MongoWire.filterDoc(p.minId, p.maxId,
-          p.startFrom, p.execIds.map(_.toSeq), p.afterStart,
-          MarkSocketDataSource.execIdPath(p.collection)),
-        projection = required.fieldNames.toSeq)
-    case _ =>
-      new JsonlDocCursor(SocketMarkStore.pageRange(
-        p.host, p.port, p.batchSize,
-        after => SocketMarkStore.findRequest(p.collection, p.minId,
-          p.maxId, p.startFrom, p.execIds.map(_.toSeq),
-          after.orElse(p.afterStart), p.batchSize)))
-  }
+  // only the streaming window's lower bound (afterStart = the
+  // previous batch's high-water mark) enters the filter: continuation
+  // is the cursor itself. The pruned schema doubles as the find
+  // PROJECTION (mongo includes _id regardless, like the real server).
+  private val docs = new MongoWire.MongoDocCursor(p.host, p.port,
+    p.collection, p.batchSize, MongoWire.filterDoc(p.minId, p.maxId,
+      p.startFrom, p.execIds.map(_.toSeq), p.afterStart,
+      MarkSocketDataSource.execIdPath(p.collection)),
+    projection = required.fieldNames.toSeq)
   private var current: InternalRow = _
 
   override def next(): Boolean =
@@ -582,7 +370,7 @@ private[sources] class MarkRangeReader(p: MarkRangePartition,
 /** Minimal JSON → InternalRow conversion for the mark/analysis
   * schemas (strings, integral/floating numerics, booleans, structs,
   * arrays). PERMISSIVE-style: a missing field or type mismatch yields
-  * null, matching what `spark.read.schema(s).json(ds)` produces for
+  * null, matching what `MongoMarksPipeline.readMarks` produces for
   * these documents — `SocketPipelineE2ESpec`/`MarkSocketDataSourceSpec`
   * pin the parity. */
 private[sources] object JsonRows {

@@ -10,10 +10,10 @@ import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 import scala.jdk.CollectionConverters._
 
 /** The MongoDB wire protocol's modern framing and command surface
-  * (public spec: OP_MSG, opcode 2013) — the third wire of the
-  * mark-store connector and the closest in-sandbox stand-in for the
-  * reference's actual source (mongo-etl/mongodb_to_rdf.py:499-515
-  * drives exactly these commands through pymongo):
+  * (public spec: OP_MSG, opcode 2013) — the wire of the mark-store
+  * connector ([[MarkSocketDataSource]]) and the commands the
+  * reference's source drives through pymongo
+  * (mongo-etl/mongodb_to_rdf.py:499-515):
   *
   *   frame   = messageLength:i32 requestID:i32 responseTo:i32
   *             opCode:i32(=2013) flagBits:i32(=0)
@@ -25,15 +25,16 @@ import scala.jdk.CollectionConverters._
   *   splitVector = {splitVector: coll, keyPattern: {_id: 1},
   *              maxChunks: n}            → {splitKeys: [{_id: …}]}
   *
-  * Unlike the JSONL/BSON cursor wires (stateless after_id paging),
-  * OP_MSG cursors are SERVER-side state: the find opens a cursor, the
+  * Cursors are SERVER-side state: the find opens a cursor, the
   * reader drains it with getMore until the server returns id 0 — the
   * exact shape pymongo's batch_size find() produces. Filters compose
   * as {_id: {$gte/$gt/$lt}} + {execution_id: {$in}} inside the find
   * command, so pushdown is a real Mongo filter document.
   *
-  * Fail-loud contract: EOF inside a frame throws (the severed-page
-  * discipline); a reply with ok != 1 throws with the server's error.
+  * Fail-loud contract: EOF inside a frame throws, so a connection
+  * severed mid-page fails the task instead of passing as a short final
+  * batch (a streaming batch would otherwise commit an offset it never
+  * fully read); a reply with ok != 1 throws with the server's error.
   * Out of scope, documented: auth handshake, compression
   * (OP_COMPRESSED), checksums (flagBit 0), multi-section OP_MSG —
   * none of which change the scan shape. */
@@ -190,13 +191,15 @@ object MongoWire {
 
   /** One id-range over a server-side cursor: find opens it, getMore
     * drains it, cursor id 0 ends it. One connection per partition
-    * (the cursor lives on that connection's session). `projection`
+    * (the cursor lives on that connection's session). The socket
+    * closes on drain; an early-terminated scan never drains, so the
+    * reader must also `close()` it (idempotent). `projection`
     * (top-level field names) travels IN the find command — on this
     * wire column pruning saves wire bytes, not just row width. */
   private[sources] final class MongoDocCursor(host: String, port: Int,
     collection: String, batchSize: Int, filter: ObjectNode,
     projection: Seq[String] = Nil)
-    extends DocCursor {
+    extends Iterator[JsonNode] with AutoCloseable {
     private val sock = new Socket(host, port)
     private val out = new BufferedOutputStream(sock.getOutputStream)
     private val in = new BufferedInputStream(sock.getInputStream)
@@ -209,8 +212,8 @@ object MongoWire {
     }
 
     private var cursorId: Long = 0L
-    // construction-failure path must not leak the socket (see
-    // PagedCursor: close() is only guaranteed for a BUILT reader)
+    // construction-failure path must not leak the socket: Spark only
+    // calls close() on a reader that was built
     private var buf: Vector[JsonNode] =
       try {
         val cmd = nf.objectNode()

@@ -7,17 +7,17 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-/** The BSON wire face of the mark-store DSv2 connector: the codec
-  * round-trips the mark documents, and `wire=bson` rides the SAME
-  * proven scan machinery — Catalyst pushdown travels in a binary find
-  * request, splits fan out per range, rows parse to the exact frames
-  * the JSONL wire produces. */
+/** The BSON face of the mark-store connector: the codec under the
+  * OP_MSG bodies round-trips mark documents and fails loudly on
+  * truncated or corrupt lengths, and a scan over that binary wire
+  * parses to the exact rows Spark's JSON reader gives for the same
+  * documents, with the Catalyst pushdown crossing it. */
 class BsonMarkDataSourceSpec extends SparkTestBase {
 
-  private def markDoc(i: Int): TcpMarkServer.Doc = {
+  private def markDoc(i: Int): TcpMongoServer.Doc = {
     val id = f"m-$i%03d"
     val exec = if (i % 2 == 0) "exec-2" else "exec-1"
-    TcpMarkServer.Doc(id, exec,
+    TcpMongoServer.Doc(id, exec,
       s"""{"_id":"$id","provenance":{"analysis":{"execution_id":"$exec"},""" +
         s""""image":{"imageid":"img-$i","slide":"slide-${i % 3}"}},""" +
         s""""geometries":{"features":[{"geometry":{"type":"Polygon",""" +
@@ -26,8 +26,8 @@ class BsonMarkDataSourceSpec extends SparkTestBase {
   }
   private val marks = (1 to 20).map(markDoc)
 
-  private def withServer[A](f: (TcpBsonMarkServer, Int) => A): A = {
-    val srv = new TcpBsonMarkServer(Map("marks" -> marks))
+  private def withServer[A](f: (TcpMongoServer, Int) => A): A = {
+    val srv = new TcpMongoServer(Map("marks" -> marks))
     val port = srv.start()
     try f(srv, port) finally srv.stop()
   }
@@ -35,7 +35,7 @@ class BsonMarkDataSourceSpec extends SparkTestBase {
   private def read(port: Int): DataFrame =
     spark.read.format("graft.sources.MarkSocketDataSource")
       .option("host", "127.0.0.1").option("port", port.toString)
-      .option("collection", "marks").option("wire", "bson")
+      .option("collection", "marks")
       .option("partitions", "3").option("batch.size", "4")
       .load()
 
@@ -59,13 +59,14 @@ class BsonMarkDataSourceSpec extends SparkTestBase {
       import spark.implicits._
       val viaBson = read(port)
       assert(viaBson.schema == MongoMarksPipeline.markSchema)
+      // the same documents as JSON lines through Spark's JSON reader
       val viaJson = spark.read.schema(MongoMarksPipeline.markSchema)
         .json(spark.createDataset(marks.map(_.json)))
       val a = viaBson.orderBy("_id").toJSON.collect().toSeq
       val b = viaJson.orderBy("_id").toJSON.collect().toSeq
       assert(a == b, s"row parity broke:\n${a.take(2)}\nvs\n${b.take(2)}")
       val splitsCalls =
-        srv.requests.asScala.count(_.contains("\"op\":\"splits\""))
+        srv.requests.asScala.count(_.contains("\"splitVector\""))
       assert(splitsCalls >= 1 && splitsCalls <= 3, s"$splitsCalls")
     }
   }
@@ -83,9 +84,10 @@ class BsonMarkDataSourceSpec extends SparkTestBase {
       val ids = df.select("_id").collect().map(_.getString(0)).sorted
       assert(ids.toSeq ==
         marks.filter(d => d.id >= "m-010" && d.execId == "exec-1").map(_.id))
+      // the decoded OP_MSG body carries both predicates in one filter
       assert(srv.requests.asScala.exists(r =>
-        r.contains("\"start_from\":\"m-010\"") &&
-          r.contains("\"execution_ids\":[\"exec-1\"]")),
+        r.startsWith("{\"find\"") && r.contains("\"$gte\":\"m-010\"") &&
+          r.contains("\"$in\":[\"exec-1\"]")),
         s"predicates did not cross the wire: ${
           srv.requests.asScala.filter(_.contains("find")).take(3)}")
     }
@@ -99,7 +101,6 @@ class BsonMarkDataSourceSpec extends SparkTestBase {
       }
       def hasEof(t: Throwable): Boolean =
         t != null && (t.isInstanceOf[java.io.EOFException] ||
-          Option(t.getMessage).exists(_.contains("severed")) ||
           hasEof(t.getCause))
       assert(hasEof(ex), s"expected severed-page EOFException, got $ex")
     }
@@ -146,13 +147,13 @@ class BsonMarkDataSourceSpec extends SparkTestBase {
   }
 
   test("streaming face works over the BSON wire") {
-    val srv = new TcpBsonMarkServer(Map("marks" -> (1 to 6).map(markDoc)))
+    val srv = new TcpMongoServer(Map("marks" -> (1 to 6).map(markDoc)))
     val port = srv.start()
     val ckpt = java.nio.file.Files.createTempDirectory("bson_ckpt").toString
     try {
       val q = spark.readStream.format("graft.sources.MarkSocketDataSource")
         .option("host", "127.0.0.1").option("port", port.toString)
-        .option("collection", "marks").option("wire", "bson")
+        .option("collection", "marks")
         .option("partitions", "2").option("batch.size", "4")
         .load().select("_id")
         .writeStream.format("memory").queryName("bson_stream")

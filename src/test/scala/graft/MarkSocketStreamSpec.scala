@@ -4,16 +4,16 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-/** The DSv2 connector's streaming face: `readStream` over the TCP
-  * cursor store — the reference's cursor micro-batch loop (T1) +
+/** The DSv2 connector's streaming face: `readStream` over the OP_MSG
+  * mark store — the reference's cursor micro-batch loop (T1) +
   * durable checkpoint (T2) as a real Structured Streaming source with
   * `_id` high-water-mark offsets. */
 class MarkSocketStreamSpec extends SparkTestBase {
 
-  private def markDoc(i: Int): TcpMarkServer.Doc = {
+  private def markDoc(i: Int): TcpMongoServer.Doc = {
     val id = f"m-$i%03d"
     val exec = if (i % 2 == 0) "exec-2" else "exec-1"
-    TcpMarkServer.Doc(id, exec,
+    TcpMongoServer.Doc(id, exec,
       s"""{"_id":"$id","provenance":{"analysis":{"execution_id":"$exec"},""" +
         s""""image":{"imageid":"img-$i","slide":"s"}}}""")
   }
@@ -26,7 +26,7 @@ class MarkSocketStreamSpec extends SparkTestBase {
       .load()
 
   test("micro-batches follow the _id high-water mark, exactly once") {
-    val srv = new TcpMarkServer(Map("marks" -> (1 to 6).map(markDoc)))
+    val srv = new TcpMongoServer(Map("marks" -> (1 to 6).map(markDoc)))
     val port = srv.start()
     val ckpt = Files.createTempDirectory("ms_ckpt").toString
     val out = Files.createTempDirectory("ms_out").toString
@@ -70,7 +70,7 @@ class MarkSocketStreamSpec extends SparkTestBase {
     // page), the batch's offset must stay uncommitted, and a restarted
     // query against a revived server must re-read exactly that window.
     val docs0 = (1 to 6).map(markDoc)
-    val srv = new TcpMarkServer(Map("marks" -> docs0))
+    val srv = new TcpMongoServer(Map("marks" -> docs0))
     val port = srv.start()
     val ckpt = Files.createTempDirectory("ms_crash_ckpt").toString
     val out = Files.createTempDirectory("ms_crash_out").toString
@@ -99,7 +99,7 @@ class MarkSocketStreamSpec extends SparkTestBase {
       srv.stop()
 
       // server comes back at the SAME address with the same store
-      val srv2 = new TcpMarkServer(Map("marks" -> (1 to 12).map(markDoc)))
+      val srv2 = new TcpMongoServer(Map("marks" -> (1 to 12).map(markDoc)))
       srv2.start(port)
       try {
         val q2 = startQuery()
@@ -117,7 +117,7 @@ class MarkSocketStreamSpec extends SparkTestBase {
     // server-side predicates ride as reader options (the Kafka
     // startingOffsets pattern); a redundant engine-side filter stays
     // legal and cheap
-    val srv = new TcpMarkServer(Map("marks" -> (1 to 10).map(markDoc)))
+    val srv = new TcpMongoServer(Map("marks" -> (1 to 10).map(markDoc)))
     val port = srv.start()
     val ckpt = Files.createTempDirectory("ms_ckpt2").toString
     try {
@@ -139,8 +139,8 @@ class MarkSocketStreamSpec extends SparkTestBase {
         assert(got == (3 to 10).filter(_ % 2 == 1).map(i => f"m-$i%03d"),
           got.toString)
         assert(srv.requests.asScala.exists(r =>
-          r.contains("\"execution_ids\":[\"exec-1\"]") &&
-            r.contains("\"start_from\":\"m-003\"")),
+          r.contains("\"$in\":[\"exec-1\"]") &&
+            r.contains("\"$gte\":\"m-003\"")),
           "option pushdown did not cross the wire")
       } finally q.stop()
     } finally srv.stop()

@@ -5,28 +5,28 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
-/** The OP_MSG wire face (`wire=mongo`): real find/getMore command
-  * documents over server-side cursors, splitVector range planning,
-  * and Catalyst pushdown landing as a genuine Mongo filter document
-  * — the closest the connector gets to its production source in a
-  * zero-egress sandbox. */
+/** The connector's OP_MSG wire: real find/getMore command documents
+  * over server-side cursors, splitVector range planning, and Catalyst
+  * pushdown landing as a genuine Mongo filter document — the closest
+  * the connector gets to its production source in a zero-egress
+  * sandbox. */
 class MongoWireDataSourceSpec extends SparkTestBase {
 
-  private def markDoc(i: Int): TcpMarkServer.Doc = {
+  private def markDoc(i: Int): TcpMongoServer.Doc = {
     val id = f"m-$i%03d"
     val exec = if (i % 2 == 0) "exec-2" else "exec-1"
-    TcpMarkServer.Doc(id, exec,
+    TcpMongoServer.Doc(id, exec,
       s"""{"_id":"$id","provenance":{"analysis":{"execution_id":"$exec"},""" +
         s""""image":{"imageid":"img-$i","slide":"slide-${i % 3}"}}}""")
   }
   private val marks = (1 to 20).map(markDoc)
   private val analyses = Seq(
-    TcpMarkServer.Doc("a-001", "exec-1",
+    TcpMongoServer.Doc("a-001", "exec-1",
       """{"_id":"a-001","analysis":{"execution_id":"exec-1",""" +
         """"algorithm_params":{"image_width":100,"image_height":200,""" +
         """"case_id":"c7"}},"image":{"imageid":"img-1","subject":"s",""" +
         """"study":"st","slide":"slide-0"}}"""),
-    TcpMarkServer.Doc("a-002", "exec-2",
+    TcpMongoServer.Doc("a-002", "exec-2",
       """{"_id":"a-002","analysis":{"execution_id":"exec-2",""" +
         """"algorithm_params":{"image_width":100,"image_height":200,""" +
         """"case_id":"c8"}},"image":{"imageid":"img-2","subject":"s",""" +
@@ -42,7 +42,7 @@ class MongoWireDataSourceSpec extends SparkTestBase {
   private def read(port: Int): DataFrame =
     spark.read.format("graft.sources.MarkSocketDataSource")
       .option("host", "127.0.0.1").option("port", port.toString)
-      .option("collection", "marks").option("wire", "mongo")
+      .option("collection", "marks")
       .option("partitions", "3").option("batch.size", "4")
       .load()
 
@@ -78,11 +78,10 @@ class MongoWireDataSourceSpec extends SparkTestBase {
 
   test("full scan over server-side cursors: parity + getMore paging") {
     withServer { (srv, port) =>
-      import spark.implicits._
       val viaMongo = read(port)
       assert(viaMongo.schema == MongoMarksPipeline.markSchema)
-      val viaJson = spark.read.schema(MongoMarksPipeline.markSchema)
-        .json(spark.createDataset(marks.map(_.json)))
+      val viaJson = MongoMarksPipeline.readMarks(spark,
+        TcpMongoServer.jsonlFile(marks))
       assert(viaMongo.orderBy("_id").toJSON.collect().toSeq ==
         viaJson.orderBy("_id").toJSON.collect().toSeq)
       // ranges planned via the real splitVector command, and at least
@@ -101,7 +100,7 @@ class MongoWireDataSourceSpec extends SparkTestBase {
       // connector emitting analysis.execution_id, not the marks path
       val df = spark.read.format("graft.sources.MarkSocketDataSource")
         .option("host", "127.0.0.1").option("port", port.toString)
-        .option("collection", "analyses").option("wire", "mongo")
+        .option("collection", "analyses")
         .option("partitions", "1").option("batch.size", "4")
         .load()
         .filter(col("analysis.execution_id") === "exec-1")
@@ -155,7 +154,7 @@ class MongoWireDataSourceSpec extends SparkTestBase {
     try {
       val q = spark.readStream.format("graft.sources.MarkSocketDataSource")
         .option("host", "127.0.0.1").option("port", port.toString)
-        .option("collection", "marks").option("wire", "mongo")
+        .option("collection", "marks")
         .option("partitions", "2").option("batch.size", "4")
         .load().select("_id")
         .writeStream.format("memory").queryName("mongo_stream")

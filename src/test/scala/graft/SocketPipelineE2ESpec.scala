@@ -1,20 +1,21 @@
 package graft
 
 import graft.pipelines.{MongoMarksPipeline, TtlFileSink}
-import graft.sources.MarkStores
-import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Path}
 import java.util.zip.GZIPInputStream
 import scala.jdk.CollectionConverters._
 
 /** End-to-end composition of the LIVE socket store with the marks
-  * pipeline: the same documents served over the TCP cursor protocol
-  * and read from offline JSONL must produce BYTE-identical TTL batch
-  * files through `MongoMarksPipeline.documents` + `TtlFileSink`. This
-  * closes the last seam between the proven connector
-  * (`SocketMarkStoreSpec`) and the proven pipeline goldens
-  * (`MongoMarksPipelineSpec`): a production wire store really can be
-  * swapped in by format name with zero pipeline changes (reference
-  * flow mongo-etl/mongodb_to_rdf.py:466-655).
+  * pipeline: the same documents served over the OP_MSG wire (through
+  * the DSv2 connector) and read from offline JSONL must produce
+  * BYTE-identical TTL batch files through `MongoMarksPipeline.documents`
+  * + `TtlFileSink`. This closes the seam between the proven connector
+  * (`MarkSocketDataSourceSpec`) and the proven pipeline goldens
+  * (`MongoMarksPipelineSpec`): the live store swaps in for the offline
+  * reader with zero pipeline changes (reference flow
+  * mongo-etl/mongodb_to_rdf.py:466-655).
   */
 class SocketPipelineE2ESpec extends SparkTestBase {
   import spark.implicits._
@@ -51,12 +52,26 @@ class SocketPipelineE2ESpec extends SparkTestBase {
   private def serverDocs(lines: Seq[String], execOf: String => String) =
     lines.map { l =>
       val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(l)
-      TcpMarkServer.Doc(node.get("_id").asText(),
+      TcpMongoServer.Doc(node.get("_id").asText(),
         execOf(l), l)
     }
 
   private def execOfMark(l: String): String =
     if (l.contains("\"execution_id\":\"exec-b\"")) "exec-b" else "exec-a"
+
+  private def serve(): TcpMongoServer = new TcpMongoServer(Map(
+    "marks" -> serverDocs(markLines, execOfMark),
+    "analyses" -> serverDocs(analysisLines,
+      l => if (l.contains("exec-b")) "exec-b" else "exec-a")))
+
+  private def live(port: Int, collection: String, partitions: Int,
+    batchSize: Int): DataFrame =
+    spark.read.format("graft.sources.MarkSocketDataSource")
+      .option("host", "127.0.0.1").option("port", port.toString)
+      .option("collection", collection)
+      .option("partitions", partitions.toString)
+      .option("batch.size", batchSize.toString)
+      .load()
 
   private def gunzip(p: Path): String =
     new String(new GZIPInputStream(
@@ -76,27 +91,16 @@ class SocketPipelineE2ESpec extends SparkTestBase {
     Files.write(marksPath, markLines.mkString("\n").getBytes("UTF-8"))
     Files.write(analysesPath, analysisLines.mkString("\n").getBytes("UTF-8"))
 
-    // live side: same lines behind the TCP cursor protocol
-    val srv = new TcpMarkServer(Map(
-      "marks" -> serverDocs(markLines, execOfMark),
-      "analyses" -> serverDocs(analysisLines,
-        l => if (l.contains("exec-b")) "exec-b" else "exec-a")))
+    // live side: same lines behind the OP_MSG wire
+    val srv = serve()
     val port = srv.start()
     try {
-      val jsonl = MarkStores("jsonl", Map(
-        "marks.path" -> marksPath.toString,
-        "analyses.path" -> analysesPath.toString))
-      val socket = MarkStores("socket", Map(
-        "host" -> "127.0.0.1", "port" -> port.toString,
-        "partitions" -> "3", "batch.size" -> "4"))
-
       val slideHashes = Seq(("slide-0", "deadbeef" * 8))
         .toDF("slide", "real_hash")
 
       // batchSize 4 forces multiple batch files per (exec, image)
-      def run(store: graft.sources.MarkStore, out: Path): Unit = {
-        val docs = MongoMarksPipeline.documents(
-          store.marks(spark), store.analyses(spark),
+      def run(marks: DataFrame, analyses: DataFrame, out: Path): Unit = {
+        val docs = MongoMarksPipeline.documents(marks, analyses,
           slideHashes, batchSize = 4)
         TtlFileSink.write(docs, out.toString)
         graft.operators.Broadcasting.releaseAll()
@@ -104,8 +108,11 @@ class SocketPipelineE2ESpec extends SparkTestBase {
 
       val outSocket = Files.createTempDirectory("e2e_out_socket")
       val outJsonl = Files.createTempDirectory("e2e_out_jsonl")
-      run(socket, outSocket)
-      run(jsonl, outJsonl)
+      run(live(port, "marks", 3, 4), live(port, "analyses", 3, 4),
+        outSocket)
+      run(MongoMarksPipeline.readMarks(spark, marksPath.toString),
+        MongoMarksPipeline.readAnalyses(spark, analysesPath.toString),
+        outJsonl)
 
       val a = treeFiles(outSocket)
       val b = treeFiles(outJsonl)
@@ -135,19 +142,14 @@ class SocketPipelineE2ESpec extends SparkTestBase {
   }
 
   test("pushdown composes: start_from + execution_ids reach the pipeline") {
-    val srv = new TcpMarkServer(Map(
-      "marks" -> serverDocs(markLines, execOfMark),
-      "analyses" -> serverDocs(analysisLines,
-        l => if (l.contains("exec-b")) "exec-b" else "exec-a")))
+    val srv = serve()
     val port = srv.start()
     try {
-      val socket = MarkStores("socket", Map(
-        "host" -> "127.0.0.1", "port" -> port.toString,
-        "partitions" -> "2", "batch.size" -> "3"))
-      val docs = MongoMarksPipeline.documents(
-        socket.marks(spark, startFromId = Some("m-003"),
-          executionIds = Some(Seq("exec-a"))),
-        socket.analyses(spark), Seq.empty[(String, String)]
+      val marks = live(port, "marks", 2, 3)
+        .filter(col("_id") >= "m-003")
+        .filter(col("provenance.analysis.execution_id").isin("exec-a"))
+      val docs = MongoMarksPipeline.documents(marks,
+        live(port, "analyses", 2, 3), Seq.empty[(String, String)]
           .toDF("slide", "real_hash"), batchSize = 100)
       val rows = docs.collect()
       graft.operators.Broadcasting.releaseAll()
@@ -159,8 +161,8 @@ class SocketPipelineE2ESpec extends SparkTestBase {
       assert(!ttl.contains("m-001") && !ttl.contains("m-002"))
       // the filter crossed the wire, not ran client-side
       assert(srv.requests.asScala
-        .exists(r => r.contains("\"start_from\":\"m-003\"") &&
-          r.contains("\"execution_ids\":[\"exec-a\"]")))
+        .exists(r => r.contains("\"$gte\":\"m-003\"") &&
+          r.contains("\"$in\":[\"exec-a\"]")))
     } finally srv.stop()
   }
 }

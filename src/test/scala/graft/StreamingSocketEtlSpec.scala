@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import java.util.zip.GZIPInputStream
 import scala.jdk.CollectionConverters._
 
-/** The whole reference flow, live, end to end: a TCP mark store
+/** The whole reference flow, live, end to end: an OP_MSG mark store
   * streamed through the DSv2 connector (cursor micro-batches, _id
   * high-water offsets) into the marks→TTL pipeline with batch-id-keyed
   * output files and ledger rows — the cursor loop (T1) + checkpoint
@@ -14,9 +14,9 @@ import scala.jdk.CollectionConverters._
 class StreamingSocketEtlSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def markDoc(i: Int): TcpMarkServer.Doc = {
+  private def markDoc(i: Int): TcpMongoServer.Doc = {
     val id = f"m-$i%03d"
-    TcpMarkServer.Doc(id, "exec-a",
+    TcpMongoServer.Doc(id, "exec-a",
       s"""{"_id":"$id","provenance":{"analysis":{"execution_id":"exec-a"},""" +
         s""""image":{"imageid":"img-1","slide":"slide-0"}},""" +
         s""""geometries":{"features":[{"geometry":{"type":"Polygon",""" +
@@ -35,7 +35,7 @@ class StreamingSocketEtlSpec extends SparkTestBase {
       Files.newInputStream(p)).readAllBytes(), "UTF-8")
 
   test("live socket stream -> batched TTL files with ledger rows") {
-    val srv = new TcpMarkServer(Map("marks" -> (1 to 3).map(markDoc)))
+    val srv = new TcpMongoServer(Map("marks" -> (1 to 3).map(markDoc)))
     val port = srv.start()
     val out = Files.createTempDirectory("setl_out")
     val ledger = Files.createTempDirectory("setl_ledger").toString

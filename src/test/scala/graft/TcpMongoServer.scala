@@ -3,7 +3,7 @@ package graft
 import java.io.{BufferedInputStream, BufferedOutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
@@ -15,29 +15,89 @@ import scala.jdk.CollectionConverters._
 /** In-test OP_MSG server: find / getMore with real SERVER-SIDE
   * cursors, splitVector, filter documents with `_id` $gte/$gt/$lt and
   * the dotted execution-id $in — the observable behavior of a MongoDB
-  * node for the commands the connector issues. Records decoded
-  * command bodies (as JSON text) for pushdown assertions. */
+  * node for the commands the connector issues, standing in for a live
+  * MongoDB in the zero-egress sandbox. Records decoded command bodies
+  * (as JSON text) for pushdown assertions, plus connection counters
+  * for the per-partition and leak assertions. */
+object TcpMongoServer {
+  /** A served document: sort/filter keys + its raw JSON text. */
+  final case class Doc(id: String, execId: String, json: String)
+
+  /** The same documents as a JSONL file, for parity against the
+    * offline readers (`MongoMarksPipeline.readMarks`/`readAnalyses`). */
+  def jsonlFile(docs: Seq[Doc]): String = {
+    val f = java.nio.file.Files.createTempFile("served", ".jsonl")
+    java.nio.file.Files.writeString(f, docs.map(_.json).mkString("\n"))
+    f.toString
+  }
+}
+
 final class TcpMongoServer(
-  collections: Map[String, Seq[TcpMarkServer.Doc]]) {
+  collections: Map[String, Seq[TcpMongoServer.Doc]]) {
   private val om = new ObjectMapper()
   private val nf = JsonNodeFactory.instance
-  private val sorted = collections.view.mapValues(_.sortBy(_.id)).toMap
+  @volatile private var sorted =
+    collections.view.mapValues(_.sortBy(_.id)).toMap
   val requests = new ConcurrentLinkedQueue[String]()
+  val connections = new AtomicInteger(0)
+  /** Currently-open client connections — lets specs assert that an
+    * early-terminated scan (limit, stopped stream) closed its socket
+    * instead of leaking it. */
+  val active = new AtomicInteger(0)
+  /** When set, every document-page reply (ascending find, getMore)
+    * writes only the first half of its frame and severs the
+    * connection — a server crash mid-page, for exactly-once restart
+    * specs. The driver-side probes (splitVector, the descending
+    * max-id find) still answer. */
+  @volatile var severMidPage = false
   private val nextCursor = new AtomicLong(1000L)
   @volatile private var server: ServerSocket = _
   @volatile private var running = false
 
-  def start(): Int = {
-    server = new ServerSocket(0, 16, InetAddress.getByName("127.0.0.1"))
+  /** Append documents at runtime (streaming-source specs: new data
+    * arriving between micro-batches). Open cursors keep their
+    * snapshot, like a real server's. */
+  def add(collection: String, docs: TcpMongoServer.Doc*): Unit =
+    synchronized {
+      sorted = sorted.updated(collection,
+        (sorted.getOrElse(collection, Nil) ++ docs).sortBy(_.id))
+    }
+
+  /** Binds 127.0.0.1:`port` (0 = ephemeral; a fixed port lets a spec
+    * restart a "crashed" server at the address a stream has pinned). */
+  def start(port: Int = 0): Int = {
+    server = new ServerSocket()
+    server.setReuseAddress(true) // rebinding a just-crashed address
+    // a fixed-port rebind can race the previous server's close (the
+    // old socket lingers briefly even with SO_REUSEADDR when its
+    // accept loop is mid-teardown) — retry briefly instead of
+    // failing the restart spec on scheduler timing
+    var attempts = 0
+    var bound = false
+    while (!bound) {
+      try {
+        server.bind(new java.net.InetSocketAddress(
+          InetAddress.getByName("127.0.0.1"), port), 16)
+        bound = true
+      } catch {
+        case _: java.net.BindException if port != 0 && attempts < 50 =>
+          attempts += 1
+          Thread.sleep(100)
+          server.close()
+          server = new ServerSocket()
+          server.setReuseAddress(true)
+      }
+    }
     running = true
     val t = new Thread(() => {
       while (running) {
         try {
           val sock = server.accept()
+          connections.incrementAndGet()
           val h = new Thread(() => handle(sock), "tcp-mongo-conn")
           h.setDaemon(true)
           h.start()
-        } catch { case _: Throwable => () }
+        } catch { case _: Throwable => () } // closed during accept
       }
     }, "tcp-mongo-accept")
     t.setDaemon(true)
@@ -47,7 +107,7 @@ final class TcpMongoServer(
 
   def stop(): Unit = { running = false; if (server != null) server.close() }
 
-  private def matches(collection: String, d: TcpMarkServer.Doc,
+  private def matches(collection: String, d: TcpMongoServer.Doc,
     filter: JsonNode): Boolean = {
     if (filter == null || !filter.isObject) return true
     // mongod-faithful: only the COLLECTION's actual dotted exec-id
@@ -79,6 +139,7 @@ final class TcpMongoServer(
   }
 
   private def handle(sock: Socket): Unit = {
+    active.incrementAndGet()
     // cursors are per-connection session state, like a real mongod
     val cursors = scala.collection.mutable.Map[Long, Vector[JsonNode]]()
     try {
@@ -89,6 +150,7 @@ final class TcpMongoServer(
         val (reqId, _, body) = msg
         requests.add(body.toString)
         val reply = nf.objectNode()
+        var docPage = false // a reply carrying documents of a range scan
         def cursorReply(id: Long, batch: Vector[JsonNode],
           key: String): Unit = {
           val cur = nf.objectNode()
@@ -104,6 +166,7 @@ final class TcpMongoServer(
             .filter(matches(coll, _, body.get("filter")))
           val desc = Option(body.get("sort"))
             .exists(s => Option(s.get("_id")).exists(_.asInt == -1))
+          docPage = !desc
           val ordered0 = if (desc) docs.reverse else docs
           val limited = Option(body.get("limit"))
             .map(l => ordered0.take(l.asInt)).getOrElse(ordered0)
@@ -152,6 +215,7 @@ final class TcpMongoServer(
           }
           cursorReply(id, first, "firstBatch")
         } else if (body.has("getMore")) {
+          docPage = true
           val cid = body.get("getMore").asLong
           val batchSize = Option(body.get("batchSize"))
             .map(_.asInt).getOrElse(101)
@@ -185,17 +249,23 @@ final class TcpMongoServer(
             s"no such command: ${body.fieldNames().asScala.toSeq}")
         }
         if (!reply.has("ok")) reply.put("ok", 1.0)
-        out.write(MongoWire.encodeMsg(reqId + 10000, reqId, reply))
+        val frame = MongoWire.encodeMsg(reqId + 10000, reqId, reply)
+        if (severMidPage && docPage) {
+          out.write(frame, 0, frame.length / 2)
+          out.flush()
+          throw new java.io.IOException("simulated mid-page crash")
+        }
+        out.write(frame)
         out.flush()
         msg = MongoWire.readMsg(in)
       }
     } catch {
-      case _: java.io.IOException => () // socket teardown
+      case _: java.io.IOException => () // teardown / simulated crash
       case t: Throwable =>
         // a protocol break must be VISIBLE, not a silent close a
         // spec could mistake for clean EOF
         System.err.println(s"TcpMongoServer protocol error: $t")
     }
-    finally sock.close()
+    finally { sock.close(); active.decrementAndGet() }
   }
 }

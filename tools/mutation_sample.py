@@ -156,7 +156,7 @@ MW = "src/main/scala/graft/sources/MongoWire.scala"
 MSDS = "src/main/scala/graft/sources/MarkSocketDataSource.scala"
 WIRE_SUITES = ("graft.BsonMarkDataSourceSpec graft.MongoWireDataSourceSpec "
                "graft.MarkSocketDataSourceSpec graft.MarkSocketStreamSpec "
-               "graft.SocketMarkStoreSpec graft.MarkStoreSpec")
+               "graft.SocketMarkStoreSpec")
 
 MUTANTS += [
     ("W1-doc-len", BSON, "encode: document length field off by one (drops terminator from count)",
