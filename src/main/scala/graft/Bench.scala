@@ -16,58 +16,20 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // session knobs + measured rationale live in GraftSession.harness
-    // (one definition for Bench/Verify/probes; r9 A/B history there)
-    val spark = GraftSession.harness(cpus)
+    // session settings + measured rationale: GraftSession.settings
+    // (one table for Bench/Verify/probes; r9 A/B history there)
+    val spark = GraftSession.harness(GraftSession.Cpus)
     // Per-query shuffle-write tally (round-11 ask: make the FS-regime
-    // sensitivity story empirical, not narrative). Sort-based shuffle
-    // writes 1 data + 1 index file per map task with output, so
-    // files = 2 × writing tasks; bytes come straight from task
-    // metrics. Attribution = counter delta around the last timed
-    // pass, after draining the async listener bus.
-    val shuffleTasks = new java.util.concurrent.atomic.AtomicLong()
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    // GroupedTopKExec SQLMetrics, tallied off the driver-side
-    // accumulable updates (round-12 ask: record whether production
-    // queries ever trip the operator's bounded-memory fallbacks —
-    // expected 0 at sf0.1, which is headroom, not absence, because
-    // gtkTasks witnesses every task the operator ran).
-    val gtkTasks = new java.util.concurrent.atomic.AtomicLong()
-    val gtkCapFlushes = new java.util.concurrent.atomic.AtomicLong()
-    val gtkSortFallbacks = new java.util.concurrent.atomic.AtomicLong()
-    def accLong(u: Any): Long = u match {
-      case l: java.lang.Long => l.longValue
-      case i: java.lang.Integer => i.longValue
-      case other => other.toString.toLong
-    }
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null && m.shuffleWriteMetrics.bytesWritten > 0) {
-            shuffleTasks.incrementAndGet()
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-          if (t.taskInfo != null) t.taskInfo.accumulables.foreach { a =>
-            a.name.zip(a.update).foreach {
-              case (graft.plans.GroupedTopK.TasksMetricName, u) =>
-                gtkTasks.addAndGet(accLong(u))
-              case (graft.plans.GroupedTopK.CapFlushesMetricName, u) =>
-                gtkCapFlushes.addAndGet(accLong(u))
-              case (graft.plans.GroupedTopK.SortFallbacksMetricName, u) =>
-                gtkSortFallbacks.addAndGet(accLong(u))
-              case _ => ()
-            }
-          }
-        }
-      })
-    def shuffleSnap(): (Long, Long, Long, Long, Long) = {
-      org.apache.spark.GraftListenerShim.flush(spark.sparkContext)
-      (shuffleTasks.get(), shuffleBytes.get(),
-        gtkTasks.get(), gtkCapFlushes.get(), gtkSortFallbacks.get())
-    }
+    // sensitivity story empirical, not narrative) and GroupedTopKExec
+    // SQLMetrics (round-12 ask: record whether production queries ever
+    // trip the operator's bounded-memory fallbacks — expected 0 at
+    // sf0.1, which is headroom, not absence, because the tasks counter
+    // witnesses every task the operator ran). Attribution = tally
+    // delta around the last clean timed pass.
+    import graft.plans.GroupedTopK.{CapFlushesMetricName,
+      SortFallbacksMetricName, TasksMetricName}
+    val tally = new TaskTally(spark.sparkContext,
+      Set(TasksMetricName, CapFlushesMetricName, SortFallbacksMetricName))
     val known = SparkEntry.queries.keySet
     val names = if (args.nonEmpty) {
       args.filterNot(known).foreach(n =>
@@ -88,12 +50,7 @@ object Bench {
     // min of two timed passes: local[N] run-to-run variance is ±20%,
     // and min-of-k reports the plan's cost rather than scheduler
     // noise. A failing/timed-out query reports -1, never a partial time.
-    val shuffleStats =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-    // per-query GroupedTopK counters: (tasks, capFlushes, sortFallbacks)
-    // for queries whose last timed pass executed the operator
-    val gtkStats =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long, Long)]
+    val windows = scala.collection.mutable.LinkedHashMap.empty[String, TaskTally.Snapshot]
     // a pass that times out (or fails) can leave a straggler task
     // alive — Budget cancels the job group, but a task stuck in
     // non-interrupt-polling code finishes LATER and posts its
@@ -115,17 +72,12 @@ object Bench {
           name -> -1.0
         case Budget.Done(_, _) =>
           val times = (1 to 2).flatMap { _ =>
-            val (t0, b0, g0, c0, s0) = shuffleSnap()
+            val before = tally.read()
             onePass(name, Budget.DefaultSec) match {
               case Budget.Done(_, sec) =>
-                val (t1, b1, g1, c1, s1) = shuffleSnap()
                 // last successful pass wins: shuffle volume is
                 // plan-determined, identical across passes
-                if (!tainted) {
-                  shuffleStats(name) = (2 * (t1 - t0), b1 - b0)
-                  if (g1 > g0)
-                    gtkStats(name) = (g1 - g0, c1 - c0, s1 - s0)
-                }
+                if (!tainted) windows(name) = tally.read() - before
                 tainted = false
                 Some(sec)
               case Budget.TimedOut =>
@@ -144,18 +96,22 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val sh = results.flatMap { case (k, _) =>
-      shuffleStats.get(k).map { case (files, bytes) =>
+      windows.get(k).map { w =>
         // locale-independent 2dp: the f interpolator uses the JVM
         // default locale, and a comma-decimal locale would emit
         // "mb":1,23 — breaking the driver's JSON parse of this line
-        val mb2 = math.round(bytes / 1048576.0 * 100) / 100.0
-        s""""$k":{"files":$files,"mb":$mb2}"""
+        val mb2 = math.round(w.shuffleBytes / 1048576.0 * 100) / 100.0
+        s""""$k":{"files":${2 * w.shuffleTasks},"mb":$mb2}"""
       }
     }.mkString("{", ",", "}")
+    // only queries whose last clean timed pass ran the operator
     val gtk = results.flatMap { case (k, _) =>
-      gtkStats.get(k).map { case (tasks, caps, sorts) =>
-        s""""$k":{"tasks":$tasks,"capFlushes":$caps,"sortFallbacks":$sorts}"""
-      }
+      windows.get(k).map(_.accumulables)
+        .filter(_(TasksMetricName) > 0).map { acc =>
+          s""""$k":{"tasks":${acc(TasksMetricName)},""" +
+            s""""capFlushes":${acc(CapFlushesMetricName)},""" +
+            s""""sortFallbacks":${acc(SortFallbacksMetricName)}}"""
+        }
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_shuffle":$sh,"grouped_topk":$gtk,"sf":"$sfDir"}""")

@@ -32,9 +32,13 @@ object Budget {
   final case class Failed(error: String) extends Result[Nothing]
   case object TimedOut extends Result[Nothing]
 
-  /** Default per-query budget, overridable for the whole harness run. */
-  val DefaultSec: Int =
-    sys.env.get("SPARK_GRAFT_QUERY_BUDGET_SEC").map(_.toInt).getOrElse(60)
+  /** Default per-query budget, overridable for the whole harness run;
+    * under 1 s every query would time out before it could finish. */
+  val DefaultSec: Int = budgetSec(sys.env.get("SPARK_GRAFT_QUERY_BUDGET_SEC"))
+
+  private[graft] def budgetSec(raw: Option[String]): Int = raw.fold(60)(s =>
+    s.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_QUERY_BUDGET_SEC must be an integer >= 1, got '$s'")))
 
   /** Run `action` on a budgeted daemon thread; cancel + abandon on
     * breach. The session stays usable afterwards either way. */

@@ -39,7 +39,7 @@ object EtlBench {
     val nAnalyses = args.lift(1).map(_.toInt).getOrElse(20)
     val outDir = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("etl_bench").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val cpus = GraftSession.Cpus.toInt
     val spark = GraftSession.create(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // volume-sized AQE fan-out (GraftSession doc): at 10M marks the
@@ -70,20 +70,10 @@ object EtlBench {
         // whether ANY stage develops a straggler tail (the W1
         // batch_num-in-key construction should keep the hot group's
         // work split into BatchSize-bounded files)
-        val taskMs = new java.util.concurrent.ConcurrentHashMap[
-          Int, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd)
-              : Unit =
-              taskMs.computeIfAbsent(te.stageId,
-                _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
-                .add(te.taskInfo.duration)
-          })
+        val tally = new TaskTally(spark.sparkContext)
         // SPARK_GRAFT_SKEW_SAFE=1 engages the distributed-rank batch
         // numbering (same output, hot-group sort split into buckets)
-        val skewSafe = sys.env.contains("SPARK_GRAFT_SKEW_SAFE")
+        val skewSafe = sys.env.get("SPARK_GRAFT_SKEW_SAFE").contains("1")
         val t0 = System.nanoTime()
         val docs = MongoMarksPipeline.documents(marks, analyses, hashes,
           batchSize, skewSafe)
@@ -93,20 +83,15 @@ object EtlBench {
         // task-spread table of the heaviest stage (by total task
         // time — the window/write stage at scale), computed OUTSIDE
         // the timed window after the listener bus drains
-        org.apache.spark.GraftListenerShim.flush(spark.sparkContext)
-        val spread = {
-          import scala.jdk.CollectionConverters._
-          taskMs.asScala.toSeq
-            .map { case (sid, q) => (sid, q.asScala.toVector.sorted) }
-            .filter(_._2.nonEmpty)
-            .sortBy { case (_, ds) => -ds.sum }
-            .take(2)
-            .map { case (sid, ds) =>
-              s""""stage_$sid":{"n_tasks":${ds.length},""" +
-                s""""p50_ms":${ds(ds.length / 2)},""" +
-                s""""max_ms":${ds.last}}"""
-            }.mkString(",")
-        }
+        val spread = tally.read().stageTaskMs.toSeq
+          .map { case (sid, ds) => (sid, ds.sorted) }
+          .sortBy { case (_, ds) => -ds.sum }
+          .take(2)
+          .map { case (sid, ds) =>
+            s""""stage_$sid":{"n_tasks":${ds.length},""" +
+              s""""p50_ms":${ds(ds.length / 2)},""" +
+              s""""max_ms":${ds.last}}"""
+          }.mkString(",")
         // measured hottest-analysis share (not the closed form) —
         // also outside the timed window
         val hotShare = skew.map { _ =>

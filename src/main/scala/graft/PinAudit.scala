@@ -8,8 +8,7 @@ package graft
   * Probe/Explain tier). */
 object PinAudit {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.harness(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.harness(GraftSession.Cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")

@@ -7,13 +7,13 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.harness(cpus)
+    val spark = GraftSession.harness(GraftSession.Cpus)
     // in-process stack sampler (attach/SIGQUIT are blocked in the
     // sandbox): every 200ms, tally the top interesting frame of each
     // runnable executor/worker thread
     val samples = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    if (sys.env.contains("PROBE_SAMPLER")) {
+    val sampler = sys.env.get("PROBE_SAMPLER").contains("1")
+    if (sampler) {
       val t = new Thread(() => {
         while (true) {
           Thread.sleep(200)
@@ -43,42 +43,30 @@ object Probe {
       t.setDaemon(true)
       t.start()
     }
-    @volatile var jobs = List.empty[(Int, Long)]
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        private val starts =
-          new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-        override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(j.jobId, System.nanoTime())
-        override def onJobEnd(
-          j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val s = starts.remove(j.jobId)
-          jobs ::= (j.jobId, (System.nanoTime() - s) / 1000000L)
-        }
-      })
+    val tally = new TaskTally(spark.sparkContext)
     args.foreach { name =>
-      jobs = Nil
+      val before = tally.read()
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
       val t1 = System.nanoTime()
       df.count()
       val t2 = System.nanoTime()
-      val jobs1 = jobs.sortBy(_._1)
-      jobs = Nil
+      val mid = tally.read()
       graft.operators.Broadcasting.releaseAll()
       val df2 = SparkEntry.queries(name)(spark, sfDir)
       val t3 = System.nanoTime()
       df2.count()
       val t4 = System.nanoTime()
-      val jobs2 = jobs.sortBy(_._1)
+      val after = tally.read()
       graft.operators.Broadcasting.releaseAll()
+      val jobs1 = (mid - before).jobMs.sortBy(_._1)
+      val jobs2 = (after - mid).jobMs.sortBy(_._1)
       def s(a: Long, b: Long) = f"${(b - a) / 1e9}%.2f"
       println(s"== $name construct=${s(t0, t1)} exec1=${s(t1, t2)} " +
         s"construct2=${s(t2, t3)} exec2=${s(t3, t4)}")
       println(s"   jobs1: ${jobs1.map { case (i, ms) => s"$i:${ms}ms" }.mkString(" ")}")
       println(s"   jobs2: ${jobs2.map { case (i, ms) => s"$i:${ms}ms" }.mkString(" ")}")
-      if (sys.env.contains("PROBE_SAMPLER")) {
+      if (sampler) {
         import scala.jdk.CollectionConverters._
         val top = samples.asScala.toSeq.sortBy(-_._2).take(20)
         top.foreach { case (k, n) => println(f"   $n%6d  $k") }

@@ -138,10 +138,9 @@ object ScaleLadder {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE10_DIR",
       "target/scale10")
-    val spark = GraftSession.harness(cpus)
+    val spark = GraftSession.harness(GraftSession.Cpus)
     val names = if (args.nonEmpty) args.toSeq else DefaultQueries
     if (names.exists(!GraphQueries.contains(_)) &&
       !new java.io.File(s"$out/documents.parquet").exists()) {

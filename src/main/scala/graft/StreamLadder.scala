@@ -149,7 +149,6 @@ object StreamLadder {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nBatches =
       if (args.nonEmpty) args(0).toInt else 64
     // right-size the compact bucket count to the probe corpus: at
@@ -182,7 +181,7 @@ object StreamLadder {
     // families so the cross-mode pair-equality witness stays
     // nonempty; all other texts are hash-distinct (no LSH structure).
     val synthDocs = if (args.length > 4) args(4).toLong else 0L
-    val spark = GraftSession.harness(cpus)
+    val spark = GraftSession.harness(GraftSession.Cpus)
     val out = "target/stream_ladder"
     val docs =
       if (synthDocs <= 0)

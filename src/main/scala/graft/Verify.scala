@@ -11,8 +11,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.harness(cpus)
+    val spark = GraftSession.harness(GraftSession.Cpus)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (driver never sets it): run only the
     // named queries, e.g. GRAFT_VERIFY_ONLY=n1_pagerank,j13_fuzzy_join

@@ -28,8 +28,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Storage contract: checkpointed RDDs are NOT CacheManager entries,
   * so `Broadcasting.releaseAll()` cannot free them; the
   * ContextCleaner reclaims each once its frame goes out of scope
-  * (GraftSession pins `spark.cleaner.periodicGC.interval` at 45 s
-  * for exactly this kind of local-mode debris).
+  * (`GraftSession.settings` pins a 45 s periodic GC for exactly
+  * this kind of local-mode debris).
   *
   * Eagerness contract: a cut RUNS Spark jobs at the call site. Query
   * builders are normally lazy (`Broadcasting.duringConstruction`),

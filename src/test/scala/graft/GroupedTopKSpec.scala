@@ -270,31 +270,22 @@ class GroupedTopKSpec extends SparkTestBase {
   }
 
   test("SQLMetric names reach driver-side task accumulables (bench contract)") {
-    // Bench attributes GroupedTopK fallback counters to queries by
-    // matching these accumulable NAMES in onTaskEnd — if the names
-    // drift or stop flowing, the bench's grouped_topk section goes
-    // silently empty. gtkTasks is the always-nonzero witness; the
+    // Bench attributes GroupedTopK fallback counters to queries through
+    // a TaskTally over these accumulable NAMES — if the names drift or
+    // stop flowing, the bench's grouped_topk section goes silently
+    // empty. The tasks counter is the always-nonzero witness; the
     // fallback counters stay 0 on a healthy run (headroom).
-    val seen = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskInfo != null) t.taskInfo.accumulables.foreach { a =>
-          a.name.zip(a.update).foreach { case (n, u) =>
-            if (n.startsWith("graft topk") || n.startsWith("partial heap") ||
-              n.startsWith("final tasks"))
-              seen.merge(n, u.toString.toLong, java.lang.Long.sum _)
-          }
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val tally = new TaskTally(spark.sparkContext,
+      Set(GroupedTopK.TasksMetricName, GroupedTopK.CapFlushesMetricName,
+        GroupedTopK.SortFallbacksMetricName))
     try {
       val df = Seq((1L, 10L), (1L, 20L), (2L, 5L), (2L, 7L), (1L, 30L))
         .toDF("g", "v")
       GroupedTopK.topK(df, Seq("g"), "v", 1).collect()
-      org.apache.spark.GraftListenerShim.flush(spark.sparkContext)
-      assert(seen.getOrDefault("graft topk tasks", 0L) > 0, seen.toString)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val seen = tally.read()
+      assert(seen.accumulables(GroupedTopK.TasksMetricName) > 0,
+        seen.accumulables.toString)
+    } finally spark.sparkContext.removeSparkListener(tally)
   }
 
   test("rankedTopK ascending ranks surviving nulls LAST — the " +

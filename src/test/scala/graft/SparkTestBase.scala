@@ -23,15 +23,8 @@ trait SparkTestBase extends AnyFunSuite {
 object SparkTestBase {
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
+    .config(GraftSession.settings(4).toMap)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    // mirror GraftSession.harness's join strategy (r22): the plan
-    // pins must exercise the same planner the bench runs under
-    .config("spark.sql.join.preferSortMergeJoin", "false")
-    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      "128m")
     .getOrCreate()
 }
