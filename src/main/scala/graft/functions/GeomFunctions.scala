@@ -21,12 +21,17 @@ import org.apache.spark.sql.functions._
   */
 object GeomFunctions {
 
-  /** Outer ring of a geometry (rings × points × 2). `try_element_at`,
-    * not `element_at`: a zero-ring geometry (dirty input) must yield
-    * NULL, not fail the whole query with INVALID_ARRAY_INDEX under
-    * Spark 4's default ANSI mode — every st_* consumer then
-    * null-propagates via [[idx]]. */
-  def outerRing(geom: Column): Column = try_element_at(geom, lit(1))
+  /** Outer ring of a geometry (rings × points × 2). `get`, the
+    * NULL-on-out-of-bounds index: a zero-ring geometry (dirty input)
+    * yields NULL, not an INVALID_ARRAY_INDEX failure of the whole
+    * query under Spark 4's default ANSI mode — every st_* consumer
+    * then null-propagates via [[idx]]. Not `try_element_at`: its
+    * generated code does not compile (janino: "isNull_N is not an
+    * rvalue") once the ring is a shared subexpression, as in
+    * g2_geom_stats, and the projection falls back to the interpreter.
+    * Not a guarded CASE either: inside the st_* folds, whose lambda
+    * bodies run interpreted, it made an area fold ~4× slower. */
+  def outerRing(geom: Column): Column = get(geom, lit(0))
 
   /** F2: parse `[x1:y1:x2:y2:…]` into a single closed ring.
     * Closes the ring iff first point != last point, exactly like
@@ -93,26 +98,32 @@ object GeomFunctions {
     * `wkt_coords[0] != wkt_coords[-1]`, i.e. post-format) — a
     * raw-value comparison would disagree on rings whose endpoints
     * differ in raw value but format equal at 2 decimals. This is THE
-    * one implementation; MongoMarksPipeline.markSide shares it via
-    * [[denormalizedRingWkt]]. */
+    * one implementation, in two halves that MongoMarksPipeline.markSide
+    * also uses: [[denormalizedPairs]] then [[closedRingWkt]]. */
   def wktDenormalized(geom: Column, width: Column, height: Column): Column =
-    denormalizedRingWkt(outerRing(geom), width, height)
+    closedRingWkt(denormalizedPairs(outerRing(geom), width, height))
 
-  /** [[wktDenormalized]] over an already-extracted ring (points × 2).
-    * For callers that have ANSI-guarded the ring access themselves
-    * (markSide's filter must avoid try_element_at — see its codegen
-    * note). */
-  def denormalizedRingWkt(ring: Column, width: Column,
-    height: Column): Column = {
-    val pairs = transform(ring, p =>
+  /** First half of F3 over an extracted ring (points × 2): each point
+    * denormalized and formatted "%.2f %.2f". NULL on a degenerate
+    * point (reference: except → None), never an ANSI crash from the
+    * coordinate accessors. */
+  def denormalizedPairs(ring: Column, width: Column,
+    height: Column): Column =
+    when(ringPointsWellFormed(ring), transform(ring, p =>
       format_string("%.2f %.2f",
-        element_at(p, 1) * width, element_at(p, 2) * height))
+        element_at(p, 1) * width, element_at(p, 2) * height)))
+
+  /** Second half of F3: close the ring on the formatted strings and
+    * build the WKT; NULL pairs give NULL. `pairs` is referenced seven
+    * times here, and subexpression elimination does not reach into
+    * CASE branches — so a caller formatting many rings should bind
+    * [[denormalizedPairs]] to a column of its own first (markSide
+    * does), or every reference formats the ring again. */
+  def closedRingWkt(pairs: Column): Column = {
     val closed = when(size(pairs) === 0, pairs)
       .when(element_at(pairs, 1) === element_at(pairs, -1), pairs)
       .otherwise(concat(pairs, array(element_at(pairs, 1))))
-    // NULL on a degenerate point (reference: except → None), never an
-    // ANSI crash; well-formed rings skip straight to the body
-    when(ringPointsWellFormed(ring),
+    when(pairs.isNotNull,
       concat(lit("POLYGON (("), concat_ws(", ", closed), lit("))")))
   }
 
@@ -123,32 +134,36 @@ object GeomFunctions {
           format_string("%.2f", element_at(p, 2))))),
       lit("))"))
 
+  /** Folds `step(ring, acc, i)` over the edges i = 1..n-1 of `ring`.
+    * The ring rides in the accumulator: a fold's lambda body runs
+    * interpreted, out of reach of subexpression elimination, so a
+    * ring expression referenced from inside it is rebuilt on every
+    * reference of every iteration (2× slower g2_geom_stats, measured
+    * on 200k rows). NULL ring → NULL. */
+  private def edgeFold(ring: Column, zero: Column)(
+    step: (Column, Column, Column) => Column): Column =
+    aggregate(idx(size(ring) - 1), struct(ring.as("r"), zero.as("v")),
+      (acc, i) => struct(acc("r").as("r"), step(acc("r"), acc("v"), i).as("v")),
+      acc => acc("v"))
+
   /** Shoelace area of the outer ring (assumed closed); |Σ cross|/2. */
-  def stArea(geom: Column): Column = {
-    val r = outerRing(geom)
-    when(pointsWellFormed(geom), abs(aggregate(
-      idx(size(r) - 1),
-      lit(0.0),
-      (acc, i) => acc
-        + element_at(element_at(r, i), 1) * element_at(element_at(r, i + 1), 2)
-        - element_at(element_at(r, i + 1), 1) * element_at(element_at(r, i), 2)
-    )) / 2)
-  }
+  def stArea(geom: Column): Column =
+    when(pointsWellFormed(geom), abs(edgeFold(outerRing(geom), lit(0.0)) {
+      (r, acc, i) => acc +
+        element_at(element_at(r, i), 1) * element_at(element_at(r, i + 1), 2) -
+        element_at(element_at(r, i + 1), 1) * element_at(element_at(r, i), 2)
+    }) / 2)
 
   /** Perimeter of the outer ring (assumed closed). */
-  def stPerimeter(geom: Column): Column = {
-    val r = outerRing(geom)
-    when(pointsWellFormed(geom), aggregate(
-      idx(size(r) - 1),
-      lit(0.0),
-      (acc, i) => {
+  def stPerimeter(geom: Column): Column =
+    when(pointsWellFormed(geom), edgeFold(outerRing(geom), lit(0.0)) {
+      (r, acc, i) =>
         val dx = element_at(element_at(r, i + 1), 1) -
           element_at(element_at(r, i), 1)
         val dy = element_at(element_at(r, i + 1), 2) -
           element_at(element_at(r, i), 2)
         acc + sqrt(dx * dx + dy * dy)
-      }))
-  }
+    })
 
   /** Envelope (xmin, ymin, xmax, ymax) over ALL rings. */
   def stEnvelope(geom: Column): Column = {
@@ -181,12 +196,8 @@ object GeomFunctions {
     * A narrow codegen'd HOF fold over the edge list: zero shuffle,
     * pipelines inside the scan like stArea/stPerimeter. */
   def stContains(geom: Column, px: Column, py: Column): Column = {
-    val r = close_ring(outerRing(geom))
-    val wf = pointsWellFormed(geom)
-    val crossings = aggregate(
-      idx(size(r) - 1),
-      lit(0),
-      (acc, i) => {
+    val crossings = edgeFold(close_ring(outerRing(geom)), lit(0)) {
+      (r, acc, i) =>
         val x1 = element_at(element_at(r, i), 1)
         val y1 = element_at(element_at(r, i), 2)
         val x2 = element_at(element_at(r, i + 1), 1)
@@ -195,8 +206,8 @@ object GeomFunctions {
         val crossesRight =
           px < x1 + (x2 - x1) * (py - y1) / (y2 - y1)
         acc + when(straddles && crossesRight, 1).otherwise(0)
-      })
-    when(wf, crossings % 2 === 1)
+    }
+    when(pointsWellFormed(geom), crossings % 2 === 1)
   }
 
   /** F18 `.geom_type` accessor (`get_geometry_type`,

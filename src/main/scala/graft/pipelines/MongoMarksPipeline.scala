@@ -13,7 +13,9 @@ import org.apache.spark.sql.types._
   * Engine redesign of the reference's hand-built machinery:
   *  - worker pool + per-analysis cursor loop (X3/X6) → one declarative
   *    plan: marks ⋈ analyses equi-join on (execution_id, imageid) (J3);
-  *    Catalyst broadcasts the analysis side (4M analyses ≪ 4B marks).
+  *    the analysis side is broadcast when its row count is under
+  *    Broadcasting's cap and shuffle-joined past it, so the marks
+  *    always stream through the join on every scan partition.
   *  - cursor micro-batching + manual flush every 1000 (T1/W1) → window
   *    batch numbering: row_number over (exec, image) ordered by mark
   *    id, batch = (rn-1)/1000+1 — deterministic, resumable.
@@ -22,8 +24,9 @@ import org.apache.spark.sql.types._
   *    a hal:hashMissing flag (mongodb_to_rdf.py:282-301,340-342).
   *  - checkpoint anti-join (J5/T2) belongs to incremental.Ledger.
   *
-  * Scale: the mark→TTL map is narrow; the only wide ops are the
-  * broadcast join (no fact shuffle) and the (exec, image) window.
+  * Scale: the mark→TTL map is narrow; the only wide ops are the join
+  * (no fact shuffle while the analysis side is broadcast) and the
+  * (exec, image) window.
   * (exec, image) groups are ~1k-1M marks — far below partition-skew
   * territory; the final grouping key includes batch_num, so no group
   * ever exceeds BATCH_SIZE rows when assembling documents.
@@ -139,11 +142,17 @@ object MongoMarksPipeline {
       expr("""CASE WHEN size(userUpdate.mark.annotation) > 0
              | THEN userUpdate.mark.annotation[0].annotationID
              | ELSE NULL END""".stripMargin).as("ann_id"))
-      // No broadcast hint: the analysis side is ~4M rows enriched with
-      // header strings at reference scale — a forced hint would be
-      // honored regardless of size and OOM the driver. Unhinted, AQE
-      // broadcasts it while small and shuffle-joins when it is not.
-      .join(analysisSide, Seq("exec_id", "image_id"))
+      // Size-gated by ROW COUNT, never a bare hint: the analysis side
+      // is ~4M rows enriched with header strings at reference scale —
+      // a forced hint would be honored regardless of size and exhaust
+      // the heap that builds the broadcast; past the cap this is a
+      // shuffle join. Unhinted is worse: without CBO, Catalyst sizes
+      // the analysis side as the PRODUCT of its join children, so it
+      // broadcasts the MARKS instead (measured: BroadcastHashJoin
+      // BuildLeft over the marks scan) and one task then runs the WKT,
+      // window and aggregate for every mark of the corpus.
+      .join(graft.operators.Broadcasting.maybeBroadcastByCount(analysisSide),
+        Seq("exec_id", "image_id"))
 
     joined
       .filter(col("feature").isNotNull &&
@@ -158,10 +167,18 @@ object MongoMarksPipeline {
         expr("forall(feature.geometry.coordinates[0], p -> size(p) >= 2)"))
       // ONE implementation of the F3 denormalize+format+close contract
       // (ring access stays the filter-guarded coordinates[0], not
-      // try_element_at — see the codegen note above)
-      .withColumn("wkt", graft.functions.GeomFunctions.denormalizedRingWkt(
+      // try_element_at — see the codegen note above). The formatted
+      // points are a column of their own: closedRingWkt refers to them
+      // repeatedly inside CASE branches, where subexpression
+      // elimination does not reach, and CollapseProject does not
+      // inline an expensive expression used more than once — so each
+      // ring is formatted once, not once per reference.
+      .withColumn("pairs", graft.functions.GeomFunctions.denormalizedPairs(
         expr("feature.geometry.coordinates[0]"),
         col("image_width"), col("image_height")))
+      .withColumn("wkt",
+        graft.functions.GeomFunctions.closedRingWkt(col("pairs")))
+      .drop("pairs")
       .withColumn("nucleustype",
         coalesce(col("feature.properties.nucleustype"), lit("")))
       .withColumn("footprint",

@@ -33,7 +33,11 @@ object StreamingTtlEtl {
           .documents(batch, analyses, slideHashes, batchSize)
           .withColumn("rel_path",
             concat(lit(f"mb$batchId%06d/"), col("rel_path")))
-        TtlFileSink.write(docs.select("rel_path", "ttl"), outDir)
+        // documents() size-gates its lookups via maybeBroadcastByCount,
+        // which persists — release per micro-batch, or every batch
+        // leaves its caches behind for the life of the query
+        try TtlFileSink.write(docs.select("rel_path", "ttl"), outDir)
+        finally graft.operators.Broadcasting.releaseAll()
         Ledger.record(batch.sparkSession, ledgerDir,
           Seq(f"mb$batchId%06d"), Ledger.Completed, s"stream-$batchId")
       }

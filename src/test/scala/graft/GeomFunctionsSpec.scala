@@ -170,4 +170,39 @@ class GeomFunctionsSpec extends SparkTestBase {
     assert(one(stNumPoints(emptyGeom)) == null)
     assert(one(stContains(emptyGeom, lit(1.0), lit(1.0))) == null)
   }
+
+  test("the st_* family and F3 compile under forced codegen, a " +
+    "zero-ring geometry included — no interpreted fallback") {
+    // CODEGEN_ONLY turns a codegen fallback into a hard error. Rows are
+    // repartitioned: a projection over a local relation is folded by
+    // the interpreter during optimization and never compiles.
+    def five(g: org.apache.spark.sql.Column) = Seq(stArea(g),
+      stPerimeter(g), stNumPoints(g), stIsValid(g),
+      wktDenormalized(g, lit(10.0), lit(10.0)))
+    // the g2_geom_stats shape: a ring built from columns, whose shared
+    // outer-ring subexpression once generated uncompilable code
+    val rect = expr("""array(array(array(x0, y0), array(x0 + w, y0),
+      |  array(x0 + w, y0 + h), array(x0, y0 + h), array(x0, y0)))"""
+      .stripMargin)
+    val rects = Seq((1, 0.0, 0.0, 4.0, 3.0)).toDF("id", "x0", "y0", "w", "h")
+      .repartition(1)
+    val triangle =
+      Seq(Seq(Seq(0.0, 0.0), Seq(4.0, 0.0), Seq(4.0, 3.0), Seq(0.0, 0.0)))
+    val geoms = Seq[(Int, Option[Seq[Seq[Seq[Double]]]])](
+      (2, Some(triangle)), (3, Some(Seq.empty)), (4, None))
+      .toDF("id", "g").repartition(1)
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    val got = try (
+      rects.select(col("id") +: five(rect): _*).collect() ++
+        geoms.select(col("id") +: five(col("g")): _*).collect())
+      .map(r => r.getInt(0) -> r.toSeq.tail).toMap
+    finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    assert(got(1) == Seq(12.0, 14.0, 5L, true, "POLYGON ((0.00 0.00, " +
+      "40.00 0.00, 40.00 30.00, 0.00 30.00, 0.00 0.00))"))
+    assert(got(2) == Seq(6.0, 12.0, 4L, true,
+      "POLYGON ((0.00 0.00, 40.00 0.00, 40.00 30.00, 0.00 0.00))"))
+    // zero rings: NULL measures, not valid, no WKT
+    assert(got(3) == Seq(null, null, null, false, null))
+    assert(got(4) == Seq(null, null, null, null, null))
+  }
 }

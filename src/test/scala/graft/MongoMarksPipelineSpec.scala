@@ -1,6 +1,12 @@
 package graft
 
+import graft.functions.GeomFunctions
+import graft.operators.Broadcasting
 import graft.pipelines.{MongoMarksPipeline, TtlFileSink}
+import org.apache.spark.sql.catalyst.expressions.{FormatString, Literal}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPInputStream
@@ -10,7 +16,8 @@ import java.util.zip.GZIPInputStream
   * golden run had no resolvable slide hash (slide ids must be int-able
   * for the reference's Drupal fetch), so hash_missing=true + fallback
   * sha256(imageid) — the engine reproduces that with an empty lookup. */
-class MongoMarksPipelineSpec extends SparkTestBase {
+class MongoMarksPipelineSpec extends SparkTestBase
+  with AdaptiveSparkPlanHelper {
   private val fx = "src/test/resources/fixtures/mongo"
   private def golden(b: Int): String =
     new String(Files.readAllBytes(Paths.get(
@@ -210,5 +217,84 @@ class MongoMarksPipelineSpec extends SparkTestBase {
       .map(r => r.getAs[String]("rel_path") -> r.getAs[String]("ttl"))
       .toMap
     assert(out == docs.map { case (p, (t, _)) => p -> t })
+  }
+
+  private def fixtureMarks =
+    MongoMarksPipeline.readMarks(spark, s"$fx/marks.jsonl")
+  private def fixtureAnalyses =
+    MongoMarksPipeline.readAnalyses(spark, s"$fx/analyses.jsonl")
+
+  test("plan shape: the marks stream through the join (no broadcast " +
+    "of the marks scan) and each ring is formatted once") {
+    def isMarksScan(p: org.apache.spark.sql.execution.SparkPlan) = p match {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.getName == "marks.jsonl")
+      case _ => false
+    }
+    // a non-empty lookup, as in production: Catalyst's size-only
+    // estimate of the analysis side is then the product of its join
+    // children, larger than the marks scan — unhinted, it broadcasts
+    // the marks
+    import spark.implicits._
+    val hashes = Seq(("slide-42", "a" * 64)).toDF("slide", "real_hash")
+    try {
+      val docs = MongoMarksPipeline.documents(fixtureMarks,
+        fixtureAnalyses, hashes, batchSize = 2)
+      docs.collect()
+      // the AQE-final plan, query stages included
+      val finalPlan = docs.queryExecution.executedPlan
+      assert(find(finalPlan)(isMarksScan).isDefined, finalPlan)
+      val marksBroadcast = collect(finalPlan) {
+        case b: BroadcastExchangeExec if find(b)(isMarksScan).isDefined => b
+      }
+      assert(marksBroadcast.isEmpty, finalPlan)
+
+      val side = MongoMarksPipeline.markSide(fixtureMarks,
+        MongoMarksPipeline.analysisSide(fixtureAnalyses, hashes))
+      side.collect()
+      val formats = collect(side.queryExecution.executedPlan) { case p =>
+        p.expressions.flatMap(_.collect {
+          case f @ FormatString(Literal(fmt, _), _*)
+              if String.valueOf(fmt) == "%.2f %.2f" => f
+        })
+      }.flatten
+      assert(formats.size == 1, side.queryExecution.executedPlan)
+    } finally Broadcasting.releaseAll()
+  }
+
+  test("markSide's wkt equals wktDenormalized on the same rings") {
+    import spark.implicits._
+    def mark(id: String, ring: String) =
+      s"""{"_id":"$id","provenance":{"analysis":{"execution_id":"e1"},""" +
+        s""""image":{"imageid":"i1","slide":""}},""" +
+        s""""geometries":{"features":[{"geometry":{"type":"Polygon",""" +
+        s""""coordinates":[$ring]},"properties":{"footprint":1.0}}]}}"""
+    val rings = Seq(
+      "open" -> "[[0.1,0.2],[0.3,0.2],[0.3,0.4]]",
+      "closed" -> "[[0.1,0.2],[0.3,0.2],[0.3,0.4],[0.1,0.2]]",
+      // 0.001111*100 and 0.001112*100 both format "0.11": closed at
+      // 2 decimals, though the raw endpoints differ
+      "format-equal" -> "[[0.001111,0.0],[0.05,0.05],[0.001112,0.0]]",
+      "one-point" -> "[[0.25,0.5]]")
+    val marks = spark.read.schema(MongoMarksPipeline.markSchema)
+      .json(rings.map { case (id, r) => mark(id, r) }.toDS)
+    val analyses = spark.read.schema(MongoMarksPipeline.analysisSchema)
+      .json(Seq("""{"_id":"a1","analysis":{"execution_id":"e1",""" +
+        """"algorithm_params":{"image_width":100,"image_height":200}},""" +
+        """"image":{"imageid":"i1"}}""").toDS)
+    try {
+      val got = MongoMarksPipeline.markSide(marks,
+        MongoMarksPipeline.analysisSide(analyses, emptyHashes))
+        .select("mark_id", "wkt").as[(String, String)].collect().toMap
+      val want = marks.select(col("_id"), GeomFunctions.wktDenormalized(
+          expr("geometries.features[0].geometry.coordinates"),
+          lit(100L), lit(200L)))
+        .as[(String, String)].collect().toMap
+      assert(got == want)
+      assert(got.keySet == rings.map(_._1).toSet)
+      assert(got("format-equal") ==
+        "POLYGON ((0.11 0.00, 5.00 10.00, 0.11 0.00))")
+      assert(got("one-point") == "POLYGON ((25.00 100.00))")
+    } finally Broadcasting.releaseAll()
   }
 }

@@ -41,4 +41,44 @@ class StreamingTtlEtlSpec extends SparkTestBase {
       .map(_.getString(0)).sorted
     assert(done.toSeq == Seq("mb000000", "mb000001"))
   }
+
+  test("micro-batches release their caches: no persisted RDD outlives " +
+    "its batch, so the count does not grow with the batches") {
+    implicit val sql = spark.sqlContext
+    implicit val enc: ExpressionEncoder[Row] =
+      ExpressionEncoder(MongoMarksPipeline.markSchema)
+    val fx = "src/test/resources/fixtures/mongo"
+    val marks = MongoMarksPipeline.readMarks(spark, s"$fx/marks.jsonl")
+      .collect()
+    val analyses = MongoMarksPipeline
+      .readAnalyses(spark, s"$fx/analyses.jsonl")
+    import spark.implicits._
+    // a lookup no other test builds: re-persisting an identical plan is
+    // a no-op for Spark's cache manager, so a cache left behind by
+    // another query would hide this one's
+    val hashes = Seq(("slide-none", "0" * 64)).toDF("slide", "real_hash")
+
+    val work = Files.createTempDirectory("stream_etl_cache")
+    val in = MemoryStream[Row](enc, spark)
+    def persisted = spark.sparkContext.getPersistentRDDs.size
+    val before = persisted
+    val q = StreamingTtlEtl.start(in.toDF(), analyses, hashes,
+      s"$work/out", s"$work/ledger", s"$work/ckpt", batchSize = 2)
+    val (afterOne, afterThree) = try {
+      in.addData(marks.take(1).toSeq)
+      q.processAllAvailable()
+      val one = persisted
+      for (m <- marks.slice(1, 3)) {
+        in.addData(Seq(m))
+        q.processAllAvailable()
+      }
+      (one, persisted)
+    } finally q.stop()
+    assert(Files.exists(Paths.get(s"$work/out",
+      "mb000002/exec-1/img-1/batch_000001.ttl.gz")))
+    assert(afterThree <= afterOne,
+      s"$afterOne persisted RDDs after 1 micro-batch, $afterThree after 3")
+    assert(afterOne <= before,
+      s"$before persisted RDDs before the query, $afterOne after 1 batch")
+  }
 }

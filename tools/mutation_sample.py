@@ -41,10 +41,10 @@ BD_SUITES = ("graft.BatchDirsSpec graft.BatchDirsPropertiesSpec "
 MUTANTS = [
     # ---- GeomFunctions: edge arithmetic ----
     ("G1-area-abs", GEOM, "stArea: drop abs() (orientation sign leaks)",
-     "when(pointsWellFormed(geom), abs(aggregate(",
-     "when(pointsWellFormed(geom), (aggregate(", GEOM_SUITES),
+     "when(pointsWellFormed(geom), abs(edgeFold(",
+     "when(pointsWellFormed(geom), (edgeFold(", GEOM_SUITES),
     ("G2-area-div", GEOM, "stArea: /2 -> /4",
-     ")) / 2)", ")) / 4)", GEOM_SUITES),
+     "}) / 2)", "}) / 4)", GEOM_SUITES),
     ("G3-perim-dxdx", GEOM, "stPerimeter: sqrt(dx*dx+dy*dy) -> sqrt(dx*dx+dx*dx)",
      "acc + sqrt(dx * dx + dy * dy)",
      "acc + sqrt(dx * dx + dx * dx)", GEOM_SUITES),
@@ -82,11 +82,11 @@ MUTANTS = [
     ("T6-merge-bag", TTL, "merge: union without distinct",
      "a.union(b).distinct()", "a.union(b)", TTL_SUITES),
     ("T7-close-postfmt", GEOM,
-     "denormalizedRingWkt: close on RAW values, not post-format strings",
+     "closedRingWkt: ignore post-format endpoint equality (always close)",
      """    val closed = when(size(pairs) === 0, pairs)
       .when(element_at(pairs, 1) === element_at(pairs, -1), pairs)""",
      """    val closed = when(size(pairs) === 0, pairs)
-      .when(element_at(ring, 1) === element_at(ring, -1), pairs)""",
+      .when(lit(false), pairs)""",
      GEOM_SUITES),
     # ---- BatchDirs protocol guards ----
     ("B1-committed-true", BD, "committed(): ignore the _SUCCESS marker",
