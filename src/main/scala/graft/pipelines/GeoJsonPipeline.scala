@@ -55,14 +55,17 @@ object GeoJsonPipeline {
       StructField("properties", StructType(Seq(
         StructField("measurements", MapType(StringType, DoubleType)))))))))))
 
-  /** S1 scan: one row per .geojson file with filename-derived image id
-    * (F5, :63-69). */
+  /** S1 scan: one row per .geojson file directly in `dir` with
+    * filename-derived image id (F5, :63-69). `dir` is the one root
+    * path, listed on the driver however many files it holds; files
+    * in its subdirectories are listed and dropped. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("multiLine", true).schema(geojsonSchema)
-      .json(dir + "/*.geojson")
-      .withColumn("filename", // decoded: a space in the file name must
-        // not become %20 in the stem/image_id or the output file name
-        element_at(split(PathMeta.decodedInputFileName(), "/"), -1))
+    PathMeta.filesIn(spark.read.format("json").option("multiLine", true)
+      .schema(geojsonSchema), dir, "*.geojson")
+      // decoded: a space in the file name must not become %20 in the
+      // stem/image_id or the output file name
+      .withColumn("filename", element_at(split(col("path"), "/"), -1))
+      .drop("path")
       .withColumn("stem", regexp_replace(col("filename"),
         "\\.geojson$", ""))
       .withColumn("image_id", element_at(split(col("stem"), "\\."), 1))

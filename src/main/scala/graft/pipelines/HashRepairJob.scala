@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Hash-repair toolkit: the engine's replacement for the reference's
@@ -45,14 +45,15 @@ object HashRepairJob {
       .select(col("slide"), lower(col("hash")).as("real_hash"))
 
   /** S8: whole-file scan of `<base>/<slide>.svs/batch_*.ttl.gz`
-    * (gzip transparent), one row per file with its slide key. */
+    * (gzip transparent), one row per file with its slide key. The
+    * slide directories are the root paths (one listing task per
+    * slide, not per file). */
   def readTtlTree(spark: SparkSession, baseDir: String): DataFrame =
-    spark.read.option("wholetext", true)
-      .text(baseDir + "/*.svs/*.ttl.gz")
-      // DECODED: a slide dir with a space would otherwise never match
-      // its slide_hashes.json key (silently unrepaired) and the new
-      // snapshot would land under the %20-spelled directory
-      .withColumn("path", PathMeta.decodedInputFileName())
+    // `path` is DECODED: a slide dir with a space would otherwise
+    // never match its slide_hashes.json key (silently unrepaired) and
+    // the new snapshot would land under the %20-spelled directory
+    PathMeta.filesIn(spark.read.format("text").option("wholetext", true),
+      baseDir + "/*.svs", "*.ttl.gz")
       .withColumn("slide",  // folder name INCLUDING .svs, like the
         // reference's svs_folder.name lookup key (:119-121)
         regexp_extract(col("path"), "/([^/]+\\.svs)/[^/]+$", 1))
@@ -95,22 +96,28 @@ object HashRepairJob {
       regexp_replace(col("ttl"), "(?m)^@prefix loinc:[^\n]*\n?", ""))
 
   /** Full job: read tree → repair hashes → strip loinc → new snapshot
-    * under outDir (same relative layout, gzip preserved by suffix). */
+    * under outDir (same relative layout, gzip preserved by suffix).
+    * Returns the number of repaired files.
+    *
+    * ONE scan of the gz tree: the write counts the repaired files as
+    * it goes, through an observation, so no second action
+    * decompresses the tree again, and nothing is persisted (a cache
+    * would hold the whole DECOMPRESSED corpus, ~5-20 MB gz per file
+    * ×4M files). The count is exact: the observation sits at the top
+    * of the write's plan, so it runs in the result stage whatever
+    * join the lookup gets, and Spark merges a result task's metrics
+    * once per partition, from its first successful attempt only
+    * (failed, retried and speculative attempts add nothing). */
   def run(spark: SparkSession, baseDir: String, hashJsonPath: String,
     outDir: String): Long = {
     val lookup = loadHashJson(spark, hashJsonPath)
+    val counted = Observation("repaired")
     val repaired = removeLoincPrefix(
       repair(readTtlTree(spark, baseDir), lookup))
-    // two actions (count + write) run as two SCANS of the gz tree —
-    // NOT a persist: caching would hold the whole DECOMPRESSED corpus
-    // (far beyond the ~5-20 MB/file gz sizes, ×4M files) in executor
-    // memory/disk. The count plan prunes the rewritten ttl column
-    // entirely (repaired derives from the ORIGINAL text's rlike), so
-    // the second decompression pass is the whole extra cost.
+      .observe(counted, count_if(col("repaired")).as("n"))
     try {
-      val n = repaired.filter(col("repaired")).count()
       TtlFileSink.write(repaired.select("rel_path", "ttl"), outDir)
-      n
+      counted.get("n").asInstanceOf[Long]
     } finally {
       // repair() size-gated its lookup via maybeBroadcastByCount,
       // which persists — reclaim that cache now that the job is done

@@ -7,11 +7,13 @@ import org.apache.spark.sql.types._
 /** Nuclear-segmentation CSV → TTL pipeline (§3.2 of SURVEY; reference
   * entry point segmentation-etl/nuclear_segmentation_etl.py:506-587).
   *
-  * The reference's 4-level directory walk (S3, :362-446) becomes one
-  * glob scan; cancer type, slide name and patch metadata come from
-  * `input_file_name()` regex extraction (F6/F7) instead of nested
-  * loops. Each CSV (≈ one patch) yields one gzip'd TTL document (K2/
-  * K4); per-patch parallelism replaces the per-SVS process pool (X2).
+  * The reference's 4-level directory walk (S3, :362-446) becomes a
+  * glob over the slide directories plus a file-name filter
+  * (`PathMeta.filesIn`); cancer type, slide name and patch metadata
+  * come from `input_file_name()` regex extraction (F6/F7) instead of
+  * nested loops. Each CSV (≈ one patch) yields one gzip'd TTL
+  * document (K2/K4); per-patch parallelism replaces the per-SVS
+  * process pool (X2).
   *
   * Scale: a narrow scan→map over millions of small CSVs; file-count
   * parallelism, no shuffle except the per-patch collect_list (bounded:
@@ -30,11 +32,12 @@ object SegCsvPipeline {
 
   /** S2/S3: scan `<base>/<cancer>_polygon/<slide>.svs.tar.gz/
     * <cancer>_polygon/<slide>.svs/<X>_<Y>_<W>_<H>_*-features.csv`,
-    * extracting path-encoded metadata. */
+    * extracting path-encoded metadata. The slide directories are the
+    * root paths (one listing task per slide, not per CSV). */
   def read(spark: SparkSession, baseDir: String): DataFrame =
-    spark.read.option("header", true).schema(csvSchema)
-      .csv(baseDir + "/*_polygon/*.svs.tar.gz/*_polygon/*.svs/*-features.csv")
-      .withColumn("path", PathMeta.decodedInputFileName())
+    PathMeta.filesIn(
+      spark.read.format("csv").option("header", true).schema(csvSchema),
+      baseDir + "/*_polygon/*.svs.tar.gz/*_polygon/*.svs", "*-features.csv")
       .withColumn("cancer_type",
         regexp_extract(col("path"), "/([a-z]+)_polygon/[^/]+\\.svs/", 1))
       .withColumn("image_name",

@@ -84,4 +84,20 @@ class GeoJsonPipelineSpec extends SparkTestBase {
     assert(!ttl.contains("\"null\""), ttl)
     assert(ttl.contains("hal:hasProbability  \"0.800000\""), ttl)
   }
+
+  test("only the .geojson files directly in the directory are read") {
+    val dir = Files.createTempDirectory("geojson_nested")
+    val doc = """{"features": []}"""
+    for (rel <- Seq("TCGA-AA-0001-01Z-00-DX1.u.geojson",
+      "sub/TCGA-AA-0002-01Z-00-DX1.u.geojson",
+      "k=v/TCGA-AA-0003-01Z-00-DX1.u.geojson",
+      "_TCGA-AA-0004-01Z-00-DX1.u.geojson", "notes.txt")) {
+      val p = dir.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, doc)
+    }
+    val stems = GeoJsonPipeline.read(spark, dir.toString)
+      .select("stem").collect().map(_.getString(0)).toSet
+    assert(stems == Set("TCGA-AA-0001-01Z-00-DX1.u"), stems)
+  }
 }

@@ -109,4 +109,45 @@ class HashRepairJobSpec extends SparkTestBase {
     assert(lookup.head.getString(0) == "img1")
     assert(lookup.head.getString(1) == expected)
   }
+
+  test("listing the slide directories reads exactly the files the " +
+    "file-level glob read") {
+    // a file of every kind the file-level glob `<base>/*.svs/*.ttl.gz`
+    // does or does not reach
+    val base = Files.createTempDirectory("hradv")
+    val ttl = "<urn:sha256:aa> a so:Thing .\n"
+    for (rel <- Seq("slideA.svs/batch_000001.ttl.gz",
+      "slideA.svs/deeper/batch_000002.ttl.gz",
+      "slideA.svs/inner.svs/batch_000003.ttl.gz",
+      "slideA.svs/k=v/batch_000004.ttl.gz",
+      "slideA.svs/_hidden.ttl.gz", "slideA.svs/.dot.ttl.gz",
+      "_under.svs/batch_000005.ttl.gz", ".dot.svs/batch_000006.ttl.gz",
+      "GTEX 1+2.svs/batch_000007.ttl.gz"))
+      gzWrite(base.resolve(rel), ttl)
+    Files.writeString(base.resolve("slideA.svs/batch_000008.ttl.gz.tmp-0123abcd"), ttl)
+    Files.writeString(base.resolve("slideA.svs/notes.txt"), ttl)
+    Files.writeString(base.resolve("fake.svs"), "not a directory")
+
+    val read = HashRepairJob.readTtlTree(spark, base.toString)
+      .select("slide", "rel_path").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSet
+    assert(read == Set(
+      "slideA.svs" -> "slideA.svs/batch_000001.ttl.gz",
+      "_under.svs" -> "_under.svs/batch_000005.ttl.gz",
+      ".dot.svs" -> ".dot.svs/batch_000006.ttl.gz",
+      "GTEX 1+2.svs" -> "GTEX 1+2.svs/batch_000007.ttl.gz"), read)
+  }
+
+  test("run() over slide directories that hold no TTL file writes " +
+    "nothing and repairs 0") {
+    val base = Files.createTempDirectory("hr_empty")
+    Files.createDirectories(base.resolve("slideA.svs"))
+    Files.writeString(base.resolve("slideA.svs/notes.txt"), "x")
+    val hashJson = base.resolve("slide_hashes.json")
+    Files.writeString(hashJson, s"""[{"slide": "slideA.svs", "hash": "${"a" * 64}"}]""")
+    val out = Files.createTempDirectory("hr_empty_out")
+    assert(HashRepairJob.run(spark, base.toString, hashJson.toString,
+      out.toString) == 0L)
+    assert(Files.list(out).count() == 0L)
+  }
 }

@@ -101,4 +101,42 @@ class SegCsvPipelineSpec extends SparkTestBase {
     assert(out.contains(fbPath), s"paths: ${out.keys}")
     assert(out(fbPath) == g)
   }
+
+  test("listing the slide directories reads exactly the CSVs the " +
+    "file-level glob read") {
+    // a file of every kind the file-level glob `<base>/*_polygon/
+    // *.svs.tar.gz/*_polygon/*.svs/*-features.csv` does or does not
+    // reach
+    val base = Files.createTempDirectory("segadv")
+    val csv = "AreaInPixels,PhysicalSize,Polygon\n5,1.5,[1:2:3:4]\n"
+    def put(rel: String, body: String = csv): Unit = {
+      val p = base.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, body)
+    }
+    val s1 = "blca_polygon/S1.svs.tar.gz/blca_polygon/S1.svs"
+    put(s"$s1/1_2_3_4_a-features.csv")
+    put(s"$s1/deeper/5_6_7_8_b-features.csv")
+    put(s"$s1/inner.svs/5_6_7_8_c-features.csv")
+    put(s"$s1/k=v/9_9_9_9_d-features.csv")
+    put(s"$s1/_h-features.csv")
+    put(s"$s1/.d-features.csv")
+    put(s"$s1/1_2_3_4_a-features.csv.tmp-0123abcd")
+    put(s"$s1/readme.txt")
+    put("blca_polygon/F.svs.tar.gz/blca_polygon/F.svs", "not a directory")
+    put("blca_polygon/S2.svs.tar.gz/blca_polygon/_S2.svs/2_2_2_2_e-features.csv")
+    put("blca_polygon/S3.svs.tar.gz/blca_polygon/.S3.svs/3_3_3_3_f-features.csv")
+    put("luad_polygon/G 1+2.svs.tar.gz/luad_polygon/G 1+2.svs/1_1_1_1_g-features.csv")
+
+    val prefix = base.getFileName.toString + "/"
+    val read = SegCsvPipeline.read(spark, base.toString)
+      .select("path").distinct().collect()
+      .map(r => r.getString(0).split(prefix, 2)(1)).toSet
+    assert(read == Set(
+      "blca_polygon/S1.svs.tar.gz/blca_polygon/S1.svs/1_2_3_4_a-features.csv",
+      "blca_polygon/S2.svs.tar.gz/blca_polygon/_S2.svs/2_2_2_2_e-features.csv",
+      "blca_polygon/S3.svs.tar.gz/blca_polygon/.S3.svs/3_3_3_3_f-features.csv",
+      "luad_polygon/G 1+2.svs.tar.gz/luad_polygon/G 1+2.svs/1_1_1_1_g-features.csv"),
+      read)
+  }
 }

@@ -272,6 +272,24 @@ MUTANTS += [
      MM_SUITES),
 ]
 
+# ---- set 5: the file readers' listing. The globs stop at the slide
+# directories and the file name is a reader filter, so nothing but
+# the path guard and the name filter keeps the file-level glob's set.
+PM = "src/main/scala/graft/pipelines/PathMeta.scala"
+SEG = "src/main/scala/graft/pipelines/SegCsvPipeline.scala"
+LIST_SUITES = ("graft.SegCsvPipelineSpec graft.HashRepairJobSpec "
+               "graft.GeoJsonPipelineSpec graft.FileListingSpec")
+
+MUTANTS += [
+    ("L1-nested-files", PM, "filesIn: drop the depth guard (files in subdirectories read)",
+     """    df.withColumn("path", decodedInputFileName())
+      .filter(pathDepth(col("path")) === depth)""",
+     """    df.withColumn("path", decodedInputFileName())""",
+     LIST_SUITES),
+    ("L2-seg-no-name-filter", SEG, "SegCsvPipeline.read: drop the pathGlobFilter name match",
+     '"*-features.csv")', '"*")', LIST_SUITES),
+]
+
 
 def run(mutant):
     mid, fn, desc, old, new, suites = mutant
