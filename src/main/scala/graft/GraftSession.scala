@@ -92,7 +92,7 @@ object GraftSession {
   }
 
   /** THE harness session (Bench/Verify/Probe/Explain/PinAudit/
-    * ScaleLadder/StreamLadder): local[cpus] with the settings table.
+    * ScaleLadder and `perfbench/`): local[cpus] with the settings table.
     * A tuning change validated in Bench must not silently miss the
     * correctness dump or the probes (they MUST run under the same
     * engine). It does not call `GraftFunctions.register`, whose

@@ -12,16 +12,15 @@ import org.apache.spark.sql.functions._
   * is a single-shot whole-ledger rewrite with a no-concurrent-reader
   * caveat; here each wave's keys land in `<dir>/batch=<waveId>/`
   * (Spark's `_SUCCESS` is the commit marker, so a replayed wave
-  * overwrites its own directory — exactly-once per wave id, same
-  * discipline as the streaming index maintainers), and
+  * overwrites its own directory — exactly-once per wave id), and
   * [[fold]] = [[BatchDirs.compactTiered]] keyed on `key` keeps the
   * listing bounded at O(compact + log runs + one cadence of waves)
-  * with O(tail) minor folds — the ledger inherits the streaming
-  * layer's measured LSM write/read bounds, its single-compactor
+  * with O(tail) minor folds — the ledger inherits the layout's
+  * measured LSM write/read bounds, its single-compactor
   * lease, and its two-phase grace-window sweep instead of a bespoke
   * rewrite. Readers and folds interleave safely (the grace window);
-  * the key-bucketed layout also means a future point-lookup face
-  * ("is THIS analysis done?") can prune to one bucket.
+  * the key-bucketed layout lets the point-lookup face [[doneOf]]
+  * ("is THIS analysis done?") prune to the asked keys' buckets.
   *
   * Semantics match [[Ledger]]: at-least-once work, a key is done once
   * recorded with a terminal status (completed/failed — the
@@ -107,10 +106,9 @@ object BatchLedger {
 
   /** Fold committed waves ≤ `upTo` ([[BatchDirs.compactTiered]],
     * bucketed by `key`). Call on a cadence from the job that owns the
-    * ledger — `upTo = currentWave − 1`, the same
-    * never-fold-the-newest rule as the streaming maintainers (the
-    * newest wave may be re-run after a crash and needs its replay
-    * marker). Returns the coverage reached. */
+    * ledger — `upTo = currentWave − 1`: never fold the newest wave,
+    * which may be re-run after a crash and needs its replay marker.
+    * Returns the coverage reached. */
   def fold(spark: SparkSession, ledgerDir: String, upTo: Long,
     nBuckets: Int = 16): Long =
     BatchDirs.compactTiered(spark, ledgerDir, upTo, "key", nBuckets)

@@ -130,16 +130,9 @@ object IvfIndex {
     assign(emb, centroids)
       .select(col("cluster_id"), col("vec_id"), col("embedding"))
 
-  /** Top-`topK` cosine neighbors for each probe, scanning only the
-    * `nProbe` clusters nearest to the probe vector. The probe-side
-    * windows rank tiny frames (probes×k and candidates per probe),
-    * not the corpus. */
   /** The `nProbe` nearest centroids per probe: (probe_id, pe,
-    * cluster_id). Public — shared by [[search]] and by the streaming
-    * maintainer's pruned compact-scan (the distinct cluster set is
-    * ≤ k rows, the same bounded-by-design budget as the centroid
-    * localization). */
-  def probeClusters(centroids: DataFrame, probes: DataFrame,
+    * cluster_id). */
+  private def probeClusters(centroids: DataFrame, probes: DataFrame,
     nProbe: Int): DataFrame = {
     registered(centroids.sparkSession)
     val scored = probes.crossJoin(broadcast(centroids))
@@ -155,15 +148,16 @@ object IvfIndex {
         col("embedding").as("pe"), col("cluster_id"))
   }
 
+  /** Top-`topK` cosine neighbors for each probe, scanning only the
+    * `nProbe` clusters nearest to the probe vector. The probe-side
+    * windows rank tiny frames (probes×k and candidates per probe),
+    * not the corpus. */
   def search(index: DataFrame, centroids: DataFrame, probes: DataFrame,
     nProbe: Int, topK: Int): DataFrame =
     searchFrom(probeClusters(centroids, probes, nProbe), index, topK)
 
-  /** [[search]] from an already-computed [[probeClusters]] frame —
-    * so a caller that needed the probe→cluster assignment for its
-    * own purposes (the maintainer's bucket-pruned compact scan) pays
-    * the probes×centroids scoring pass ONCE. */
-  def searchFrom(probeClusters: DataFrame, index: DataFrame,
+  /** [[search]] from a computed [[probeClusters]] frame. */
+  private def searchFrom(probeClusters: DataFrame, index: DataFrame,
     topK: Int): DataFrame = {
     registered(index.sparkSession)
     val cands = probeClusters

@@ -4,17 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Batch-id-keyed parquet directory layout shared by the streaming
-  * index maintainers (`<dir>/batch=<id>/`, `_SUCCESS` as the commit
-  * marker), plus the COMPACTION layer that keeps it production-shaped.
-  * The layout IS the exactly-once mechanism: a replayed micro-batch
-  * either skips (marker present) or overwrites its own directory with
+/** Batch-id-keyed parquet directory layout (`<dir>/batch=<id>/`,
+  * `_SUCCESS` as the commit marker) under the work ledger
+  * ([[graft.incremental.BatchLedger]]), plus the COMPACTION layer that
+  * keeps it production-shaped. The layout IS the exactly-once
+  * mechanism: a replayed wave overwrites its own directory with
   * deterministic content — nothing accumulates.
   *
-  * Why compaction: a directory per micro-batch means every read (and
-  * every `processBatch` index scan) pays an O(batches) driver
-  * `listStatus`, and days of 1-minute triggers leave 10⁴–10⁵ tiny
-  * dirs — the small-files shape that kills a 100 TB stream.
+  * Why compaction: a directory per wave means every read pays an
+  * O(batches) driver `listStatus`, and months of waves leave 10⁴–10⁵
+  * tiny dirs — the small-files shape that kills a long-lived job.
   *
   * == Two tiers ==
   *
@@ -40,19 +39,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * O(log n / log(1+r)) compact rewrites), when the L0 run count
   * would exceed `maxL0Runs` (the listing backstop), or when the
   * caller changes the bucket count (all tiers of a generation share
-  * ONE modulus — see below). The
-  * single-tier [[compact]] face (every fold is a major) remains for
-  * callers that want the flat layout and as the measured baseline the
-  * tiered mode is compared against (`graft.StreamLadder`). Without
-  * tiering, the 64-dir listing backstop and the byte-ratio governor
-  * conflict at production shapes: many small micro-batches hit the
-  * dir backstop long before the byte ratio, forcing a full O(index)
-  * rewrite per 64 tiny batches. Tiering resolves the conflict — the
-  * dir pressure is absorbed by O(tail) minors.
+  * ONE modulus — see below). The dir pressure of many small batches
+  * is absorbed by O(tail) minors, so it never forces an O(index)
+  * rewrite.
   *
-  * Both folded kinds are hash-bucketed by the caller's join key
-  * (`pbucket = pmod(xxhash64(key), buckets)` — k1 for LSH bands,
-  * cluster_id for IVF postings), so a reader that knows which key
+  * Both folded kinds are hash-bucketed by the caller's key
+  * (`pbucket = pmod(xxhash64(key), buckets)` — the ledger's `key`
+  * column), so a reader that knows which key
   * values it probes can prune the scan of EVERY folded tier to the
   * touched buckets; only the cadence-bounded raw tail is read whole.
   * The original `batch` id survives as a data column (cast long), so
@@ -73,19 +66,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     the next compactor call as a grace window for concurrent
   *     readers. A lazy frame from [[readCommitted]] must therefore be
   *     CONSUMED within one compactor call of being built — past two
-  *     calls its pinned file listing can hit swept dirs (see
-  *     [[materialized]] for consumers that must hold frames longer).
+  *     calls its pinned file listing can hit swept dirs (a consumer
+  *     that must hold rows longer writes them out itself).
   * A crash inside (1) leaves an unmarked dir readers ignore; a crash
   * inside (2) leaves debris that readers also ignore (they read the
   * resolved [[Gen]] + batch dirs STRICTLY ABOVE its coverage) and the
   * next compactor call sweeps — every call, fold or no-op, runs the
-  * (listing-only) sweep, so governor-deferred cadences do not let
-  * debris outlive one call. Coverage rule after any fold: every batch
-  * id ≤ [[Gen.coveredThrough]] is committed — sound because folds only
-  * ever cover committed batches and the streaming engine runs batch
-  * n+1 only after n committed (synthetic-id backfills that leave holes
-  * below the coverage are out of contract, as documented on the
-  * maintainers).
+  * (listing-only) sweep, so debris does not outlive one call.
+  * Coverage rule after any fold: every batch id ≤
+  * [[Gen.coveredThrough]] is committed — sound because folds only
+  * ever cover committed batches and the caller folds only waves below
+  * its newest (backfills that leave holes below the coverage are out
+  * of contract).
   *
   * == Single-compactor lease ==
   *
@@ -119,10 +111,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * sweep; a sweep racing a live takeover of the SWEEPER's own
   * overrun lease can abort that takeover (it retries) — again
   * confined to the overrun window.
-  * On contention the in-band cadence path defers silently (folding
-  * is opportunistic there; the next cadence retries) and the
-  * out-of-band faces fail loudly (`failIfBusy = true` →
-  * `IllegalStateException`) so a misconfigured double-cron is
+  * On contention a fold defers silently by default (folding is
+  * opportunistic; the next cadence retries); an out-of-band caller
+  * passes `failIfBusy = true` to fail loudly
+  * (`IllegalStateException`) so a misconfigured double-cron is
   * impossible to miss. */
 object BatchDirs {
 
@@ -157,7 +149,7 @@ object BatchDirs {
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def committed(spark: SparkSession, dir: String): Boolean = {
+  private def committed(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir, "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
@@ -191,7 +183,6 @@ object BatchDirs {
       * reader skips pruning on any dir whose count differs. */
     def modulus: Option[Int] =
       l0.lastOption.map(_.nBuckets).orElse(compact.map(_._2))
-    def isEmpty: Boolean = compact.isEmpty && l0.isEmpty
     /** Directory names of every tier, for sweep keep-sets. */
     def dirNames: Seq[String] =
       compact.map { case (c, n) => s"compact=$c.n$n" }.toSeq ++
@@ -209,21 +200,7 @@ object BatchDirs {
     * this list with the folded view). One `listStatus` — the coverage
     * is computed from the same directory listing. */
   def committedIds(spark: SparkSession, baseDir: String): Seq[Long] =
-    committedState(spark, baseDir)._2
-
-  /** (fold coverage, committed batch ids above it) from ONE directory
-    * listing — the pair every visibility gate needs. Resolving the
-    * two through separate listings is a race: a fold committing in
-    * between yields a NEW coverage with the OLD (pre-fold) id list,
-    * and ids the fold just covered vanish from `coverage ∨ ids`-style
-    * gates (batches silently invisible for one read). One snapshot
-    * keeps the pair mutually consistent — coverage only ever grows,
-    * so the union face stays monotone. */
-  def committedState(spark: SparkSession, baseDir: String)
-    : (Long, Seq[Long]) = {
-    val (gen, ids) = listState(spark, baseDir)
-    (gen.coveredThrough, ids)
-  }
+    listState(spark, baseDir)._2
 
   /** The committed fold generation under `baseDir` (empty [[Gen]]
     * before the first fold). One `listStatus` of the base dir — never
@@ -241,12 +218,6 @@ object BatchDirs {
     * they read with the same generation they resolved. */
   def generation(spark: SparkSession, baseDir: String): Gen =
     listState(spark, baseDir)._1
-
-  /** Highest committed compact (L1) dir: (cutoff, buckets), None
-    * before the first major merge. Prefer [[generation]] — this face
-    * is blind to L0 runs. */
-  def compactInfo(spark: SparkSession, baseDir: String)
-    : Option[(Long, Int)] = generation(spark, baseDir).compact
 
   /** The whole directory state from ONE listing: the resolved
     * generation and the committed batch ids above its coverage. */
@@ -314,48 +285,9 @@ object BatchDirs {
     }
   }
 
-  /** Recent-tail directory budget for the single-tier [[compact]]
-    * face: even when the byte-ratio governor defers a fold (tail too
-    * small to pay an O(index) rewrite), the tail must never regrow
-    * the O(batches)-listing problem compaction exists to solve — once
-    * the tail REACHES this many committed batch dirs the fold
-    * proceeds regardless of byte ratio (boundary spec-pinned: 63
-    * deferrable dirs defer, 64 force). [[compactTiered]] needs no
-    * such backstop: its minor folds are O(tail) and never deferred,
-    * so dir pressure never has to buy a full rewrite. */
-  private val MaxTailDirs = 64
-
   /** Every batch id ≤ this is committed (−1 before any fold). */
   def compactedThrough(spark: SparkSession, baseDir: String): Long =
     generation(spark, baseDir).coveredThrough
-
-  /** Precondition check for OUT-OF-BAND folds (callers other than
-    * the single in-band writer, whose `upTo = batchId − 1` holds by
-    * construction): `upTo` must stay strictly below the newest
-    * committed batch — the newest batch may still replay, and
-    * folding it destroys the replay marker that makes the replay a
-    * no-op (the replay would then re-emit on top of its folded
-    * rows, silently double-counting). Returns false — fold is a
-    * no-op — when nothing is committed yet OR when everything
-    * committed is already folded (no batch dir above the coverage):
-    * a maintenance cron racing stream startup, or re-running after a
-    * quiet period whose batches a previous fold fully covered, must
-    * not crash. Throws only on an actual violation against an
-    * existing foldable tail. ONE listing; shared by both maintainers
-    * so the contract can never diverge between them. */
-  def foldableUpTo(spark: SparkSession, baseDir: String,
-    upTo: Long): Boolean = {
-    val (_, ids) = committedState(spark, baseDir)
-    ids.maxOption match {
-      case None => false // nothing (left) to fold: no-op, not error
-      case Some(newest) =>
-        require(upTo < newest,
-          s"out-of-band fold upTo=$upTo must stay strictly below the " +
-            s"newest committed batch ($newest): the newest batch may " +
-            "still replay, and folding it destroys its replay marker")
-        true
-    }
-  }
 
   /** An all-empty-batches fold commits a marker-only dir; the parquet
     * reader must skip it (same rationale as the per-batch part-file
@@ -366,12 +298,8 @@ object BatchDirs {
 
   /** The generation's tier dirs that actually hold data, as
     * (path, bucket count) — marker-only tiers (all-empty-batch folds)
-    * skipped. Public so lookup faces that derive something from the
-    * stored schema (e.g. the key type the buckets were hashed on)
-    * have a data file to read it from — and a well-defined "no data
-    * anywhere" answer instead of a schema-inference crash on a
-    * marker-only dir. */
-  def genDataDirs(spark: SparkSession, baseDir: String, gen: Gen)
+    * skipped. */
+  private def genDataDirs(spark: SparkSession, baseDir: String, gen: Gen)
     : Seq[(String, Int)] = {
     val fs = fsOf(spark, baseDir)
     (gen.compact.toSeq.map { case (c, n) =>
@@ -420,22 +348,21 @@ object BatchDirs {
     * cast, so the tiers union without a coercion surprise).
     * Half-written directories (no marker) are excluded, so a reader
     * never sees a torn batch — and so are committed-but-EMPTY batches
-    * (marker, zero part files: an empty micro-batch, e.g. a
-    * watermark-only trigger, can commit without writing any data
-    * file, and feeding a file-less directory to the parquet reader
-    * throws on schema inference, wedging every subsequent batch).
+    * (marker, zero part files: an empty wave commits without
+    * writing any data file, and feeding a file-less directory to the
+    * parquet reader throws on schema inference, wedging every
+    * subsequent batch).
     *
     * `pbuckets`: when the caller knows which join-key buckets it will
     * probe ([[bucketOf]] over the same key and the generation's
     * [[Gen.modulus]]), every folded tier prunes to those partition
     * dirs; the recent (uncompacted) batches are always read whole —
-    * they are bounded by the compaction cadence, not by stream
+    * they are bounded by the compaction cadence, not by ledger
     * lifetime.
     *
     * The returned frame's folded-tier file listings are pinned to the
     * generation resolved here, which the two-phase sweep keeps alive
-    * for ONE subsequent compactor call — consume within a cadence, or
-    * [[materialized]] when it must live longer. */
+    * for ONE subsequent compactor call — consume within a cadence. */
   def readCommitted(spark: SparkSession, baseDir: String,
     excludeBatch: Long = -1L, pbuckets: Option[Seq[Long]] = None)
     : Option[DataFrame] =
@@ -470,8 +397,7 @@ object BatchDirs {
     * conservative (it can fire when every swept batch was empty) and
     * evidence-bounded: once later calls sweep the intermediate tiers
     * themselves (three or more calls since the pin), the omission is
-    * no longer detectable — the one-call deadline is a hard contract,
-    * with [[materialized]]/[[materializedTo]] as the escape. */
+    * no longer detectable — the one-call deadline is a hard contract. */
   def readCommittedAt(spark: SparkSession,
     baseDir: String, gen: Gen,
     excludeBatch: Long = -1L, pbuckets: Option[Seq[Long]] = None)
@@ -480,7 +406,7 @@ object BatchDirs {
     val basePath = new Path(baseDir)
     // ONE base-dir listing serves both the exactness guard and the
     // recent-tail selection below — the guard adds zero extra
-    // listStatus calls to the per-micro-batch hot path, and its
+    // listStatus calls to the per-read hot path, and its
     // _SUCCESS stats run only for tiers newer than the pin (none,
     // when the caller resolved the generation in the same breath)
     val baseStatuses =
@@ -509,9 +435,7 @@ object BatchDirs {
               s"(pinned coverage ${gen.coveredThrough}) and batch=$c " +
               "has already been swept — at least two compactor calls " +
               "ran since the pin, so a read against it could silently " +
-              "omit their batches. Re-resolve the generation and " +
-              "retry (or hold results via BatchDirs.materialized/" +
-              "materializedTo instead of a lazy frame)")
+              "omit their batches. Re-resolve the generation and retry")
         }
       }
     }
@@ -521,8 +445,8 @@ object BatchDirs {
     // common-base inference throw CONFLICTING_DIRECTORY_STRUCTURES):
     // k tiers as k separate reads would pay k file-index listings, k
     // schema inferences, and a k-way union per read — measured as
-    // the dominant per-batch cost once the L0 run count grows
-    // (StreamLadder). Pruning selects which leaf dirs are read AT
+    // the dominant per-batch cost once the L0 run count grows.
+    // Pruning selects which leaf dirs are read AT
     // LISTING TIME — the probed buckets' dirs are the only ones ever
     // listed, stronger than a post-listing partition filter. A tier
     // whose bucket count differs from the generation modulus
@@ -553,37 +477,6 @@ object BatchDirs {
         .parquet(recentDirs: _*)
         .withColumn("batch", col("batch").cast("long")))
     (tierPart.toSeq ++ recentPart).reduceOption(_.unionByName(_))
-  }
-
-  /** Detach a frame from the files it was resolved over: an eager
-    * local checkpoint materializes the rows into executor storage, so
-    * the result outlives any number of compaction sweeps. This is the
-    * opt-in face of the consumption deadline documented on
-    * [[readCommitted]] — a consumer that must hold a result across
-    * more than one compactor call pays the one materialization here
-    * instead of crashing on a swept file later. The cost is a full
-    * execution of the plan NOW plus caching the output, so reserve it
-    * for long-lived handles, not per-batch reads.
-    *
-    * DURABILITY caveat: a local checkpoint stores blocks on the
-    * executors with TRUNCATED lineage — lose an executor (crash,
-    * dynamic-allocation decommission) and the handle is unrecoverable
-    * (the job fails; it cannot recompute). It outlives sweeps, not
-    * executors. On a cluster with dynamic allocation, or for a handle
-    * that must survive executor churn, use [[materializedTo]]. */
-  def materialized(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true)
-
-  /** The RELIABLE sibling of [[materialized]]: write the frame to
-    * `path` (overwrite) and return a reader over it. Survives
-    * compaction sweeps AND executor loss — the rows live in the
-    * caller's filesystem, outside the compacted layout, so no sweep
-    * ever touches them and any executor can re-read them. Costs one
-    * full write + the read-back; the caller owns `path`'s lifecycle
-    * (delete it when the handle is done). */
-  def materializedTo(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
   }
 
   // ---------------------------------------------------------------
@@ -787,9 +680,7 @@ object BatchDirs {
   }
 
   /** The byte-ratio governor's two sides: (compact-dir bytes, upper
-    * bytes = L0 runs + committed data batches in (coverage, cutoff]).
-    * One definition for both fold faces, so the single-tier and
-    * tiered governors can never diverge on what counts as "upper". */
+    * bytes = L0 runs + committed data batches in (coverage, cutoff]). */
   private def governorBytes(fs: FileSystem, baseDir: String,
     gen: Gen, cutoff: Long): (Long, Long) = {
     val compactBytes = gen.compact.map { case (c, n) =>
@@ -941,65 +832,6 @@ object BatchDirs {
     }
   }
 
-  /** Single-tier fold: every committed batch ≤ `upTo` (plus the
-    * previous tiers' content) into `compact=<cutoff>.n<buckets>`,
-    * partitioned by [[bucketOf]] `bucketKey`, then sweep. Idempotent
-    * and crash-safe (commit protocol in the class doc); re-running
-    * after any crash converges. Returns the effective coverage (−1
-    * when there is nothing to compact). Lease-guarded (class doc):
-    * on contention it defers — no fold, no sweep — and reports the
-    * current coverage, unless `failIfBusy`.
-    *
-    * `minFoldRatio` is the write-amplification governor: a fold
-    * REWRITES the whole compacted table, so folding on a fixed batch
-    * cadence alone would cost O(index) per fold — quadratic total
-    * writes over the stream's life. With the ratio set, a fold only
-    * proceeds once the upper tiers' bytes (L0 runs + recent batch
-    * dirs) reach that fraction of the compact dir's — the LSM
-    * discipline: every byte is rewritten O(log n / log(1+r)) times
-    * total, while the recent tail stays bounded at r·index (reads
-    * stay O(compacted + bounded tail)). The FIRST fold (no compact
-    * dir yet) always proceeds, and the [[MaxTailDirs]] backstop
-    * forces a deferred fold before the tail regrows the O(batches)
-    * listing. Production maintainers use [[compactTiered]], which
-    * resolves the governor-vs-backstop conflict at small-batch
-    * shapes; this face is the flat-layout baseline. */
-  def compact(spark: SparkSession, baseDir: String, upTo: Long,
-    bucketKey: String, nBuckets: Int = 64,
-    minFoldRatio: Double = 0.0,
-    leaseStaleMs: Long = DefaultLeaseStaleMs,
-    failIfBusy: Boolean = false): Long = {
-    require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
-    withCompactorLease(spark, baseDir, leaseStaleMs, failIfBusy) {
-      val fs = fsOf(spark, baseDir)
-      val (gen, tailIds) = listState(spark, baseDir)
-      val covered = gen.coveredThrough
-      val foldIds = tailIds.filter(_ <= upTo)
-      val cutoff =
-        if (foldIds.isEmpty) covered
-        else math.max(covered, foldIds.max)
-      if (cutoff < 0) -1L // nothing committed yet, nothing to do
-      else {
-        val targetName = s"compact=$cutoff.n$nBuckets"
-        val defer = cutoff > covered && minFoldRatio > 0.0 &&
-          gen.compact.isDefined && foldIds.size < MaxTailDirs && {
-            val (compactBytes, upperBytes) =
-              governorBytes(fs, baseDir, gen, cutoff)
-            upperBytes < compactBytes * minFoldRatio
-          }
-        if (!defer &&
-          (cutoff > covered ||
-            !committed(spark, s"$baseDir/$targetName")))
-          writeMajor(spark, fs, baseDir, gen, cutoff, bucketKey,
-            nBuckets)
-        // every call sweeps — deferred folds included, so debris
-        // never outlives one compactor call (grace contract above)
-        sweep(fs, baseDir, covered, gen.dirNames.toSet + targetName)
-        if (defer) covered else cutoff
-      }
-    }.getOrElse(compactedThrough(spark, baseDir))
-  }
-
   /** Tiered fold (class doc): a MINOR fold consolidates the committed
     * batch tail ≤ `upTo` into one L0 run without touching the
     * compacted table; a MAJOR merge (everything → a fresh compact
@@ -1010,24 +842,22 @@ object BatchDirs {
     * bucket set for every tier). `maxL0Runs` is the listing
     * backstop, NOT the intended major trigger: the byte ratio is —
     * a run-count-forced major is byte-ungoverned and reintroduces
-    * exactly the forced-full-rewrite pathology tiering removes (the
-    * StreamLadder A/B measured a tight cap DOUBLING cumulative write
-    * bytes). The default 64 matches the single-tier face's
-    * MaxTailDirs budget: reads stay O(64 dir listings) worst-case,
+    * exactly the forced-full-rewrite pathology tiering removes (a
+    * tight cap measured DOUBLING cumulative write bytes, BASELINE.md).
+    * The default 64 keeps reads at O(64 dir listings) worst-case,
     * and since the leaf-rooted scan reads all runs as ONE relation,
     * a deep run stack costs listings, not per-run reads. Returns the
-    * coverage reached (−1 when nothing is committed). Idempotent and crash-safe like
-    * [[compact]]; lease-guarded, deferring (or failing, with
+    * coverage reached (−1 when nothing is committed). Idempotent and
+    * crash-safe (commit protocol in the class doc): re-running after
+    * any crash converges. Lease-guarded, deferring (or failing, with
     * `failIfBusy`) on contention; every non-deferred call sweeps.
     *
     * Listing bound per read under a cadence-driven caller:
     * O(1 compact + ≤ maxL0Runs L0 runs + one cadence of batch dirs +
     * one call of grace debris). Write bound per byte: one batch
     * write + one L0 write + O(log n / log(1+majorRatio)) compact
-    * rewrites — the backstop-forced full rewrites of the single-tier
-    * face (every 64 small batches, regardless of bytes) do not
-    * exist here, which is the measured win (`graft.StreamLadder`,
-    * BASELINE.md). */
+    * rewrites — no backstop forces a full rewrite per 64 small
+    * batches regardless of bytes. */
   def compactTiered(spark: SparkSession, baseDir: String, upTo: Long,
     bucketKey: String, nBuckets: Int = 64,
     majorRatio: Double = 0.1, maxL0Runs: Int = 64,

@@ -7,22 +7,21 @@ import org.scalacheck.Gen
 
 /** Randomized state-machine property test for the batch-dir
   * compaction layer: arbitrary interleavings of appends, empty
-  * commits, torn writes, stray debris, single-tier folds, and TIERED
-  * folds (varying byte-ratio governor, bucket counts — including
-  * mid-stream re-bucketing, which forces a major merge — and L0
-  * run-count backstops) against a driver-side reference model. The governor's fold/defer
-  * choice depends on real parquet bytes, so the model asserts the
-  * invariants that must hold on EVERY path through the state space
-  * rather than predicting fold decisions:
+  * commits, torn writes, stray debris, and TIERED folds (varying
+  * byte-ratio governor, bucket counts — including mid-stream
+  * re-bucketing, which forces a major merge — and L0 run-count
+  * backstops) against a driver-side reference model. The governor's
+  * minor/major choice depends on real parquet bytes, so the model
+  * asserts the invariants that must hold on EVERY path through the
+  * state space rather than predicting fold decisions:
   *
   *  1. content: readCommitted returns every committed row exactly
   *     once, keyed by (batch, k) — no loss, no double count, in any
   *     fold/grace/debris state;
-  *  2. committedState is a consistent single-listing snapshot: the
-  *     reported ids are exactly the committed ids above the reported
-  *     cutoff;
-  *  3. the cutoff is monotone non-decreasing and compact() returns
-  *     it;
+  *  2. committedIds are exactly the committed ids above the
+  *     reported cutoff;
+  *  3. the cutoff is monotone non-decreasing and compactTiered()
+  *     returns it;
   *  4. an empty pruned read (pbuckets = ∅) returns exactly the rows
   *     ABOVE the cutoff — the compacted part fully prunes, the
   *     cadence-bounded tail never does;
@@ -47,7 +46,6 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
   private case object AppendEmpty extends Op
   private case object TornThenAppend extends Op
   private case object Debris extends Op
-  private case class Compact(ratio: Double, nBuckets: Int) extends Op
   private case class Tiered(ratio: Double, nBuckets: Int,
     maxL0Runs: Int) extends Op
   private case object Pin extends Op
@@ -58,14 +56,9 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
     1 -> Gen.const(TornThenAppend),
     1 -> Gen.const(Debris),
     2 -> Gen.const(Pin),
-    2 -> (for {
-      ratio <- Gen.oneOf(0.0, 0.0, 0.1, 0.5)
-      n <- Gen.oneOf(2, 4, 8)
-    } yield Compact(ratio, n)),
-    // tiered folds interleaved with single-tier ones: minor L0 runs,
-    // run-count-backstop majors, ratio majors, and modulus-change
-    // majors all mix freely against the same invariants
-    2 -> (for {
+    // minor L0 runs, run-count-backstop majors, ratio majors, and
+    // modulus-change majors all mix freely against the same invariants
+    4 -> (for {
       ratio <- Gen.oneOf(0.0, 0.1, 1e9)
       n <- Gen.oneOf(2, 4, 8)
       runs <- Gen.oneOf(1, 2, 16)
@@ -89,7 +82,7 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
       var nextKey = 0
       var lastCutoff = -1L
       // invariant 6 state: the pinned generation and its age in
-      // COMPACTOR CALLS (every executed fold call counts — deferred
+      // COMPACTOR CALLS (every executed fold call counts — no-op
       // ones too, since every call sweeps)
       var pinned = Option.empty[(BatchDirs.Gen, Int)]
 
@@ -149,12 +142,13 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
       }
 
       def check(): Unit = {
-        val (cutoff, ids) = BatchDirs.committedState(spark, dir)
+        val cutoff = BatchDirs.compactedThrough(spark, dir)
+        val ids = BatchDirs.committedIds(spark, dir)
         // 3: monotone cutoff
         assert(cutoff >= lastCutoff, s"cutoff regressed: " +
           s"$lastCutoff -> $cutoff (ops=$ops)")
         lastCutoff = cutoff
-        // 2: snapshot consistency vs the model
+        // 2: the uncovered ids vs the model
         assert(ids.sorted ==
           model.keys.filter(_ > cutoff).toSeq.sorted,
           s"ids=$ids cutoff=$cutoff model=${model.keys} (ops=$ops)")
@@ -209,15 +203,6 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
           fs.mkdirs(new Path(s"$dir/compact=9999.n4")) // torn fold
           check()
           checkPinned()
-        case Compact(ratio, n) if nextId > 0 =>
-          val upTo = nextId - 1
-          val ret = BatchDirs.compact(spark, dir, upTo, "k",
-            nBuckets = n, minFoldRatio = ratio)
-          assert(ret == BatchDirs.compactedThrough(spark, dir),
-            s"compact() return != observed coverage (ops=$ops)")
-          pinned = pinned.map { case (g, age) => (g, age + 1) }
-          check()
-          checkPinned()
         case Tiered(ratio, n, runs) if nextId > 0 =>
           val upTo = nextId - 1
           val ret = BatchDirs.compactTiered(spark, dir, upTo, "k",
@@ -237,7 +222,7 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
           pinned = pinned.map { case (g, age) => (g, age + 1) }
           check()
           checkPinned()
-        case Compact(_, _) | Tiered(_, _, _) => () // nothing committed
+        case Tiered(_, _, _) => () // nothing committed
       }
       fs.delete(new Path(dir), true)
     }

@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 
 /** Unit behavior of the batch-dir compaction layer, independent of
-  * any maintainer: the size-tiered fold governor (write-amplification
-  * bound), the TWO-PHASE grace-window sweep (call N deletes what call
-  * N−1 made redundant, so concurrent readers pinned to the previous
-  * generation never lose a file mid-scan), cutoff/coverage
-  * bookkeeping, and the reader's view across deferred and executed
-  * folds. */
+  * the ledger: chain resolution, the TWO-PHASE grace-window sweep
+  * (call N deletes what call N−1 made redundant, so concurrent
+  * readers pinned to the previous generation never lose a file
+  * mid-scan), the same-cutoff generation pick, and bucket-pruned
+  * reads. */
 class BatchDirsSpec extends SparkTestBase {
 
   private def writeBatch(dir: String, id: Long, rows: Long,
@@ -27,78 +26,6 @@ class BatchDirsSpec extends SparkTestBase {
     val fs = fsOf(dir)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.map(_.getPath.getName).sorted
-  }
-
-  test("minFoldRatio defers a rewrite for a tiny tail, folds once " +
-    "the tail pays for it; grace dirs are never double-counted and " +
-    "the NEXT call sweeps them") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("bd_tier").toString + "/ix"
-    def total: Long =
-      BatchDirs.readCommitted(spark, dir).map(_.count()).getOrElse(0L)
-    // first fold always proceeds (nothing to rewrite yet); the folded
-    // batch dir survives THIS sweep as grace debris — but the reader
-    // counts its rows exactly once (strictly-above-cutoff rule)
-    writeBatch(dir, 0L, rows = 500)
-    assert(BatchDirs.compact(spark, dir, 0L, "k", nBuckets = 4,
-      minFoldRatio = 0.1) == 0L)
-    assert(names(dir) == Seq("batch=0", "compact=0.n4") && total == 500)
-    // a 1-row tail is far under 10% of 500 — the fold must DEFER:
-    // cutoff stays 0, the tail dir stays, the reader still sees all.
-    // The deferred call still runs the (listing-only) sweep, so the
-    // PREVIOUS generation's grace debris (batch=0) is gone — debris
-    // never outlives one compactor call, deferred or not
-    writeBatch(dir, 1L, rows = 1, offset = 500)
-    assert(BatchDirs.compact(spark, dir, 1L, "k", nBuckets = 4,
-      minFoldRatio = 0.1) == 0L,
-      "tiny tail must not trigger an O(index) rewrite")
-    assert(names(dir) == Seq("batch=1", "compact=0.n4"))
-    assert(total == 501 && BatchDirs.compactedThrough(spark, dir) == 0L)
-    // grow the tail past the ratio: the fold proceeds; the dirs
-    // folded THIS call keep their one-call grace
-    writeBatch(dir, 2L, rows = 500, offset = 501)
-    assert(BatchDirs.compact(spark, dir, 2L, "k", nBuckets = 4,
-      minFoldRatio = 0.1) == 2L)
-    assert(names(dir) ==
-      Seq("batch=1", "batch=2", "compact=0.n4", "compact=2.n4"))
-    assert(total == 1001)
-    // ratio 0 (the default) always folds; generation N's sweep
-    // removes generation N−1's grace debris (batch=1, batch=2,
-    // compact=0.n4)
-    writeBatch(dir, 3L, rows = 1, offset = 1001)
-    assert(BatchDirs.compact(spark, dir, 3L, "k", nBuckets = 4) == 3L)
-    assert(names(dir) ==
-      Seq("batch=3", "compact=2.n4", "compact=3.n4"))
-    assert(total == 1002)
-    // fixpoint: a call with nothing new to fold still sweeps the
-    // last generation's grace debris — the layout converges to ONE
-    // dir and the view never changes
-    assert(BatchDirs.compact(spark, dir, 3L, "k", nBuckets = 4) == 3L)
-    assert(names(dir) == Seq("compact=3.n4") && total == 1002)
-  }
-
-  test("a deferred fold keeps coverage semantics exact: ids above " +
-    "the cutoff stay visible as batch dirs, below stay covered") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("bd_cov").toString + "/ix"
-    writeBatch(dir, 0L, rows = 400)
-    writeBatch(dir, 1L, rows = 400, offset = 400)
-    BatchDirs.compact(spark, dir, 1L, "k", nBuckets = 4,
-      minFoldRatio = 0.1)
-    writeBatch(dir, 2L, rows = 1, offset = 800)
-    BatchDirs.compact(spark, dir, 2L, "k", nBuckets = 4,
-      minFoldRatio = 0.1) // defers
-    assert(BatchDirs.compactedThrough(spark, dir) == 1L)
-    // the committedIds CONTRACT excludes folded ids — only the
-    // uncovered tail is reported (batch=0/1 were folded; whether
-    // their grace dirs were swept yet is irrelevant to the view)
-    assert(BatchDirs.committedIds(spark, dir) == Seq(2L))
-    val df = BatchDirs.readCommitted(spark, dir).get
-    assert(df.count() == 801)
-    // the batch column survives both layouts as a LONG data column
-    assert(df.schema("batch").dataType ==
-      org.apache.spark.sql.types.LongType)
-    assert(df.groupBy("batch").count().count() == 3)
   }
 
   private def commitEmptyDir(base: String, name: String): Unit = {
@@ -140,46 +67,87 @@ class BatchDirsSpec extends SparkTestBase {
     assert(e.getMessage.contains("chain broken"), e.getMessage)
   }
 
+  test("torn fold dirs are invisible; stray batch=tmp debris never " +
+    "wedges a reader, and the sweep folds around it") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("bd_debris").toString + "/ix"
+    val fs = fsOf(dir)
+    def total: Long =
+      BatchDirs.readCommitted(spark, dir).map(_.count()).getOrElse(0L)
+    writeBatch(dir, 0L, rows = 30)
+    writeBatch(dir, 1L, rows = 30, offset = 30)
+    // torn folds (no _SUCCESS) are not coverage and change no read
+    fs.mkdirs(new Path(s"$dir/compact=9.n8"))
+    fs.mkdirs(new Path(s"$dir/l0=9.f-1.n8"))
+    assert(BatchDirs.compactedThrough(spark, dir) == -1L)
+    assert(BatchDirs.committedIds(spark, dir).sorted == Seq(0L, 1L))
+    assert(total == 60)
+    fs.delete(new Path(s"$dir/compact=9.n8"), true)
+    fs.delete(new Path(s"$dir/l0=9.f-1.n8"), true)
+    // a committed non-numeric dir (manual debris): skipped, not thrown
+    commitEmptyDir(dir, "batch=tmp")
+    assert(BatchDirs.committedIds(spark, dir).sorted == Seq(0L, 1L))
+    assert(total == 60)
+    // the fold keeps its inputs one call as grace, the next call
+    // converges — batch=tmp untouched throughout
+    assert(BatchDirs.compactTiered(spark, dir, 1L, "k",
+      nBuckets = 8) == 1L)
+    assert(names(dir) ==
+      Seq("batch=0", "batch=1", "batch=tmp", "l0=1.f-1.n8"))
+    assert(BatchDirs.compactTiered(spark, dir, 1L, "k",
+      nBuckets = 8) == 1L)
+    assert(names(dir) == Seq("batch=tmp", "l0=1.f-1.n8"))
+    assert(total == 60)
+  }
+
   test("a bucket-count change refolds under the same cutoff: the " +
     "superseded modulus survives one sweep, compactInfo picks the " +
     "newest commit deterministically, the next fold converges") {
     val dir = java.nio.file.Files
       .createTempDirectory("bd_nbk").toString + "/ix"
     val fs = fsOf(dir)
+    def fold(upTo: Long, n: Int, maxL0Runs: Int = 64): Long =
+      BatchDirs.compactTiered(spark, dir, upTo, "k", nBuckets = n,
+        majorRatio = 0.0, maxL0Runs = maxL0Runs)
+    // the L1 pick (the name's compactInfo) is generation's compact tier
+    def pick = BatchDirs.generation(spark, dir).compact
+    // seed compact=1.n4: a minor run, then a second fold whose run
+    // would exceed the one-run cap and so merges into the L1
     writeBatch(dir, 0L, rows = 100)
+    assert(fold(0L, 4) == 0L)
     writeBatch(dir, 1L, rows = 100, offset = 100)
-    assert(BatchDirs.compact(spark, dir, 1L, "k", nBuckets = 4) == 1L)
-    assert(BatchDirs.compact(spark, dir, 1L, "k", nBuckets = 4) == 1L)
+    assert(fold(1L, 4, maxL0Runs = 1) == 1L)
+    assert(fold(1L, 4) == 1L)
     assert(names(dir) == Seq("compact=1.n4"))
     // re-bucket at the SAME cutoff: the n4 predecessor must survive
     // this call's sweep — a pruned reader that resolved (1, 4) just
     // before the call still finds the dir its bucket filter was
     // computed for
-    assert(BatchDirs.compact(spark, dir, 1L, "k", nBuckets = 8) == 1L)
+    assert(fold(1L, 8) == 1L)
     assert(names(dir) == Seq("compact=1.n4", "compact=1.n8"))
     // the pick between two complete same-cutoff generations is the
     // newest _SUCCESS mtime (set explicitly — the rule, not FS
     // timestamp granularity, is under test) …
     fs.setTimes(new Path(s"$dir/compact=1.n4/_SUCCESS"), 1000L, -1L)
     fs.setTimes(new Path(s"$dir/compact=1.n8/_SUCCESS"), 2000L, -1L)
-    assert(BatchDirs.compactInfo(spark, dir).contains((1L, 8)))
+    assert(pick.contains((1L, 8)))
     // … including a DOWNSIZE: recency wins, not bucket count …
     fs.setTimes(new Path(s"$dir/compact=1.n4/_SUCCESS"), 3000L, -1L)
-    assert(BatchDirs.compactInfo(spark, dir).contains((1L, 4)))
+    assert(pick.contains((1L, 4)))
     // … and a granularity-collapsed tie breaks to the higher count —
     // deterministic, and safe either way: both generations hold
     // complete coverage, the pick only fixes the pruning modulus
     fs.setTimes(new Path(s"$dir/compact=1.n4/_SUCCESS"), 2000L, -1L)
-    assert(BatchDirs.compactInfo(spark, dir).contains((1L, 8)))
+    assert(pick.contains((1L, 8)))
     // one view across the two-generation state, no double count
     assert(BatchDirs.readCommitted(spark, dir).get.count() == 200)
     // the next fold (new data, resolved against the n8 pick) sweeps
     // the superseded n4 generation; one more call converges fully
     writeBatch(dir, 2L, rows = 50, offset = 200)
-    assert(BatchDirs.compact(spark, dir, 2L, "k", nBuckets = 8) == 2L)
+    assert(fold(2L, 8) == 2L)
     assert(names(dir) ==
       Seq("batch=2", "compact=1.n8", "compact=2.n8"))
-    assert(BatchDirs.compact(spark, dir, 2L, "k", nBuckets = 8) == 2L)
+    assert(fold(2L, 8) == 2L)
     assert(names(dir) == Seq("compact=2.n8"))
     assert(BatchDirs.readCommitted(spark, dir).get.count() == 250)
   }
@@ -189,8 +157,13 @@ class BatchDirsSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("bd_plan").toString + "/ix"
     writeBatch(dir, 0L, rows = 400)
-    assert(BatchDirs.compact(spark, dir, 0L, "k", nBuckets = 4) == 0L)
-    assert(BatchDirs.compact(spark, dir, 0L, "k", nBuckets = 4) == 0L)
+    // the second call sweeps batch=0: the only data left is the
+    // bucketed L0 run
+    assert(BatchDirs.compactTiered(spark, dir, 0L, "k",
+      nBuckets = 4) == 0L)
+    assert(BatchDirs.compactTiered(spark, dir, 0L, "k",
+      nBuckets = 4) == 0L)
+    assert(names(dir) == Seq("l0=0.f-1.n4"))
     // AQE re-instantiates the plan it executes, so the scan whose
     // metrics fill is not the one a pre-execution collect sees —
     // disable it for the metric read (the assertion is about the
@@ -235,65 +208,28 @@ class BatchDirsSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("bd_pin").toString + "/ix"
     writeBatch(dir, 0L, rows = 300)
-    assert(BatchDirs.compact(spark, dir, 0L, "k", nBuckets = 4) == 0L)
+    assert(BatchDirs.compactTiered(spark, dir, 0L, "k",
+      nBuckets = 4) == 0L)
     writeBatch(dir, 1L, rows = 300, offset = 300)
     // a reader resolves the current generation and builds (but does
     // not yet consume) a pruned frame over it — its parquet file
     // listing is fixed HERE
     val gen = BatchDirs.generation(spark, dir)
-    assert(gen.compact.contains((0L, 4)) && gen.l0.isEmpty)
+    assert(gen.compact.isEmpty &&
+      gen.l0 == Seq(BatchDirs.L0Run(-1L, 0L, 4)))
     val pinned = BatchDirs.readCommittedAt(spark, dir, gen,
       pbuckets = Some(0L until 4L)).get
     // a compaction supersedes the generation mid-flight — with a NEW
     // bucket count, the hostile case: modulus AND file layout change
-    assert(BatchDirs.compact(spark, dir, 1L, "k", nBuckets = 8) == 1L)
+    // (the modulus change forces a major merge into compact=1.n8)
+    assert(BatchDirs.compactTiered(spark, dir, 1L, "k",
+      nBuckets = 8) == 1L)
+    assert(BatchDirs.generation(spark, dir).compact.contains((1L, 8)))
     // the pinned frame still opens every file it resolved (the
-    // two-phase sweep kept compact=0.n4 and batch=1 alive one
+    // two-phase sweep kept l0=0.f-1.n4 and batch=1 alive one
     // generation) and returns the exact pre-fold view
     assert(pinned.count() == 600L)
     // a FRESH read resolves the new generation and agrees on content
     assert(BatchDirs.readCommitted(spark, dir).get.count() == 600L)
-  }
-
-  test("the MaxTailDirs backstop forces a governor-deferred fold " +
-    "before the batch-dir tail regrows the O(batches) listing") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("bd_tail").toString + "/ix"
-    val fs = fsOf(dir)
-    // an incompressible base (sha2 strings — sequential longs would
-    // delta-encode to nothing) so 64 one-row tail dirs stay far
-    // under the 10% byte ratio: every defer below is the GOVERNOR
-    // deferring, and only the dir-count backstop can force the fold
-    spark.range(50000)
-      .select(sha2(col("id").cast("string"), 256).as("k"))
-      .coalesce(1).write.parquet(s"$dir/batch=0")
-    assert(BatchDirs.compact(spark, dir, 0L, "k", nBuckets = 4,
-      minFoldRatio = 0.1) == 0L)
-    // one real 1-row batch (string k, matching the base schema),
-    // fs-copied 63 more times: identical content is valid (batch is
-    // a partition column, derived from the dir name) and copying
-    // skips 63 Spark write jobs
-    spark.range(1).select(lit("tail-row").as("k"))
-      .coalesce(1).write.parquet(s"$dir/batch=1")
-    (2L to 63L).foreach { id =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$dir/batch=1"),
-        fs, new Path(s"$dir/batch=$id"), false,
-        spark.sparkContext.hadoopConfiguration)
-    }
-    // 63 deferred dirs: byte ratio says defer, count is under the
-    // backstop — the fold must still defer
-    assert(BatchDirs.compact(spark, dir, 63L, "k", nBuckets = 4,
-      minFoldRatio = 0.1) == 0L,
-      "tail under both bounds must defer")
-    assert(BatchDirs.compactedThrough(spark, dir) == 0L)
-    // the 64th dir reaches the backstop: the fold proceeds even
-    // though the byte ratio alone would keep deferring forever
-    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$dir/batch=1"),
-      fs, new Path(s"$dir/batch=64"), false,
-      spark.sparkContext.hadoopConfiguration)
-    assert(BatchDirs.compact(spark, dir, 64L, "k", nBuckets = 4,
-      minFoldRatio = 0.1) == 64L,
-      "64 deferred dirs must force the fold regardless of byte ratio")
-    assert(BatchDirs.readCommitted(spark, dir).get.count() == 50064L)
   }
 }

@@ -1,63 +1,64 @@
 package graft
 
-import graft.operators.MinHashLsh
-import graft.streaming.{BatchDirs, LshIndexMaintenance}
+import graft.incremental.BatchLedger
+import graft.streaming.BatchDirs
 
-/** REAL-THREAD exercise of the single-compactor contract: an
-  * out-of-band maintenance loop (`compactNow`, `failIfBusy` — fails
-  * loudly on contention) races a cadence-enabled `processBatch`
-  * stream (whose in-band folds defer silently on contention). The
-  * required outcome is serialize-or-fail-loudly, never corrupt: the
-  * final candidate-pair set must equal the batch operator on the
-  * full corpus, bit for bit.
+/** REAL-THREAD exercise of the single-compactor contract over the
+  * work ledger: an out-of-band maintenance loop
+  * (`compactTiered(failIfBusy = true)` — fails loudly on contention)
+  * races a writer that records waves and folds on its own cadence
+  * ([[BatchLedger.fold]], which defers silently on contention), and
+  * `doneKeys` readers race both. The required outcome is
+  * serialize-or-fail-loudly, never corrupt: the final done set must
+  * equal the union of the recorded keys, and every read must be
+  * bracketed by the committed prefixes.
   *
   * Why this is deterministic rather than timing-lucky: the
   * maintenance loop only attempts a fold after the newest committed
-  * batch ADVANCES past its last fold target, and the stream commits
-  * a new batch only after its face-2 read completed — so at most ONE
-  * fold (and no debris-sweeping no-op call: attempts are gated on
-  * new foldable batches) can land inside any single in-flight pinned
-  * read, which is exactly the one-call grace window the two-phase
-  * sweep guarantees. Lease collisions (in-band cadence vs the loop)
-  * resolve as defer (in-band) or a caught IllegalStateException
-  * (loop retries) — both leave the directory state untouched. */
+  * wave ADVANCES past its last fold target, and never folds the
+  * newest wave, so a replayed or in-flight wave keeps its marker.
+  * Lease collisions (in-band cadence vs the loop) resolve as defer
+  * (in-band) or a caught IllegalStateException (loop retries) — both
+  * leave the directory state untouched.
+  *
+  * The test names are those of the contracts these tests carry over
+  * from an earlier index maintainer (`compactNow`, `processBatch`,
+  * `pairsSoFar`); the faces they drive are the ledger's. */
 class CompactionConcurrencySpec extends SparkTestBase {
   import spark.implicits._
 
+  private val Waves = 12
+
+  // three keys per wave plus one shared across consecutive waves, so
+  // the done set needs the distinct across folded tiers and the tail
+  private def keysOf(w: Int): Seq[String] =
+    Seq(s"w$w-a", s"w$w-b", s"w$w-c", s"shared${w / 2}")
+
+  private def doneSet(dir: String): Set[String] =
+    BatchLedger.doneKeys(spark, dir).as[String].collect().toSet
+
   test("compactNow racing a cadence-enabled processBatch stream: " +
     "folds serialize or fail loudly, and the final pair set is exact") {
-    val base = java.nio.file.Files
-      .createTempDirectory("cc_race").toString
-    val (ix, pr) = (s"$base/index", s"$base/pairs")
-    // 12 batches over three near-dup families so pairs form within
-    // and across batches (and across fold boundaries)
-    val docs = (0 until 12).map { i =>
-      val fam = i % 3
-      (i.toLong, s"family $fam shares almost all of its words with " +
-        s"its siblings variant token$i")
-    }
-    val batches = docs.grouped(1).toSeq // one doc per micro-batch
-
-    @volatile var streamDone = false
+    val dir = java.nio.file.Files
+      .createTempDirectory("cc_race").toString + "/ledger"
+    @volatile var writerDone = false
     @volatile var loopFailure: Option[Throwable] = None
     var leaseBusy = 0
     var folds = 0
+    def newest: Long =
+      BatchDirs.committedIds(spark, dir).maxOption.getOrElse(-1L)
     val maintenance = new Thread(() => {
       try {
         var lastFolded = -1L
-        while (!streamDone || {
-          // one final attempt after the stream stops
-          val (_, ids) = BatchDirs.committedState(spark, ix)
-          ids.maxOption.exists(_ - 1 > lastFolded)
-        }) {
-          val (_, ids) = BatchDirs.committedState(spark, ix)
-          val newest = ids.maxOption.getOrElse(-1L)
-          if (newest - 1 > lastFolded) {
+        // one final attempt after the writer stops
+        while (!writerDone || newest - 1 > lastFolded) {
+          val n = newest
+          if (n - 1 > lastFolded) {
             try {
-              val c = LshIndexMaintenance.compactNow(spark, ix, pr,
-                newest - 1, nBuckets = 8)
-              if (c >= 0) { folds += 1; lastFolded = math.max(lastFolded, c) }
-              else lastFolded = math.max(lastFolded, newest - 1)
+              val c = BatchDirs.compactTiered(spark, dir, n - 1, "key",
+                nBuckets = 8, failIfBusy = true)
+              folds += 1
+              lastFolded = math.max(lastFolded, c)
             } catch {
               // the in-band cadence held the lease: fail-loudly is
               // the contract — the loop retries next round
@@ -70,65 +71,43 @@ class CompactionConcurrencySpec extends SparkTestBase {
     }, "oob-compactor")
     maintenance.start()
     try {
-      batches.zipWithIndex.foreach { case (b, id) =>
-        LshIndexMaintenance.processBatch(b.toDF("doc_id", "text"),
-          id.toLong, "doc_id", "text", ix, pr, compactEvery = 4,
-          nBuckets = 8)
+      (0 until Waves).foreach { w =>
+        BatchLedger.record(keysOf(w).toDF("k"), dir, w.toLong)
+        if (w > 0 && w % 4 == 0)
+          BatchLedger.fold(spark, dir, w - 1L, nBuckets = 8)
       }
     } finally {
-      streamDone = true
+      writerDone = true
       maintenance.join(60000)
     }
     assert(!maintenance.isAlive, "maintenance loop wedged")
     assert(loopFailure.isEmpty,
       s"maintenance loop crashed: ${loopFailure.map(_.toString)}")
-    // correctness is the whole point: exact equality with the batch
-    // operator over the final corpus, whatever interleaving happened
-    val streamed = LshIndexMaintenance.pairsSoFar(spark, pr, ix)
-      .as[(Long, Long, Long)].collect().toSet
-    val batchRef = MinHashLsh
-      .candidatePairs(docs.toDF("doc_id", "text"), "doc_id", "text")
-      .as[(Long, Long, Long)].collect().toSet
-    graft.operators.Broadcasting.releaseAll()
-    assert(batchRef.nonEmpty, "fixture produced no candidate pairs")
-    assert(streamed == batchRef,
-      s"interleaved folds corrupted the view:\n" +
-        s"stream=$streamed\nbatch=$batchRef\n" +
-        s"(folds=$folds leaseBusy=$leaseBusy)")
-    // the index is fold-covered and the layout converged to the
-    // bounded shape: tiers + at most a cadence of batch dirs
-    assert(BatchDirs.compactedThrough(spark, ix) >= 0L,
-      s"no fold ever landed (folds=$folds) — the race never happened")
+    // correctness is the whole point: exact equality with the
+    // recorded key union, whatever interleaving happened
+    val want = (0 until Waves).flatMap(keysOf).toSet
+    val got = doneSet(dir)
+    assert(got == want, s"interleaved folds corrupted the view:\n" +
+      s"missing=${want -- got}\nextra=${got -- want}\n" +
+      s"(folds=$folds leaseBusy=$leaseBusy)")
+    assert(folds > 0, s"the out-of-band loop never folded " +
+      s"(leaseBusy=$leaseBusy) — the race never happened")
+    // the out-of-band loop folded up to the wave below the newest
+    assert(BatchDirs.compactedThrough(spark, dir) == Waves - 2L)
   }
 
   test("concurrent pairsSoFar readers racing cadence folds: every " +
     "read is bracketed by the committed prefixes (never silently " +
     "short, never inventing), or fails loudly on an exhausted grace") {
-    val base = java.nio.file.Files
-      .createTempDirectory("cc_readers").toString
-    val (ix, pr) = (s"$base/index", s"$base/pairs")
-    val docs = (0 until 12).map { i =>
-      val fam = i % 3
-      (i.toLong, s"family $fam shares almost all of its words with " +
-        s"its siblings variant token$i")
-    }
-    // the oracle: candidate pairs over each PREFIX of the stream —
-    // by the completeness contract, the union of per-batch outputs
-    // over the first m committed batches equals the batch operator
-    // on the first m docs, so a read that starts after m batches
-    // completed must contain expect(m), and one that ends before m'
-    // completed must stay inside expect(m')
-    val expect: IndexedSeq[Set[(Long, Long, Long)]] =
-      (0 to docs.size).map { m =>
-        if (m == 0) Set.empty[(Long, Long, Long)]
-        else MinHashLsh
-          .candidatePairs(docs.take(m).toDF("doc_id", "text"),
-            "doc_id", "text")
-          .as[(Long, Long, Long)].collect().toSet
-      }
-    assert(expect.last.nonEmpty, "fixture produced no pairs")
+    val dir = java.nio.file.Files
+      .createTempDirectory("cc_readers").toString + "/ledger"
+    // the oracle: the done set after each PREFIX of the waves — a read
+    // that starts after m waves completed must contain expect(m), and
+    // one that ends before m' completed must stay inside expect(m')
+    val expect: IndexedSeq[Set[String]] =
+      (0 to Waves).map(m => (0 until m).flatMap(keysOf).toSet)
     @volatile var completed = 0
-    @volatile var streamDone = false
+    @volatile var writerDone = false
     val violations =
       new java.util.concurrent.ConcurrentLinkedQueue[String]()
     var reads, loudReads = 0
@@ -143,23 +122,21 @@ class CompactionConcurrencySpec extends SparkTestBase {
       false
     }
     val reader = new Thread(() => {
-      while (!streamDone) {
+      while (!writerDone) {
         val m0 = completed
         try {
-          val got = LshIndexMaintenance.pairsSoFar(spark, pr, ix)
-            .as[(Long, Long, Long)].collect().toSet
-          // upper bracket is m1 + 1: the batch IN FLIGHT when the
-          // collect ends commits its output before the driver loop
-          // bumps `completed`, so its pairs may legitimately be
-          // visible one step early — anything beyond that one batch
-          // would be invented
-          val m1 = math.min(completed + 1, docs.size)
+          val got = doneSet(dir)
+          // upper bracket is m1 + 1: the wave IN FLIGHT when the
+          // collect ends commits before the writer bumps `completed`,
+          // so its keys may legitimately be visible one step early —
+          // anything beyond that one wave would be invented
+          val m1 = math.min(completed + 1, Waves)
           reads += 1
           if (!expect(m0).subsetOf(got))
-            violations.add(s"read after $m0 batches MISSING " +
+            violations.add(s"read after $m0 waves MISSING " +
               s"${expect(m0) -- got}")
           if (!got.subsetOf(expect(m1)))
-            violations.add(s"read inside $m1 batches INVENTED " +
+            violations.add(s"read inside $m1 waves INVENTED " +
               s"${got -- expect(m1)}")
         } catch {
           // a lazy read overlapping two compactor calls exhausts its
@@ -174,17 +151,17 @@ class CompactionConcurrencySpec extends SparkTestBase {
         }
         Thread.sleep(2)
       }
-    }, "pairs-reader")
+    }, "done-reader")
     reader.start()
     try {
-      docs.zipWithIndex.foreach { case (d, id) =>
-        LshIndexMaintenance.processBatch(Seq(d).toDF("doc_id", "text"),
-          id.toLong, "doc_id", "text", ix, pr, compactEvery = 3,
-          nBuckets = 8)
-        completed = id + 1
+      (0 until Waves).foreach { w =>
+        BatchLedger.record(keysOf(w).toDF("k"), dir, w.toLong)
+        if (w > 0 && w % 3 == 0)
+          BatchLedger.fold(spark, dir, w - 1L, nBuckets = 8)
+        completed = w + 1
       }
     } finally {
-      streamDone = true
+      writerDone = true
       reader.join(60000)
     }
     assert(!reader.isAlive, "reader thread wedged")
@@ -193,9 +170,7 @@ class CompactionConcurrencySpec extends SparkTestBase {
       s"\n(reads=$reads loud=$loudReads)")
     assert(reads >= 3, s"only $reads successful reads — the race " +
       "never exercised the reader path")
-    // and the settled view is the full batch answer
-    assert(LshIndexMaintenance.pairsSoFar(spark, pr, ix)
-      .as[(Long, Long, Long)].collect().toSet == expect.last)
-    graft.operators.Broadcasting.releaseAll()
+    // and the settled view is the full recorded union
+    assert(doneSet(dir) == expect.last)
   }
 }

@@ -1,18 +1,16 @@
 package graft
 
-import graft.operators.IvfIndex
-import graft.streaming.{BatchDirs, IvfIndexMaintenance,
-  LshIndexMaintenance}
+import graft.incremental.BatchLedger
+import graft.streaming.BatchDirs
 import org.apache.spark.sql.functions._
 
 /** The consumption-deadline contract of lazy reads over the
-  * compacting layout, and its opt-out: a frame built by a read face
-  * is pinned to the files it resolved, which the two-phase sweep
-  * keeps alive for ONE subsequent compactor call — holding it lazy
-  * across TWO folds hits swept files (FileNotFoundException:
-  * crash/retry, never a silent wrong answer), while the
-  * `materialize = true` face (an eager local checkpoint) detaches
-  * the result from the files and survives any number of folds. */
+  * compacting layout: a frame built by a read face is pinned to the
+  * files it resolved, which the two-phase sweep keeps alive for ONE
+  * subsequent compactor call — holding it lazy across TWO folds hits
+  * swept files (FileNotFoundException: crash/retry, never a silent
+  * wrong answer), and a pinned generation held that long is rejected
+  * by the exactness guard. */
 class PinnedReadSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -27,86 +25,41 @@ class PinnedReadSpec extends SparkTestBase {
     false
   }
 
-  private val fams = Seq(
-    0L -> "alpha beta gamma delta epsilon zeta eta theta root",
-    1L -> "alpha beta gamma delta epsilon zeta eta theta leaf",
-    2L -> "totally different words about synthesizers and tape")
-
+  // The name is the one this contract had over an earlier index
+  // maintainer; the faces are now the ledger's readers, and the
+  // materialized escape is gone: a consumer that must hold rows past
+  // the deadline writes them out itself.
   test("pairsFor: a lazy frame dies (FNF) when held across two " +
     "folds; the materialized face survives") {
-    val base = java.nio.file.Files
-      .createTempDirectory("pin_lsh").toString
-    val (ix, pr) = (s"$base/index", s"$base/pairs")
-    def run(docs: Seq[(Long, String)], id: Long): Unit =
-      LshIndexMaintenance.processBatch(docs.toDF("doc_id", "text"),
-        id, "doc_id", "text", ix, pr, compactEvery = 0, nBuckets = 8)
-    run(fams.take(2), 0L)
-    run(fams.drop(2), 1L)
-    val expected = LshIndexMaintenance.pairsFor(spark, pr, ix, Seq(0L))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(expected.nonEmpty, "fixture produced no pairs for doc 0")
-    // two handles over the SAME state: one lazy, one materialized
-    val lazyPairs = LshIndexMaintenance.pairsFor(spark, pr, ix, Seq(0L))
-    val matPairs = LshIndexMaintenance.pairsFor(spark, pr, ix, Seq(0L),
-      materialize = true)
-    // two folds land while the handles are held: fold 1 covers the
-    // resolved batch dirs (they keep one call of grace), fold 2's
-    // sweep deletes them — the documented deadline is now exhausted
-    assert(LshIndexMaintenance.compactNow(spark, ix, pr, 0L, 8) == 0L)
-    // the filler batch shares nothing with the fixture families, so
-    // the expected pair set is unchanged by it
-    run(Seq(3L -> "woodwind maintenance schedules and reed shaving"),
-      2L)
-    assert(LshIndexMaintenance.compactNow(spark, ix, pr, 1L, 8) == 1L)
-    val ex = intercept[Exception] { lazyPairs.collect() }
-    assert(isFnf(ex),
-      s"expected a FileNotFoundException-caused failure, got: $ex")
-    // the materialized handle still answers, exactly
-    assert(matPairs.as[(Long, Long, Long)].collect().toSet == expected)
-    // and a FRESH read over the folded layout agrees
-    assert(LshIndexMaintenance.pairsFor(spark, pr, ix, Seq(0L))
-      .as[(Long, Long, Long)].collect().toSet == expected)
-  }
-
-  test("searchPruned: same deadline, same materialized escape") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("pin_ivf").toString + "/index"
-    val corpus = graft.operators.SyntheticEmbeddings
-      .clustered(spark, n = 60, dims = 8, centers = 4, sep = 6.0)
-      .select("vec_id", "embedding")
-    val centroids = IvfIndex.buildCentroids(
-      corpus.filter(col("vec_id") < 20), k = 4, iters = 2)
-    IvfIndexMaintenance.processBatch(
-      corpus.filter(col("vec_id") < 40), 0L, centroids, dir)
-    IvfIndexMaintenance.processBatch(
-      corpus.filter(col("vec_id") >= 40 && col("vec_id") < 50),
-      1L, centroids, dir)
-    // fold once so the pruned face actually resolves a generation
-    assert(IvfIndexMaintenance.compactNow(spark, dir, 0L, 8) == 0L)
-    val probes = corpus.filter(col("vec_id").isin(1L, 45L))
-    val expected = IvfIndexMaintenance
-      .search(spark, dir, centroids, probes, nProbe = 2, topK = 3)
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    val lazySearch = IvfIndexMaintenance.searchPruned(
-      spark, dir, centroids, probes, nProbe = 2, topK = 3)
-    val matSearch = IvfIndexMaintenance.searchPruned(
-      spark, dir, centroids, probes, nProbe = 2, topK = 3,
-      materialize = true)
-    // two more folds: the generation (and tail) the handles pinned
-    // is superseded by the first and swept by the second
-    IvfIndexMaintenance.processBatch(
-      corpus.filter(col("vec_id") >= 50 && col("vec_id") < 55),
-      2L, centroids, dir)
-    assert(IvfIndexMaintenance.compactNow(spark, dir, 1L, 8) == 1L)
-    IvfIndexMaintenance.processBatch(
-      corpus.filter(col("vec_id") >= 55), 3L, centroids, dir)
-    assert(IvfIndexMaintenance.compactNow(spark, dir, 2L, 8) == 2L)
-    val ex = intercept[Exception] { lazySearch.collect() }
-    assert(isFnf(ex),
-      s"expected a FileNotFoundException-caused failure, got: $ex")
-    assert(matSearch.as[(Long, Long, Long, Long)].collect().toSeq
-      == expected, "materialized search handle diverged")
-    graft.operators.Broadcasting.releaseAll()
+    val d = java.nio.file.Files
+      .createTempDirectory("pin_ledger").toString + "/ledger"
+    BatchLedger.record(Seq("a", "b").toDF("k"), d, 0L)
+    BatchLedger.record(Seq("c").toDF("k"), d, 1L)
+    BatchLedger.record(Seq("e").toDF("k"), d, 2L)
+    val asked = Seq("a", "c", "e", "nope")
+    val expected = Set("a", "c", "e")
+    // two lazy handles over the unfolded state: the point lookup and
+    // the whole committed view, both listing batch=0..2
+    val lazyDone = BatchLedger.doneOf(spark, d, asked)
+    val lazyAll = BatchDirs.readCommitted(spark, d).get
+    // ONE fold inside the deadline: the folded batch dirs keep their
+    // grace, so a handle built before it still answers exactly
+    assert(BatchLedger.fold(spark, d, 1L, nBuckets = 4) == 1L)
+    assert(lazyDone.as[String].collect().toSet == expected)
+    // a SECOND fold sweeps batch=0/1 (the first fold's inputs): the
+    // deadline is exhausted and both handles fail loudly
+    BatchLedger.record(Seq("f").toDF("k"), d, 3L)
+    assert(BatchLedger.fold(spark, d, 2L, nBuckets = 4) == 2L)
+    Seq(lazyDone, lazyAll.select("key")).foreach { h =>
+      val ex = intercept[Exception] { h.collect() }
+      assert(isFnf(ex),
+        s"expected a FileNotFoundException-caused failure, got: $ex")
+    }
+    // and a FRESH read over the folded layout is exact
+    assert(BatchLedger.doneOf(spark, d, asked).as[String].collect()
+      .toSet == expected)
+    assert(BatchLedger.doneKeys(spark, d).as[String].collect().toSet
+      == Set("a", "b", "c", "e", "f"))
   }
 
   test("readCommittedAt rejects a generation that outlived its " +
@@ -143,35 +96,5 @@ class PinnedReadSpec extends SparkTestBase {
     assert(ex.getMessage.contains("grace window"), ex.getMessage)
     // a fresh resolve reads everything
     assert(BatchDirs.readCommitted(spark, dir).get.count() == 300L)
-  }
-
-  test("materializedTo: the durable handle survives folds AND lives " +
-    "in the caller's own path, outside every sweep") {
-    val base = java.nio.file.Files
-      .createTempDirectory("pin_matto").toString
-    val (ix, pr) = (s"$base/index", s"$base/pairs")
-    def run(docs: Seq[(Long, String)], id: Long): Unit =
-      LshIndexMaintenance.processBatch(docs.toDF("doc_id", "text"),
-        id, "doc_id", "text", ix, pr, compactEvery = 0, nBuckets = 8)
-    run(fams.take(2), 0L)
-    run(fams.drop(2), 1L)
-    val expected = LshIndexMaintenance.pairsFor(spark, pr, ix, Seq(0L))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(expected.nonEmpty)
-    val durable = BatchDirs.materializedTo(
-      LshIndexMaintenance.pairsFor(spark, pr, ix, Seq(0L)),
-      s"$base/handle")
-    // exhaust the grace window: two folds, exactly as in the lazy
-    // test above — the durable handle must still answer from disk
-    assert(LshIndexMaintenance.compactNow(spark, ix, pr, 0L, 8) == 0L)
-    run(Seq(3L -> "woodwind maintenance schedules and reed shaving"),
-      2L)
-    assert(LshIndexMaintenance.compactNow(spark, ix, pr, 1L, 8) == 1L)
-    assert(durable.as[(Long, Long, Long)].collect().toSet == expected)
-    // and the handle's files are the caller's: under base/handle,
-    // not under the compacted layout
-    assert(durable.inputFiles.nonEmpty &&
-      durable.inputFiles.forall(_.contains("/handle")),
-      durable.inputFiles.mkString(","))
   }
 }

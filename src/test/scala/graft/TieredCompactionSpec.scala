@@ -6,8 +6,7 @@ import org.apache.hadoop.fs.Path
 
 /** Unit behavior of the TIERED (L0/L1) fold path and the
   * single-compactor lease: minor folds consolidate the batch tail
-  * into L0 runs WITHOUT rewriting the compacted table (the write cost
-  * the single-tier face pays on every backstop-forced fold), major
+  * into L0 runs WITHOUT rewriting the compacted table, major
   * merges trigger deterministically on the run-count backstop and a
   * bucket-count change, and the lease defers or fails concurrent
   * folds instead of corrupting. Byte-ratio major triggers are pinned
@@ -45,10 +44,14 @@ class TieredCompactionSpec extends SparkTestBase {
     val dir = java.nio.file.Files
       .createTempDirectory("tc_minor").toString + "/ix"
     val fs = fsOf(dir)
-    // seed an L1 via the single-tier face
+    // seed an L1: a minor run for batch 0, then a fold whose run
+    // would exceed the one-run cap and so merges into compact=1.n4
     writeBatch(dir, 0L, rows = 300)
+    assert(BatchDirs.compactTiered(spark, dir, 0L, "k", nBuckets = 4,
+      majorRatio = Never) == 0L)
     writeBatch(dir, 1L, rows = 300, offset = 300)
-    assert(BatchDirs.compact(spark, dir, 1L, "k", nBuckets = 4) == 1L)
+    assert(BatchDirs.compactTiered(spark, dir, 1L, "k", nBuckets = 4,
+      majorRatio = Never, maxL0Runs = 1) == 1L)
     // the compacted table's exact file set, with write timestamps —
     // the no-rewrite assertion below is physical, not inferred
     def compactFiles: Map[String, Long] = {
@@ -96,6 +99,13 @@ class TieredCompactionSpec extends SparkTestBase {
     // ratio 0 = any nonempty upper tier triggers the major: one call
     // merges L1 + both L0 runs + the new batch into a fresh compact
     writeBatch(dir, 5L, rows = 10, offset = 750)
+    // the batch id reads as ONE long data column across the folded
+    // tiers and the raw tail (a partition-inferred int, uncast, would
+    // not union cleanly)
+    val mixed = BatchDirs.readCommitted(spark, dir).get
+    assert(mixed.schema("batch").dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(mixed.select("batch").distinct().count() == 6)
     assert(BatchDirs.compactTiered(spark, dir, 5L, "k", nBuckets = 4,
       majorRatio = 0.0) == 5L)
     val gen2 = BatchDirs.generation(spark, dir)
@@ -224,12 +234,8 @@ class TieredCompactionSpec extends SparkTestBase {
         failIfBusy = true)
     }
     assert(ex.getMessage.contains("lease"), ex.getMessage)
-    // the same contention contract on the single-tier face
-    assert(BatchDirs.compact(spark, dir, 0L, "k", nBuckets = 4) == -1L)
-    intercept[IllegalStateException] {
-      BatchDirs.compact(spark, dir, 0L, "k", nBuckets = 4,
-        failIfBusy = true)
-    }
+    // a failed call left the marker and the dir untouched too
+    assert(names(dir) == before)
     // a marker older than the stale horizon belongs to a crashed
     // compactor: taken over, the fold proceeds, and the lease is
     // released afterwards
@@ -240,35 +246,5 @@ class TieredCompactionSpec extends SparkTestBase {
     assert(!fs.exists(new Path(dir, BatchDirs.LeaseName)),
       "the lease must be released after the fold")
     assert(total(dir) == 50)
-  }
-
-  test("foldableUpTo after a quiet period: everything already " +
-    "folded is a no-op, not a crash; an unfolded tail still " +
-    "enforces the strictly-below-newest rule") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("tc_quiet").toString + "/ix"
-    writeBatch(dir, 0L, rows = 10)
-    writeBatch(dir, 1L, rows = 10, offset = 10)
-    // with a tail present: newest is protected, below it is foldable
-    assert(BatchDirs.foldableUpTo(spark, dir, 0L))
-    intercept[IllegalArgumentException] {
-      BatchDirs.foldableUpTo(spark, dir, 1L)
-    }
-    // fold EVERYTHING (an in-band-style fold covers the newest)
-    assert(BatchDirs.compactTiered(spark, dir, 1L, "k",
-      nBuckets = 4) == 1L)
-    assert(BatchDirs.committedIds(spark, dir).isEmpty)
-    // the maintenance cron re-runs after the quiet period: nothing
-    // left to fold must be a graceful no-op at ANY upTo — this was a
-    // crash (upTo ≥ coverage threw) before the ids-empty guard
-    assert(!BatchDirs.foldableUpTo(spark, dir, 1L))
-    assert(!BatchDirs.foldableUpTo(spark, dir, 100L))
-    // and new data re-arms the guard as usual
-    writeBatch(dir, 2L, rows = 10, offset = 20)
-    writeBatch(dir, 3L, rows = 10, offset = 30)
-    assert(BatchDirs.foldableUpTo(spark, dir, 2L))
-    intercept[IllegalArgumentException] {
-      BatchDirs.foldableUpTo(spark, dir, 3L)
-    }
   }
 }

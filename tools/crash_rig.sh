@@ -50,7 +50,11 @@ for d in "${KILLS[@]}"; do
   run "$BASE/crash" "$BASE/ledger_crash" "$BASE/crash_$k.log" &
   pid=$!
   sleep "$d"
-  if kill -9 "$pid" 2>/dev/null; then
+  # $! is the subshell running run(), whose child is the JVM: SIGKILL
+  # the JVM too, or the "killed" run keeps writing under the next one
+  if kill -0 "$pid" 2>/dev/null; then
+    pkill -9 -P "$pid" 2>/dev/null
+    kill -9 "$pid" 2>/dev/null
     wait "$pid" 2>/dev/null
     state "kill #$k after ${d}s" "$BASE/crash" "$BASE/ledger_crash"
   else
