@@ -1,6 +1,6 @@
 package graft
 
-import graft.incremental.{BatchLedger, Ledger}
+import graft.incremental.BatchLedger
 import graft.pipelines.{MongoMarksPipeline, TtlFileSink}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -9,29 +9,25 @@ import org.apache.spark.sql.functions._
   * files, reported as marks/sec — the reference's only runtime metric
   * (mongodb_to_rdf.py:799-821 computes exactly this for its 20-process
   * pool; ~4B marks total). Args: [nMarks] [nAnalyses] [outDir]
-  * [ledgerDir].
+  * [ledgerDir] [nWaves] [foldEvery].
   *
   * Marks are synthesized deterministically from spark.range — schema
   * identical to MongoMarksPipeline.markSchema, ~5 polygon points per
   * mark, 1k marks per (exec, image) batch like production.
   *
-  * With a 4th arg the bench runs the INCREMENTAL face at the same
-  * scale (T2/T4 semantics beyond spec size): two full passes sharing
-  * one work ledger keyed by execution_id — run 1 processes every
-  * mark and records its executions; run 2 anti-joins the ledger
-  * first (Ledger.pending, the reference's should_process check,
-  * mongodb_to_rdf.py:149-152) and must find ~0 pending marks. Two
-  * JSON lines are printed, each carrying n_pending.
-  *
-  * With a 5th arg (nWaves) the incremental face runs as nWaves
-  * WAVES with LSM ledger maintenance in the loop — the
-  * compacted-regime figure for the reference-shaped pipeline: each
-  * wave sees a growing slice of the corpus, anti-joins the
-  * BatchLedger for the still-pending executions, processes exactly
-  * those marks, records the wave, and folds the ledger tail
+  * With a ledger dir the bench runs the INCREMENTAL face (T2/T4
+  * semantics beyond spec size) as nWaves WAVES (default 1) with LSM
+  * ledger maintenance in the loop — the compacted-regime figure for
+  * the reference-shaped pipeline: each wave sees a growing slice of
+  * the corpus, anti-joins the BatchLedger for the still-pending
+  * executions (the reference's should_process check,
+  * mongodb_to_rdf.py:149-152), processes exactly those marks,
+  * records the wave, and folds the ledger tail
   * (BatchDirs.compactTiered on the never-the-newest cadence). One
   * JSON line reports overall marks/sec plus the fold count and the
-  * final (bounded) ledger dir count.
+  * final (bounded) ledger dir count. Rerunning the same command over
+  * the same ledger is the resume figure: every execution is done, so
+  * it reports n_processed = 0 (tools/crash_rig.sh's final rerun).
   */
 object EtlBench {
   def main(args: Array[String]): Unit = {
@@ -71,12 +67,9 @@ object EtlBench {
         // batch_num-in-key construction should keep the hot group's
         // work split into BatchSize-bounded files)
         val tally = new TaskTally(spark.sparkContext)
-        // SPARK_GRAFT_SKEW_SAFE=1 engages the distributed-rank batch
-        // numbering (same output, hot-group sort split into buckets)
-        val skewSafe = sys.env.get("SPARK_GRAFT_SKEW_SAFE").contains("1")
         val t0 = System.nanoTime()
         val docs = MongoMarksPipeline.documents(marks, analyses, hashes,
-          batchSize, skewSafe)
+          batchSize)
         TtlFileSink.write(docs.select("rel_path", "ttl"), outDir)
         val secs = (System.nanoTime() - t0) / 1e9
         val rate = nMarks / secs
@@ -112,12 +105,11 @@ object EtlBench {
           s""""unit":"marks/sec","n_marks":$nMarks,"secs":$secs,""" +
           s""""n_files":$nFiles,"batch_size":$batchSize,""" +
           s""""n_analyses":$nAnalyses""" +
-          (if (skewSafe) s""","skew_safe":true""" else "") +
           skew.map(s => s""","skew":"$s"""").getOrElse("") +
           hotShare.map(h => s""","hot_share":$h""").getOrElse("") +
           s""","task_spread":{$spread}}""")
-      case Some(ledgerDir) if args.length > 4 =>
-        val nWaves = args(4).toInt
+      case Some(ledgerDir) =>
+        val nWaves = args.lift(4).map(_.toInt).getOrElse(1)
         // foldEvery (6th arg, default 1, 0 = never) is the A/B lever
         // isolating the fold's share of the wave cost
         val foldEvery = args.lift(5).map(_.toInt).getOrElse(1)
@@ -196,26 +188,6 @@ object EtlBench {
           s""""n_processed":$processed,"secs":$secs,""" +
           s""""swept_temps":$swept,""" +
           s""""n_analyses":$nAnalyses}""")
-      case Some(ledgerDir) =>
-        Seq(1, 2).foreach { run =>
-          val t0 = System.nanoTime()
-          val work = marks.withColumn("_exec",
-            col("provenance.analysis.execution_id"))
-          val todo = Ledger.pending(work, ledgerDir, "_exec")
-          val nPending = todo.count()
-          if (nPending > 0) {
-            val docs = MongoMarksPipeline.documents(
-              todo.drop("_exec"), analyses, hashes)
-            TtlFileSink.write(docs.select("rel_path", "ttl"),
-              s"$outDir/run$run")
-            Ledger.record(todo.select("_exec").distinct(), ledgerDir,
-              Ledger.Completed, s"etlbench-run$run")
-          }
-          val secs = (System.nanoTime() - t0) / 1e9
-          println(s"""{"metric":"etl_marks_per_sec","value":${nPending / secs},""" +
-            s""""unit":"marks/sec","run":$run,"n_pending":$nPending,""" +
-            s""""secs":$secs,"n_marks":$nMarks,"n_analyses":$nAnalyses}""")
-        }
     }
     spark.stop()
   }

@@ -28,17 +28,21 @@ object Examples {
   }
 
   /** MIGRATION §3: marks + analyses (+ real image hashes) → batched
-    * TTL with ledger bookkeeping. */
+    * TTL with ledger bookkeeping. Each call is one ledger wave,
+    * numbered one past the newest committed wave: a crashed call
+    * re-runs its uncommitted wave id against an unchanged ledger, so
+    * the pending ids it records are the same key set. */
   def mongoEtl(spark: SparkSession, marksPath: String,
     analysesPath: String, svsGlob: String, outDir: String,
     ledgerDir: String): Unit = {
     import graft.pipelines.{HashRepairJob, MongoMarksPipeline => M, TtlFileSink}
-    import graft.incremental.Ledger
+    import graft.incremental.BatchLedger
+    val wave = BatchLedger.nextWave(spark, ledgerDir)
     // Persist the pending set so the sink write and the ledger record
     // see the SAME snapshot (pending re-evaluates the ledger dir
     // otherwise), and record the ~4M keys distributively — never
     // collect them to the driver.
-    val analyses = Ledger.pending(
+    val analyses = BatchLedger.pending(
       M.readAnalyses(spark, analysesPath), ledgerDir, "_id").persist()
     try {
       // buildHashLookup already returns (slide, real_hash) keyed the
@@ -47,7 +51,7 @@ object Examples {
       val docs = M.documents(M.readMarks(spark, marksPath), analyses,
         hashes)
       TtlFileSink.write(docs.select("rel_path", "ttl"), outDir)
-      Ledger.record(analyses.select("_id"), ledgerDir)
+      BatchLedger.record(analyses.select("_id"), ledgerDir, wave)
     } finally {
       analyses.unpersist()
       // documents() size-gated the slide-hash lookup via

@@ -4,31 +4,35 @@ import graft.streaming.BatchDirs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The work-ledger contract of [[Ledger]] over the [[BatchDirs]]
-  * layout — for LONG-LIVED incremental jobs (a nightly ETL over the
-  * reference's ~4M analyses, a resumable backfill) whose ledger
-  * accrues appends for months. [[Ledger]]'s append-only directory is
-  * the right shape for a handful of runs, but its [[Ledger.compact]]
-  * is a single-shot whole-ledger rewrite with a no-concurrent-reader
-  * caveat; here each wave's keys land in `<dir>/batch=<waveId>/`
-  * (Spark's `_SUCCESS` is the commit marker, so a replayed wave
-  * overwrites its own directory — exactly-once per wave id), and
-  * [[fold]] = [[BatchDirs.compactTiered]] keyed on `key` keeps the
-  * listing bounded at O(compact + log runs + one cadence of waves)
-  * with O(tail) minor folds — the ledger inherits the layout's
-  * measured LSM write/read bounds, its single-compactor
-  * lease, and its two-phase grace-window sweep instead of a bespoke
-  * rewrite. Readers and folds interleave safely (the grace window);
-  * the key-bucketed layout lets the point-lookup face [[doneOf]]
-  * ("is THIS analysis done?") prune to the asked keys' buckets.
+/** Durable work ledger: the engine's replacement for the reference's
+  * checkpoint files (T2, mongo-etl/mongodb_to_rdf.py:114-192 and
+  * utils/checkpoint.py:9-235 — append + fsync text files of completed/
+  * failed ids), laid out as [[BatchDirs]] waves so a ledger that
+  * accrues appends for months (a nightly ETL over the reference's ~4M
+  * analyses, a resumable backfill) stays cheap to list and read.
   *
-  * Semantics match [[Ledger]]: at-least-once work, a key is done once
-  * recorded with a terminal status (completed/failed — the
-  * reference's should_process, mongodb_to_rdf.py:149-152), selection
-  * is the anti-join. The `batch` wave id is bookkeeping, not
-  * ordering: doneKeys unions every committed wave.
+  * Each wave's keys land in `<dir>/batch=<waveId>/` (Spark's
+  * `_SUCCESS` is the commit marker, so a replayed wave overwrites its
+  * own directory — exactly-once per wave id), and [[fold]] =
+  * [[BatchDirs.compactTiered]] keyed on `key` keeps the listing
+  * bounded at O(compact + log runs + one cadence of waves) with
+  * O(tail) minor folds — the ledger inherits the layout's measured
+  * LSM write/read bounds, its single-compactor lease, and its
+  * two-phase grace-window sweep. Readers and folds interleave safely
+  * (the grace window); the key-bucketed layout lets the point-lookup
+  * face [[doneOf]] ("is THIS analysis done?") prune to the asked
+  * keys' buckets.
+  *
+  * Semantics: at-least-once work (a killed wave is absent from the
+  * ledger and gets redone), a key is done once recorded with a
+  * terminal status (completed/failed — the reference's
+  * should_process, mongodb_to_rdf.py:149-152), selection is the
+  * anti-join. The `batch` wave id is bookkeeping, not ordering:
+  * doneKeys unions every committed wave.
   */
 object BatchLedger {
+  val Completed = "completed"
+  val Failed = "failed"
 
   /** Append one wave's keys (FIRST column, cast to string) under
     * `batch=<waveId>`. Distributive — never collects. Re-running a
@@ -43,17 +47,33 @@ object BatchLedger {
     * (each execution then cascades one wave forward per rerun — the
     * failure tools/crash_rig.sh's census caught in r20). */
   def record(keys: DataFrame, ledgerDir: String, waveId: Long,
-    status: String = Ledger.Completed, runId: String = ""): Unit =
+    status: String = Completed, runId: String = ""): Unit = {
+    // batch=-1 would commit under a name no reader lists: its keys
+    // would silently never be done
+    require(waveId >= 0,
+      s"BatchLedger.record: wave id $waveId is negative; wave ids " +
+        "are the non-negative batch=<n> dirs readers list")
     keys.select(col(keys.columns.head).cast("string").as("key"))
       .withColumn("status", lit(status))
       .withColumn("run_id", lit(runId))
       .write.mode("overwrite").parquet(s"$ledgerDir/batch=$waveId")
+  }
 
-  /** All keys recorded with the given statuses across every committed
-    * wave — folded tiers and raw tail in one frame. */
+  /** The id one past the newest committed wave (0 for an empty
+    * ledger): the wave id of a job that records one wave per run. An
+    * id it returns re-runs only while its directory is uncommitted,
+    * when the ledger state — and so a pending-derived key set — is
+    * the one its first attempt saw, which keeps [[record]]'s
+    * precondition. */
+  def nextWave(spark: SparkSession, ledgerDir: String): Long =
+    (BatchDirs.committedIds(spark, ledgerDir) :+
+      BatchDirs.compactedThrough(spark, ledgerDir)).max + 1
+
+  /** All keys recorded with the given statuses (default: anything
+    * that should NOT be reprocessed — completed or failed) across
+    * every committed wave — folded tiers and raw tail in one frame. */
   def doneKeys(spark: SparkSession, ledgerDir: String,
-    statuses: Seq[String] = Seq(Ledger.Completed, Ledger.Failed))
-    : DataFrame =
+    statuses: Seq[String] = Seq(Completed, Failed)): DataFrame =
     BatchDirs.readCommitted(spark, ledgerDir) match {
       case None =>
         import spark.implicits._
@@ -63,9 +83,12 @@ object BatchLedger {
           .select("key").distinct()
     }
 
-  /** Work still to do = work anti-join done (unhinted, like
-    * [[Ledger.pending]]: AQE broadcasts while the done side is small
-    * and degrades to a shuffle join instead of OOMing past it). */
+  /** P12/J5: the work still to do = work anti-join done. `keyCol`
+    * names the work table's key column. No broadcast hint: an
+    * explicit hint is honored REGARDLESS of size, so a ledger that
+    * outgrew the threshold would OOM the driver instead of degrading.
+    * Unhinted, AQE broadcasts while the done side is small and falls
+    * back to a shuffle join when it is not. */
   def pending(work: DataFrame, ledgerDir: String, keyCol: String)
     : DataFrame = {
     val done = doneKeys(work.sparkSession, ledgerDir)
@@ -85,7 +108,7 @@ object BatchLedger {
     * were computed for ([[BatchDirs.readCommittedAt]]). */
   def doneOf(spark: SparkSession, ledgerDir: String,
     keys: Seq[String],
-    statuses: Seq[String] = Seq(Ledger.Completed, Ledger.Failed))
+    statuses: Seq[String] = Seq(Completed, Failed))
     : DataFrame = {
     import spark.implicits._
     val gen = BatchDirs.generation(spark, ledgerDir)

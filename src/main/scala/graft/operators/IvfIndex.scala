@@ -23,13 +23,12 @@ import org.apache.spark.sql.functions._
   *    Lloyd round (k×dim floats — driver-safe by design). Chaining
   *    rounds lazily instead would re-execute every prior round's full
   *    corpus assignment each iteration (the plan doubles per round);
-  *  - the per-vector argmin is an AGGREGATE (`max(struct(sim,
-  *    -cluster_id, …))`, the a1_argmax pattern) with map-side partial
-  *    aggregation, so the exchange carries one row per vector — never
-  *    a Window over the n×k scored frame, which would shuffle and
-  *    sort n×k rows on every assignment pass. (Struct max buffers
-  *    aren't hash-aggregable, so Spark plans a SortAggregate; the
-  *    sort is per-partition map-side, the shuffle stays n rows.)
+  *  - the per-vector argmin is a ROW-LOCAL `greatest` over one
+  *    `struct(sim, -cluster_id)` per centroid (the centroids are
+  *    driver-local literals, see `assign`), so an assignment pass is a
+  *    narrow projection with no shuffle — never a Window or aggregate
+  *    over the n×k scored frame, which would shuffle n×k rows on
+  *    every pass. Ties on sim go to the lower cluster_id.
   */
 object IvfIndex {
 

@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB: the two base-side terms are delta⋈base equi-joins —
   * shuffle or broadcast the DELTA, and prune the base-side SCAN with
-  * a semi/Bloom filter on the delta's join keys before it (the
-  * `pendingBloom` pattern in `Ledger`); the base never re-joins the
-  * base. [[applyDelta]]'s multiplicity collapse groups by the view
-  * row — view-sized, but at production that merge is the same
+  * a semi/Bloom filter on the delta's join keys before it
+  * ([[BloomJoin]]); the base never re-joins the base.
+  * [[applyDelta]]'s multiplicity collapse groups by the view row —
+  * view-sized, but at production that merge is the same
   * partitioned upsert the view's storage already does per refresh
   * (`Upsert`/`Scd2`); here it is spelled relationally so the oracle
   * can check it.

@@ -1581,7 +1581,7 @@ object RelationalQueries {
     // cross-table face). Orphans are synthesized (%101 keys shifted
     // out of the orders key space) so the census is non-trivial;
     // plan = one unforced left-anti join (AQE owns broadcast-vs-
-    // shuffle, the Ledger.pending contract). The oracle derives the
+    // shuffle, the BatchLedger.pending contract). The oracle derives the
     // expected counts CLOSED-FORM from the key predicate — no anti
     // join at all.
     "p18_ref_integrity" -> ((s, dir) => {

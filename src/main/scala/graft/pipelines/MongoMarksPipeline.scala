@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   *  - Drupal hash memo-cache (J4/X5) → precomputed slide→hash lookup
   *    broadcast-joined once, `coalesce` fallback to sha2(imageid) and
   *    a hal:hashMissing flag (mongodb_to_rdf.py:282-301,340-342).
-  *  - checkpoint anti-join (J5/T2) belongs to incremental.Ledger.
+  *  - checkpoint anti-join (J5/T2) belongs to incremental.BatchLedger.
   *
   * Scale: the mark→TTL map is narrow; the only wide ops are the join
   * (no fact shuffle while the analysis side is broadcast) and the
@@ -31,16 +31,11 @@ import org.apache.spark.sql.types._
   * territory; the final grouping key includes batch_num, so no group
   * ever exceeds BATCH_SIZE rows when assembling documents.
   *
-  * For a SKEWED corpus (one analysis holding a large share of all
-  * marks — the r20 Zipf rung measured a 4.5× straggler task at a 23%
-  * hot share, because the row_number window sorts each (exec, image)
-  * group in ONE task), `skewSafe = true` switches batch numbering to
-  * a distributed exact rank: sampled monotone mark_id cut points
-  * split every group into buckets, rank = within-bucket row_number +
-  * the cumulative count of earlier buckets. Identical output (same
-  * rn, same batches, same files — pinned by spec), hot-group sort
-  * work split ~nBuckets ways; costs one extra pass over the mark
-  * side for the bucket counts, so it is opt-in.
+  * A SKEWED corpus (one analysis holding a large share of all marks)
+  * sorts its hot (exec, image) group in ONE window task: the r20 Zipf
+  * rung measured a 4.5× straggler at a 23% hot share. The file
+  * assembly stays BatchSize-bounded because batch_num is in the
+  * grouping key.
   */
 object MongoMarksPipeline {
 
@@ -256,8 +251,7 @@ object MongoMarksPipeline {
     * (rel_path, ttl) batch documents of ≤ BatchSize marks, paths
     * `exec_id/image_id/batch_%06d.ttl.gz` (K3). */
   def documents(marks: DataFrame, analyses: DataFrame,
-    slideHashes: DataFrame, batchSize: Int = BatchSize,
-    skewSafe: Boolean = false): DataFrame = {
+    slideHashes: DataFrame, batchSize: Int = BatchSize): DataFrame = {
     // rel_path carries only (exec, image, batch): if two analysis
     // docs ever share (exec, image), their outputs would collide on
     // the same paths and TtlFileSink's unique-path contract breaks —
@@ -278,10 +272,7 @@ object MongoMarksPipeline {
     // keeping it in the batching key documents the invariant
     val w = Window.partitionBy(col("analysis_id"), col("exec_id"),
       col("image_id")).orderBy(col("mark_id"))
-    val ranked =
-      if (skewSafe) distributedRank(m, marks)
-      else m.withColumn("rn", row_number().over(w))
-    val batched = ranked
+    val batched = m.withColumn("rn", row_number().over(w))
       .withColumn("batch_num",
         (floor((col("rn") - 1) / batchSize) + 1).cast("int"))
       .withColumn("fragment", markFragment)
@@ -301,97 +292,5 @@ object MongoMarksPipeline {
       .withColumn("rel_path", format_string("%s/%s/batch_%06d.ttl.gz",
         col("exec_id"), col("image_id"), col("batch_num")))
       .select("rel_path", "ttl", "n_marks")
-  }
-
-  /** Distributed exact rank of `m` by mark_id within each
-    * (analysis_id, exec_id, image_id) group — the skew-safe
-    * replacement for the single-task-per-group row_number window.
-    *
-    * Construction: sample the RAW marks `_id` column (mark_id is the
-    * mark's `_id` verbatim, so the raw scan is far cheaper than
-    * computing the joined/exploded mark side) → up to nBuckets−1
-    * sorted cut points → `_bkt` = count of cut points < mark_id, a
-    * PURE monotone function of the value, so every recomputation of
-    * any branch agrees on it (no reliance on exchange reuse or
-    * spark_partition_id stability). Then rank = row_number within
-    * (group, _bkt) + the cumulative count of the group's earlier
-    * buckets (a window over the tiny per-(group, bucket) count table,
-    * broadcast-joined back). Bucket balance only affects parallelism,
-    * never correctness: ANY monotone cut set yields the exact global
-    * rank, identical to the naive window's output.
-    *
-    * Caveats (documented, acceptable at this pipeline's shape): the
-    * cut points are GLOBAL rank-quantiles of a mass-proportional
-    * sample, so a hot group attracts cut points in proportion to its
-    * ROW SHARE regardless of where its ids sit in the id space —
-    * per-task work stays ~corpus/nBuckets and no per-group stats
-    * pass is needed (r21 doc fix: an earlier caveat here worried
-    * about narrow id slices, which the quantile construction already
-    * handles); the count table is ≤ nGroups × nBuckets rows, fine to
-    * broadcast for the reference's ~4k analyses. rn stays
-    * IntegerType like row_number's, bounding a GROUP at 2^31 marks —
-    * same bound as the naive path. */
-  private def distributedRank(m: DataFrame, marks: DataFrame)
-    : DataFrame = {
-    val spark = m.sparkSession
-    val nBuckets = spark.conf
-      .getOption("spark.graft.etl.skewBuckets").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    val fraction = spark.conf
-      .getOption("spark.graft.etl.skewSampleFraction")
-      .map(_.toDouble).getOrElse(0.001)
-    // UNIFORM driver-side cap (r21, the r20 ADVICE finding): the old
-    // `.limit(100000)` took whichever partitions were scanned first,
-    // so at the very scale skewSafe targets (a sample over the cap,
-    // monotonically-grown _id space) every cut point came from the
-    // LOW end of the id space and most data landed in the last
-    // bucket — silently degrading back to one-task-per-group sorting
-    // (correctness was never affected: any monotone cut set ranks
-    // exactly). The cap is now a second DETERMINISTIC hash thinning
-    // sized from the sample's own count — uniform over the whole id
-    // space at any corpus size — with limit() kept only as a
-    // 2×-headroom driver-safety backstop that the thinning makes
-    // statistically unreachable (binomial, ±1% at 100k).
-    val targetCap = 100000L
-    val sampled = marks.select(col("_id")).sample(fraction, seed = 42L)
-    val nSampled = sampled.count()
-    val thinned =
-      if (nSampled <= targetCap) sampled
-      else {
-        val keepPerM = targetCap * 1000000L / nSampled // per-million
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"distributedRank: seeded sample has $nSampled ids > cap " +
-            s"$targetCap — thinning uniformly by hash (keep " +
-            s"$keepPerM/1e6)")
-        sampled.filter(
-          pmod(xxhash64(col("_id"), lit(42L)), lit(1000000L))
-            < lit(keepPerM))
-      }
-    val ids = thinned.limit(2 * targetCap.toInt)
-      .collect().map(_.getString(0)).sorted
-    val bnds =
-      if (ids.isEmpty) Array.empty[String]
-      else (1 until nBuckets)
-        .map(i => ids(math.min(ids.length - 1, i * ids.length / nBuckets)))
-        .distinct.toArray
-    val keys = Seq(col("analysis_id"), col("exec_id"), col("image_id"))
-    val bkt =
-      if (bnds.isEmpty) lit(0)
-      else aggregate(array(bnds.map(lit): _*), lit(0),
-        (acc, b) => acc + when(col("mark_id") > b, 1).otherwise(0))
-    val withB = m.withColumn("_bkt", bkt)
-    val cnts = withB.groupBy((keys :+ col("_bkt")): _*).count()
-    val offW = Window.partitionBy(keys: _*).orderBy(col("_bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = cnts.withColumn("_off",
-      coalesce(sum(col("count")).over(offW), lit(0L))).drop("count")
-    val rnW = Window.partitionBy((keys :+ col("_bkt")): _*)
-      .orderBy(col("mark_id"))
-    withB
-      .join(broadcast(offs),
-        Seq("analysis_id", "exec_id", "image_id", "_bkt"))
-      .withColumn("rn",
-        (row_number().over(rnW) + col("_off")).cast("int"))
-      .drop("_bkt", "_off")
   }
 }

@@ -23,8 +23,8 @@ import graft.operators.IncrementalAgg
   * replayed micro-batch (id == the pointer's lastBatchId — the only
   * id legitimate recovery ever re-presents) is a no-op, so Spark's
   * checkpoint replay after failure cannot double-apply a delta (the
-  * Ledger/StreamingTtlEtl idempotence model); an id BELOW it is the
-  * fresh-checkpoint signature and fails loudly (applyBatch).
+  * BatchLedger/StreamingTtlEtl idempotence model); an id BELOW it is
+  * the fresh-checkpoint signature and fails loudly (applyBatch).
   */
 object StreamingSummary {
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.incremental.Ledger
+import graft.incremental.BatchLedger
 import graft.pipelines.{MongoMarksPipeline, TtlFileSink}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -10,13 +10,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * TTL files + durable progress ledger. This is the Structured
   * Streaming face of the reference's cursor loop (T1, mongodb_to_rdf
   * .py:515-579) with its checkpoint files (T2, :114-192) replaced by
-  * Spark's checkpointLocation plus the engine's Ledger.
+  * Spark's checkpointLocation plus the engine's BatchLedger.
   *
   * Idempotence model (exactly the one Spark documents for
   * foreachBatch): output paths are keyed by micro-batch id, so a
   * replayed batch after failure rewrites the same files (atomic
   * tmp+rename in TtlFileSink) rather than duplicating, and the ledger
-  * row for the batch is keyed the same way.
+  * records the batch's `mb<id>` key as wave `batchId`, so the replay
+  * overwrites that wave's directory instead of adding a row.
   */
 object StreamingTtlEtl {
 
@@ -38,8 +39,9 @@ object StreamingTtlEtl {
         // leaves its caches behind for the life of the query
         try TtlFileSink.write(docs.select("rel_path", "ttl"), outDir)
         finally graft.operators.Broadcasting.releaseAll()
-        Ledger.record(batch.sparkSession, ledgerDir,
-          Seq(f"mb$batchId%06d"), Ledger.Completed, s"stream-$batchId")
+        import batch.sparkSession.implicits._
+        BatchLedger.record(Seq(f"mb$batchId%06d").toDF("key"), ledgerDir,
+          batchId, runId = s"stream-$batchId")
       }
       .start()
   }

@@ -23,11 +23,20 @@ class ExamplesSpec extends SparkTestBase {
       svs.toString + "/*.svs", s"$work/out", s"$work/ledger")
     assert(Files.exists(Paths.get(s"$work/out",
       "exec-1/img-1/batch_000001.ttl.gz")))
-    // second run: analysis an-001 is in the ledger → nothing pending
+    def done = graft.incremental.BatchLedger
+      .doneKeys(spark, s"$work/ledger").collect().map(_.getString(0)).toSet
+    val afterFirst = done
+    assert(afterFirst.nonEmpty)
+    // second run: analysis an-001 is in the ledger → nothing pending;
+    // it records its (empty) wave under the next id, so wave 0 keeps
+    // the first run's keys
     Examples.mongoEtl(spark, s"$fx/marks.jsonl", s"$fx/analyses.jsonl",
       svs.toString + "/*.svs", s"$work/out2", s"$work/ledger")
     assert(!Files.exists(Paths.get(s"$work/out2")) ||
       Files.list(Paths.get(s"$work/out2")).count() == 0)
+    assert(done == afterFirst)
+    assert(graft.incremental.BatchLedger
+      .nextWave(spark, s"$work/ledger") == 2L)
   }
 
   test("rdfRoundTrip converts a golden turtle file across formats") {

@@ -176,49 +176,6 @@ class MongoMarksPipelineSpec extends SparkTestBase
       docs.map { case (p, (t, _)) => p -> t })
   }
 
-  test("skewSafe distributed rank: byte-identical output to the " +
-    "naive window, multi-bucket, on a Zipf-skewed corpus") {
-    // force real multi-bucket operation: every id sampled, 7 cut
-    // points, so the hot analysis genuinely splits across buckets
-    spark.conf.set("spark.graft.etl.skewSampleFraction", "1.0")
-    spark.conf.set("spark.graft.etl.skewBuckets", "8")
-    try {
-      val marks = EtlBench.synthMarks(spark, 3000, 4, Some("zipf"))
-      val analyses = EtlBench.synthAnalyses(spark, 4)
-      def run(skewSafe: Boolean) = MongoMarksPipeline
-        .documents(marks, analyses, emptyHashes, batchSize = 100,
-          skewSafe = skewSafe)
-        .collect()
-        .map(r => r.getAs[String]("rel_path") ->
-          ((r.getAs[String]("ttl"), r.getAs[Long]("n_marks")))).toMap
-      val naive = run(skewSafe = false)
-      val safe = run(skewSafe = true)
-      // hot analysis really is hot (harmonic-Zipf rank 0 ≈ 43% at
-      // N=4) and really does span several batches
-      val hotFiles = naive.keys.count(_.startsWith("exec-0/"))
-      assert(hotFiles >= 10, s"expected a hot analysis, got $hotFiles files")
-      assert(safe == naive,
-        s"skewSafe output diverged; first diff: ${
-          (naive.keySet ++ safe.keySet).toSeq.sorted
-            .find(k => naive.get(k) != safe.get(k))
-            .map(k => s"$k naive=${naive.get(k).map(_._2)} " +
-              s"safe=${safe.get(k).map(_._2)}")}")
-    } finally {
-      spark.conf.unset("spark.graft.etl.skewSampleFraction")
-      spark.conf.unset("spark.graft.etl.skewBuckets")
-    }
-  }
-
-  test("skewSafe path reproduces the reference golden byte-for-byte") {
-    val out = MongoMarksPipeline.documents(
-      MongoMarksPipeline.readMarks(spark, s"$fx/marks.jsonl"),
-      MongoMarksPipeline.readAnalyses(spark, s"$fx/analyses.jsonl"),
-      emptyHashes, batchSize = 2, skewSafe = true).collect()
-      .map(r => r.getAs[String]("rel_path") -> r.getAs[String]("ttl"))
-      .toMap
-    assert(out == docs.map { case (p, (t, _)) => p -> t })
-  }
-
   private def fixtureMarks =
     MongoMarksPipeline.readMarks(spark, s"$fx/marks.jsonl")
   private def fixtureAnalyses =

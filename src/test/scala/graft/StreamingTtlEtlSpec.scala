@@ -1,6 +1,6 @@
 package graft
 
-import graft.incremental.Ledger
+import graft.incremental.BatchLedger
 import graft.pipelines.MongoMarksPipeline
 import graft.streaming.StreamingTtlEtl
 import org.apache.spark.sql.Row
@@ -23,9 +23,11 @@ class StreamingTtlEtlSpec extends SparkTestBase {
     val hashes = Seq.empty[(String, String)].toDF("slide", "real_hash")
 
     val work = Files.createTempDirectory("stream_etl")
+    val ledger = s"$work/ledger"
     val in = MemoryStream[Row](enc, spark)
-    val q = StreamingTtlEtl.start(in.toDF(), analyses, hashes,
-      s"$work/out", s"$work/ledger", s"$work/ckpt", batchSize = 2)
+    def start() = StreamingTtlEtl.start(in.toDF(), analyses, hashes,
+      s"$work/out", ledger, s"$work/ckpt", batchSize = 2)
+    val q = start()
     try {
       in.addData(marks.take(2).toSeq)   // first micro-batch: 2 marks
       q.processAllAvailable()
@@ -37,9 +39,27 @@ class StreamingTtlEtlSpec extends SparkTestBase {
       "mb000000/exec-1/img-1/batch_000001.ttl.gz")))
     assert(Files.exists(Paths.get(s"$work/out",
       "mb000001/exec-1/img-1/batch_000001.ttl.gz")))
-    val done = Ledger.doneKeys(spark, s"$work/ledger").collect()
-      .map(_.getString(0)).sorted
-    assert(done.toSeq == Seq("mb000000", "mb000001"))
+    def done = BatchLedger.doneKeys(spark, ledger).collect()
+      .map(_.getString(0)).sorted.toSeq
+    assert(done == Seq("mb000000", "mb000001"))
+
+    // forget batch 1's commit: the restarted query re-runs batch 1
+    // from its offset log, the recovery Spark does after a crash
+    // between the sink write and the commit. The replay overwrites
+    // its own ledger wave: one dir and one row per batch id.
+    Seq("1", ".1.crc").foreach(f =>
+      Files.deleteIfExists(Paths.get(s"$work/ckpt/commits", f)))
+    val q2 = start()
+    val replayed = try {
+      q2.processAllAvailable()
+      q2.recentProgress.map(_.batchId).toSeq
+    } finally q2.stop()
+    assert(replayed.contains(1L), s"batch 1 was not replayed: $replayed")
+    val waves = new java.io.File(ledger).list()
+      .filter(_.startsWith("batch=")).sorted
+    assert(waves.toSeq == Seq("batch=0", "batch=1"))
+    assert(spark.read.parquet(s"$ledger/batch=1").count() == 1L)
+    assert(done == Seq("mb000000", "mb000001"))
   }
 
   test("micro-batches release their caches: no persisted RDD outlives " +

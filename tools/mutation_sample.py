@@ -121,7 +121,7 @@ BL = "src/main/scala/graft/incremental/BatchLedger.scala"
 LSH_SUITES = "graft.MinHashLshSpec graft.SpanDedupSpec"
 IVF_SUITES = ("graft.IvfIndexSpec graft.ClusteredRecallSpec "
               "graft.KMeansSpec")
-BL_SUITES = "graft.BatchLedgerSpec graft.LedgerSpec"
+BL_SUITES = "graft.BatchLedgerSpec"
 
 MUTANTS += [
     ("M1-band-conflate", MHL, "bands: band 1 mislabeled 0 (cross-band buckets)",
