@@ -52,12 +52,7 @@ object Examples {
         hashes)
       TtlFileSink.write(docs.select("rel_path", "ttl"), outDir)
       BatchLedger.record(analyses.select("_id"), ledgerDir, wave)
-    } finally {
-      analyses.unpersist()
-      // documents() size-gated the slide-hash lookup via
-      // maybeBroadcastByCount (a persist) — reclaim it per run
-      graft.operators.Broadcasting.releaseAll()
-    }
+    } finally analyses.unpersist()
   }
 
   /** MIGRATION §3: the live store through the DataSource V2 connector

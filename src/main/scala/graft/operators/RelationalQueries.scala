@@ -1534,10 +1534,10 @@ object RelationalQueries {
     // the PARQUET original, so the hash compare proves values (incl.
     // decimals) survive the ORC round-trip exactly. The write is a
     // DELIBERATE eager job inside the builder — the round-trip IS
-    // the operator under test, one bounded job per run (contrast the
-    // forbidden hidden-probe pattern Broadcasting.duringConstruction
-    // guards against). ORC rides Spark's native reader: predicate
-    // pushdown / column pruning apply to it the same as parquet.
+    // the operator under test, one bounded job per run (contrast a
+    // hidden corpus-sized probe, which no builder may fire). ORC
+    // rides Spark's native reader: predicate pushdown / column
+    // pruning apply to it the same as parquet.
     "s12_orc_roundtrip" -> ((s, dir) => {
       // deterministic path + overwrite, NOT createTempDirectory: the
       // bench re-runs builders per pass, and fresh dirs each pass

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * granularity, so a killed run is just re-run.
   *
   * Scale: whole-file rows (one per .ttl.gz, ~5-20 MB gz — Turtle File
-  * Summary.md:46) over ~4M files; slide→hash lookup is broadcast; the
-  * rewrite is a narrow map. File-count parallelism replaces the
-  * reference's `Pool(20)`/`xargs -P 20`.
+  * Summary.md:46) over ~4M files; the slide→hash lookup is broadcast
+  * while Catalyst's size estimate allows; the rewrite is a narrow map.
+  * File-count parallelism replaces the reference's
+  * `Pool(20)`/`xargs -P 20`.
   */
 object HashRepairJob {
 
@@ -39,9 +40,13 @@ object HashRepairJob {
   /** S9: slide_hashes.json list of {slide, hash} → lookup frame.
     * multiLine: the reference's file is ONE pretty-printed JSON array
     * (json.dump default), not JSONL — without this option Spark reads
-    * it as a corrupt record. */
+    * it as a corrupt record. The explicit schema means no inference
+    * job runs: other fields are ignored, an entry without `hash`
+    * yields a null `real_hash` (treated as missing downstream), and
+    * `[]` yields an empty lookup. */
   def loadHashJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", true).json(path)
+    spark.read.schema("slide STRING, hash STRING")
+      .option("multiLine", true).json(path)
       .select(col("slide"), lower(col("hash")).as("real_hash"))
 
   /** S8: whole-file scan of `<base>/<slide>.svs/batch_*.ttl.gz`
@@ -67,10 +72,10 @@ object HashRepairJob {
     * lookup entry pass through unchanged (flagged `repaired=false`). */
   def repair(ttlFiles: DataFrame, hashLookup: DataFrame): DataFrame =
     ttlFiles
-      // size-gated by ROW COUNT (byte estimates lie for the
-      // binaryFile-derived buildHashLookup variant): one row per
-      // slide image — degrade to a shuffle join past the cap
-      .join(graft.operators.Broadcasting.maybeBroadcastByCount(hashLookup),
+      // size-gated by Catalyst's estimate (no job): one row per slide
+      // image. The binaryFile-derived buildHashLookup variant is
+      // estimated far too high and shuffle-joins, the safe direction.
+      .join(graft.operators.Broadcasting.maybeBroadcast(hashLookup),
         Seq("slide"), "left")
       .withColumn("replacement",
         concat(lit("<urn:sha256:"), col("real_hash"), lit(">")))
@@ -115,13 +120,7 @@ object HashRepairJob {
     val repaired = removeLoincPrefix(
       repair(readTtlTree(spark, baseDir), lookup))
       .observe(counted, count_if(col("repaired")).as("n"))
-    try {
-      TtlFileSink.write(repaired.select("rel_path", "ttl"), outDir)
-      counted.get("n").asInstanceOf[Long]
-    } finally {
-      // repair() size-gated its lookup via maybeBroadcastByCount,
-      // which persists — reclaim that cache now that the job is done
-      graft.operators.Broadcasting.releaseAll()
-    }
+    TtlFileSink.write(repaired.select("rel_path", "ttl"), outDir)
+    counted.get("n").asInstanceOf[Long]
   }
 }

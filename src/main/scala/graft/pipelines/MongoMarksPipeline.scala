@@ -12,21 +12,23 @@ import org.apache.spark.sql.types._
   *
   * Engine redesign of the reference's hand-built machinery:
   *  - worker pool + per-analysis cursor loop (X3/X6) → one declarative
-  *    plan: marks ⋈ analyses equi-join on (execution_id, imageid) (J3);
-  *    the analysis side is broadcast when its row count is under
-  *    Broadcasting's cap and shuffle-joined past it, so the marks
-  *    always stream through the join on every scan partition.
+  *    plan: marks ⋈ analyses equi-join on (execution_id, imageid) (J3),
+  *    a shuffled hash join that builds the analysis side, so the
+  *    marks stream through it and are shuffled exactly once.
   *  - cursor micro-batching + manual flush every 1000 (T1/W1) → window
   *    batch numbering: row_number over (exec, image) ordered by mark
   *    id, batch = (rn-1)/1000+1 — deterministic, resumable.
   *  - Drupal hash memo-cache (J4/X5) → precomputed slide→hash lookup
-  *    broadcast-joined once, `coalesce` fallback to sha2(imageid) and
+  *    joined once (broadcast while Catalyst's size estimate is under
+  *    Broadcasting's cap), `coalesce` fallback to sha2(imageid) and
   *    a hal:hashMissing flag (mongodb_to_rdf.py:282-301,340-342).
   *  - checkpoint anti-join (J5/T2) belongs to incremental.BatchLedger.
   *
-  * Scale: the mark→TTL map is narrow; the only wide ops are the join
-  * (no fact shuffle while the analysis side is broadcast) and the
-  * (exec, image) window.
+  * Scale: the mark→TTL map is narrow; the one wide op over the marks
+  * is the join's hash partitioning on (exec, image), which the
+  * (analysis, exec, image) window and the batch grouping reuse.
+  * No Spark job runs while the plan is built: every pass is one lazy
+  * plan, run by its sink.
   * (exec, image) groups are ~1k-1M marks — far below partition-skew
   * territory; the final grouping key includes batch_num, so no group
   * ever exceeds BATCH_SIZE rows when assembling documents.
@@ -101,11 +103,12 @@ object MongoMarksPipeline {
       coalesce(col("image.subject"), lit("")).as("subject_id"),
       coalesce(col("image.study"), lit("")).as("study"),
       coalesce(col("image.slide"), lit("")).as("slide"))
-    // size-gated by ROW COUNT: one row per slide — small today, but it
-    // tracks the corpus, and its byte ESTIMATE lies when derived from
-    // a binaryFile scan (sha2 over image bytes). Past the cap this
-    // degrades to a shuffle join instead of OOMing the driver.
-    a.join(graft.operators.Broadcasting.maybeBroadcastByCount(slideHashes),
+    // size-gated by Catalyst's ESTIMATE, which fires no job: one row
+    // per slide — small today, but it tracks the corpus. A lookup read
+    // from slide_hashes.json is estimated near its file size; one
+    // derived from a binaryFile scan (sha2 over image bytes) is
+    // estimated far too high and so shuffle-joins, never OOMs.
+    a.join(graft.operators.Broadcasting.maybeBroadcast(slideHashes),
       Seq("slide"), "left")
       .withColumn("hash_missing",
         col("slide") =!= "" && col("real_hash").isNull)
@@ -137,17 +140,17 @@ object MongoMarksPipeline {
       expr("""CASE WHEN size(userUpdate.mark.annotation) > 0
              | THEN userUpdate.mark.annotation[0].annotationID
              | ELSE NULL END""".stripMargin).as("ann_id"))
-      // Size-gated by ROW COUNT, never a bare hint: the analysis side
-      // is ~4M rows enriched with header strings at reference scale —
-      // a forced hint would be honored regardless of size and exhaust
-      // the heap that builds the broadcast; past the cap this is a
-      // shuffle join. Unhinted is worse: without CBO, Catalyst sizes
-      // the analysis side as the PRODUCT of its join children, so it
-      // broadcasts the MARKS instead (measured: BroadcastHashJoin
-      // BuildLeft over the marks scan) and one task then runs the WKT,
-      // window and aggregate for every mark of the corpus.
-      .join(graft.operators.Broadcasting.maybeBroadcastByCount(analysisSide),
-        Seq("exec_id", "image_id"))
+      // A shuffled hash join that builds the analysis side. Unhinted,
+      // Catalyst (no CBO) sizes the analysis side as the PRODUCT of
+      // its join children and broadcasts the MARKS instead (measured:
+      // BroadcastHashJoin BuildLeft over the marks scan), and one task
+      // then runs the WKT, window and aggregate for every mark. The
+      // hint outranks any broadcast threshold and builds no
+      // driver-side relation that ~4M analyses could overflow. Its
+      // hash partitioning on (exec, image) also serves the analysis
+      // dedupe window below it and the batch window and grouping
+      // above it, so the marks are shuffled exactly once.
+      .join(analysisSide.hint("shuffle_hash"), Seq("exec_id", "image_id"))
 
     joined
       .filter(col("feature").isNotNull &&

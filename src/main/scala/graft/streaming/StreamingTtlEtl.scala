@@ -22,8 +22,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
 object StreamingTtlEtl {
 
   /** Start the query. `markStream` must carry MongoMarksPipeline's
-    * mark schema; `analyses`/`slideHashes` are static (broadcast per
-    * micro-batch). */
+    * mark schema; `analyses`/`slideHashes` are static. Each
+    * micro-batch's plan re-reads them, persists nothing, and runs only
+    * when its sink writes. */
   def start(markStream: DataFrame, analyses: DataFrame,
     slideHashes: DataFrame, outDir: String, ledgerDir: String,
     checkpointDir: String, batchSize: Int = 1000): StreamingQuery = {
@@ -34,11 +35,7 @@ object StreamingTtlEtl {
           .documents(batch, analyses, slideHashes, batchSize)
           .withColumn("rel_path",
             concat(lit(f"mb$batchId%06d/"), col("rel_path")))
-        // documents() size-gates its lookups via maybeBroadcastByCount,
-        // which persists — release per micro-batch, or every batch
-        // leaves its caches behind for the life of the query
-        try TtlFileSink.write(docs.select("rel_path", "ttl"), outDir)
-        finally graft.operators.Broadcasting.releaseAll()
+        TtlFileSink.write(docs.select("rel_path", "ttl"), outDir)
         import batch.sparkSession.implicits._
         BatchLedger.record(Seq(f"mb$batchId%06d").toDF("key"), ledgerDir,
           batchId, runId = s"stream-$batchId")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipelines.HashRepairJob
+import graft.pipelines.{HashRepairJob, MongoMarksPipeline => M}
 import java.nio.file.{Files, Paths}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
@@ -149,5 +149,71 @@ class HashRepairJobSpec extends SparkTestBase {
     assert(HashRepairJob.run(spark, base.toString, hashJson.toString,
       out.toString) == 0L)
     assert(Files.list(out).count() == 0L)
+  }
+
+  private val mongoFx = "src/test/resources/fixtures/mongo"
+
+  /** The fixture marks' documents under `hashes`, against the golden
+    * batches, whose run resolved no slide hash (hal:hashMissing). */
+  private def marksMatchHashMissingGolden(
+    hashes: org.apache.spark.sql.DataFrame): Unit = {
+    val got = M.documents(M.readMarks(spark, s"$mongoFx/marks.jsonl"),
+      M.readAnalyses(spark, s"$mongoFx/analyses.jsonl"), hashes, 2)
+      .collect().map(r =>
+        r.getAs[String]("rel_path") -> r.getAs[String]("ttl")).toMap
+    assert(got.size == 2 && got.values.forall(_.contains("hal:hashMissing")))
+    for ((path, ttl) <- got) assert(ttl == Files.readString(Paths.get(
+      "src/test/resources/golden/mongo_" +
+        path.stripPrefix("exec-1/img-1/").stripSuffix(".gz"))), path)
+  }
+
+  /** run() over one slide's file with the lookup at `json` repairs
+    * nothing and copies the file unchanged. */
+  private def repairPassesThrough(base: java.nio.file.Path,
+    json: String): Unit = {
+    val ttl = "<urn:sha256:" + "d" * 64 + ">\n    a so:ImageObject .\n"
+    gzWrite(base.resolve("tree/slideA.svs/batch_000001.ttl.gz"), ttl)
+    val out = Files.createTempDirectory("passthrough_out").toString
+    assert(HashRepairJob.run(spark, s"$base/tree", json, out) == 0L)
+    assert(gzRead(Paths.get(out, "slideA.svs/batch_000001.ttl.gz")) == ttl)
+  }
+
+  test("loadHashJson: upper-case hex is lower-cased and extra fields " +
+    "are ignored") {
+    val json = Files.createTempDirectory("hashjson").resolve("h.json")
+    Files.writeString(json,
+      s"""[{"slide": "slideA.svs", "hash": "${"AbC" * 21}D",
+         |  "size": 123, "meta": {"by": "x"}},
+         | {"note": "n", "slide": "slideB.svs", "hash": "${"0" * 64}"}]"""
+        .stripMargin)
+    val lookup = HashRepairJob.loadHashJson(spark, json.toString)
+    assert(lookup.columns.toSeq == Seq("slide", "real_hash"))
+    assert(lookup.collect().map(r => r.getString(0) -> r.getString(1))
+      .toSet == Set("slideA.svs" -> ("abc" * 21 + "d"),
+        "slideB.svs" -> "0" * 64))
+  }
+
+  test("loadHashJson: an entry with no hash counts as missing — the " +
+    "marks path emits hal:hashMissing, the repair passes the file through") {
+    val base = Files.createTempDirectory("nohash")
+    val json = base.resolve("slide_hashes.json")
+    Files.writeString(json,
+      """[{"slide": "slide-42"}, {"slide": "slideA.svs", "size": 1}]""")
+    val lookup = HashRepairJob.loadHashJson(spark, json.toString)
+    assert(lookup.collect().map(r => r.getString(0) -> r.getString(1))
+      .toSet == Set("slide-42" -> null, "slideA.svs" -> null))
+    marksMatchHashMissingGolden(lookup)
+    repairPassesThrough(base, json.toString)
+  }
+
+  test("loadHashJson: [] is an empty lookup") {
+    val base = Files.createTempDirectory("emptyhash")
+    val json = base.resolve("slide_hashes.json")
+    Files.writeString(json, "[]")
+    val lookup = HashRepairJob.loadHashJson(spark, json.toString)
+    assert(lookup.columns.toSeq == Seq("slide", "real_hash"))
+    assert(lookup.count() == 0L)
+    marksMatchHashMissingGolden(lookup)
+    repairPassesThrough(base, json.toString)
   }
 }

@@ -4,9 +4,12 @@ import graft.functions.GeomFunctions
 import graft.operators.Broadcasting
 import graft.pipelines.{MongoMarksPipeline, TtlFileSink}
 import org.apache.spark.sql.catalyst.expressions.{FormatString, Literal}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPInputStream
@@ -181,13 +184,14 @@ class MongoMarksPipelineSpec extends SparkTestBase
   private def fixtureAnalyses =
     MongoMarksPipeline.readAnalyses(spark, s"$fx/analyses.jsonl")
 
+  private def isMarksScan(p: SparkPlan) = p match {
+    case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.exists(_.getName == "marks.jsonl")
+    case _ => false
+  }
+
   test("plan shape: the marks stream through the join (no broadcast " +
     "of the marks scan) and each ring is formatted once") {
-    def isMarksScan(p: org.apache.spark.sql.execution.SparkPlan) = p match {
-      case s: FileSourceScanExec =>
-        s.relation.location.rootPaths.exists(_.getName == "marks.jsonl")
-      case _ => false
-    }
     // a non-empty lookup, as in production: Catalyst's size-only
     // estimate of the analysis side is then the product of its join
     // children, larger than the marks scan — unhinted, it broadcasts
@@ -253,5 +257,57 @@ class MongoMarksPipelineSpec extends SparkTestBase
         "POLYGON ((0.11 0.00, 5.00 10.00, 0.11 0.00))")
       assert(got("one-point") == "POLYGON ((25.00 100.00))")
     } finally Broadcasting.releaseAll()
+  }
+
+  /** Runs `documents` over the fixture marks, checks its output
+    * against the golden batches, and checks its AQE-final plan: a
+    * ShuffledHashJoin that builds the analysis side over the marks,
+    * exactly one Exchange above the marks scan (the join's, which the
+    * batch window and grouping reuse) and no broadcast of the marks. */
+  private def assertMarksShuffledOnce(analyses: DataFrame): Unit = {
+    val docs = MongoMarksPipeline.documents(fixtureMarks, analyses,
+      emptyHashes, batchSize = 2)
+    val got = docs.collect().map(r =>
+      r.getAs[String]("rel_path") -> r.getAs[String]("ttl")).toMap
+    assert(got == (1 to 2).map(b =>
+      f"exec-1/img-1/batch_$b%06d.ttl.gz" -> golden(b)).toMap)
+    val plan = docs.queryExecution.executedPlan
+    val joins = collect(plan) { case j: ShuffledHashJoinExec => j }
+    assert(joins.exists(j => j.buildSide == BuildRight &&
+      find(j.left)(isMarksScan).isDefined &&
+      find(j.right)(isMarksScan).isEmpty), plan)
+    val exchanges = collect(plan) {
+      case e: ShuffleExchangeExec if find(e)(isMarksScan).isDefined => e
+    }
+    assert(exchanges.size == 1, plan)
+    val broadcasts = collect(plan) {
+      case b: BroadcastExchangeExec if find(b)(isMarksScan).isDefined => b
+    }
+    assert(broadcasts.isEmpty, plan)
+  }
+
+  test("adversarial sizes: with a 1g broadcast threshold the marks are " +
+    "still shuffled once into a hash join that builds the analysis side") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "1g")
+      assertMarksShuffledOnce(fixtureAnalyses)
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("adversarial sizes: an analysis side with more rows than the " +
+    "marks is still the build side, and the marks are shuffled once") {
+    val dir = Files.createTempDirectory("many_analyses")
+    val extra = (1 to 200).map(i =>
+      s"""{"_id":"an-x$i","analysis":{"execution_id":"exec-x$i"},""" +
+        s""""image":{"imageid":"img-x$i","slide":"slide-x$i"}}""")
+    Files.writeString(dir.resolve("analyses.jsonl"),
+      (Files.readString(Paths.get(s"$fx/analyses.jsonl")).trim +: extra)
+        .mkString("\n"))
+    val analyses = MongoMarksPipeline.readAnalyses(spark,
+      s"$dir/analyses.jsonl")
+    assert(analyses.count() > fixtureMarks.count())
+    assertMarksShuffledOnce(analyses)
   }
 }
