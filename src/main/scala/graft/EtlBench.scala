@@ -9,21 +9,21 @@ import org.apache.spark.sql.functions._
   * files, reported as marks/sec — the reference's only runtime metric
   * (mongodb_to_rdf.py:799-821 computes exactly this for its 20-process
   * pool; ~4B marks total). Args: [nMarks] [nAnalyses] [outDir]
-  * [ledgerDir] [nWaves] [foldEvery].
+  * [ledgerDir] [nWaves].
   *
   * Marks are synthesized deterministically from spark.range — schema
   * identical to MongoMarksPipeline.markSchema, ~5 polygon points per
   * mark, 1k marks per (exec, image) batch like production.
   *
   * With a ledger dir the bench runs the INCREMENTAL face (T2/T4
-  * semantics beyond spec size) as nWaves WAVES (default 1) with LSM
+  * semantics beyond spec size) as nWaves WAVES (default 1) with the
   * ledger maintenance in the loop — the compacted-regime figure for
   * the reference-shaped pipeline: each wave sees a growing slice of
   * the corpus, anti-joins the BatchLedger for the still-pending
   * executions (the reference's should_process check,
   * mongodb_to_rdf.py:149-152), processes exactly those marks,
-  * records the wave, and folds the ledger tail
-  * (BatchDirs.compactTiered on the never-the-newest cadence). One
+  * records the wave, and folds every wave below it
+  * (BatchLedger.fold on the never-the-newest cadence). One
   * JSON line reports overall marks/sec plus the fold count and the
   * final (bounded) ledger dir count. Rerunning the same command over
   * the same ledger is the resume figure: every execution is done, so
@@ -110,9 +110,6 @@ object EtlBench {
           s""","task_spread":{$spread}}""")
       case Some(ledgerDir) =>
         val nWaves = args.lift(4).map(_.toInt).getOrElse(1)
-        // foldEvery (6th arg, default 1, 0 = never) is the A/B lever
-        // isolating the fold's share of the wave cost
-        val foldEvery = args.lift(5).map(_.toInt).getOrElse(1)
         // startup recovery: a kill -9 mid-wave leaves *.tmp-* files
         // under the wave dirs (the rename protocol's garbage); sweep
         // ONCE per process start, never per wave
@@ -172,7 +169,7 @@ object EtlBench {
           } finally { todo.unpersist(); () }
           // fold the tail on the never-the-newest cadence: wave w is
           // the newest recorded id and may re-run after a crash
-          if (w > 0 && foldEvery > 0 && w % foldEvery == 0) {
+          if (w > 0) {
             BatchLedger.fold(spark, ledgerDir, w - 1L); folds += 1
           }
         }

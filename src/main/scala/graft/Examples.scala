@@ -31,13 +31,18 @@ object Examples {
     * TTL with ledger bookkeeping. Each call is one ledger wave,
     * numbered one past the newest committed wave: a crashed call
     * re-runs its uncommitted wave id against an unchanged ledger, so
-    * the pending ids it records are the same key set. */
+    * the pending ids it records are the same key set. A committed
+    * wave is never re-run, so each call first folds every committed
+    * wave, before `pending` builds its frame (no lazy frame is held
+    * across the fold): the ledger lists at most four dirs however
+    * many calls ran. */
   def mongoEtl(spark: SparkSession, marksPath: String,
     analysesPath: String, svsGlob: String, outDir: String,
     ledgerDir: String): Unit = {
     import graft.pipelines.{HashRepairJob, MongoMarksPipeline => M, TtlFileSink}
     import graft.incremental.BatchLedger
     val wave = BatchLedger.nextWave(spark, ledgerDir)
+    BatchLedger.fold(spark, ledgerDir, wave - 1)
     // Persist the pending set so the sink write and the ledger record
     // see the SAME snapshot (pending re-evaluates the ledger dir
     // otherwise), and record the ~4M keys distributively — never

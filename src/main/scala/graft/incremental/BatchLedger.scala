@@ -14,14 +14,12 @@ import org.apache.spark.sql.functions._
   * Each wave's keys land in `<dir>/batch=<waveId>/` (Spark's
   * `_SUCCESS` is the commit marker, so a replayed wave overwrites its
   * own directory — exactly-once per wave id), and [[fold]] =
-  * [[BatchDirs.compactTiered]] keyed on `key` keeps the listing
-  * bounded at O(compact + log runs + one cadence of waves) with
-  * O(tail) minor folds — the ledger inherits the layout's measured
-  * LSM write/read bounds, its single-compactor lease, and its
-  * two-phase grace-window sweep. Readers and folds interleave safely
-  * (the grace window); the key-bucketed layout lets the point-lookup
-  * face [[doneOf]] ("is THIS analysis done?") prune to the asked
-  * keys' buckets.
+  * [[BatchDirs.compact]] rewrites the folded waves into one
+  * `compact=<cutoff>/` dir of plain parquet (`key, status, run_id,
+  * batch`). Folded on the never-the-newest cadence, the ledger lists
+  * at most four dirs whatever its age; it inherits the layout's
+  * single-compactor lease and its two-phase grace-window sweep, so
+  * readers and folds interleave safely.
   *
   * Semantics: at-least-once work (a killed wave is absent from the
   * ledger and gets redone), a key is done once recorded with a
@@ -71,7 +69,8 @@ object BatchLedger {
 
   /** All keys recorded with the given statuses (default: anything
     * that should NOT be reprocessed — completed or failed) across
-    * every committed wave — folded tiers and raw tail in one frame. */
+    * every committed wave — the compact dir and the unfolded waves in
+    * one frame. */
   def doneKeys(spark: SparkSession, ledgerDir: String,
     statuses: Seq[String] = Seq(Completed, Failed)): DataFrame =
     BatchDirs.readCommitted(spark, ledgerDir) match {
@@ -96,43 +95,22 @@ object BatchLedger {
     work.join(done, Seq(keyCol), "left_anti")
   }
 
-  /** The subset of `keys` already done — the point-lookup face, and
-    * the payoff of the key-bucketed fold layout: the folded tiers of
-    * the scan PRUNE to the buckets the asked keys hash into
-    * ([[BatchDirs.bucketOf]] over the stored string key type), so an
-    * "is THIS analysis done?" probe touches O(|keys| buckets +
-    * cadence-bounded tail) of the ledger, not O(ledger). `keys` is a
-    * bounded driver-known set (it becomes an `isin` filter and a
-    * driver-side bucket derivation); for a frame-scale probe use
-    * [[pending]]. The read is pinned to the generation the buckets
-    * were computed for ([[BatchDirs.readCommittedAt]]). */
+  /** The subset of `keys` already done: [[doneKeys]] filtered to a
+    * bounded, driver-known key set (it becomes an `isin` filter). For
+    * a frame-scale probe use [[pending]]. */
   def doneOf(spark: SparkSession, ledgerDir: String,
     keys: Seq[String],
     statuses: Seq[String] = Seq(Completed, Failed))
-    : DataFrame = {
-    import spark.implicits._
-    val gen = BatchDirs.generation(spark, ledgerDir)
-    val buckets = gen.modulus.map { n =>
-      keys.toDF("raw")
-        .select(BatchDirs.bucketOf(col("raw"), n).as("b"))
-        .distinct().collect().map(_.getLong(0)).toSeq
-    }
-    BatchDirs.readCommittedAt(spark, ledgerDir, gen,
-      pbuckets = buckets) match {
-      case None => Seq.empty[String].toDF("key")
-      case Some(df) =>
-        df.filter(col("status").isin(statuses: _*))
-          .filter(col("key").isin(keys: _*))
-          .select("key").distinct()
-    }
-  }
+    : DataFrame =
+    doneKeys(spark, ledgerDir, statuses)
+      .filter(col("key").isin(keys: _*))
 
-  /** Fold committed waves ≤ `upTo` ([[BatchDirs.compactTiered]],
-    * bucketed by `key`). Call on a cadence from the job that owns the
-    * ledger — `upTo = currentWave − 1`: never fold the newest wave,
-    * which may be re-run after a crash and needs its replay marker.
-    * Returns the coverage reached. */
-  def fold(spark: SparkSession, ledgerDir: String, upTo: Long,
-    nBuckets: Int = 16): Long =
-    BatchDirs.compactTiered(spark, ledgerDir, upTo, "key", nBuckets)
+  /** Fold committed waves ≤ `upTo` ([[BatchDirs.compact]]). Call on
+    * a cadence from the job that owns the ledger, with `upTo` below
+    * every wave id it may still re-run (`currentWave − 1` for a job
+    * that may re-run its newest wave after a crash): a re-run wave
+    * needs its own directory to overwrite. Returns the coverage
+    * reached. */
+  def fold(spark: SparkSession, ledgerDir: String, upTo: Long): Long =
+    BatchDirs.compact(spark, ledgerDir, upTo)
 }

@@ -112,17 +112,17 @@ object CmsSketch {
   }
 
   /** JVM twin of `rowHash` — same arithmetic, bit for bit. One md5
-    * per key; slice buckets from it with `bucketOf`. */
+    * per key; slice each row's bucket from it with `cellOf`. */
   private[graft] def hashJvm(key: String): Long = {
     val hex = graft.Hex.digest("MD5", s"cms:$key".getBytes("UTF-8"))
     java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
-  private[graft] def bucketOf(i: Int, h: Long): Int =
+  private[graft] def cellOf(i: Int, h: Long): Int =
     ((h >> (i * 8)) & 255L).toInt
 
   private[graft] def bucketJvm(i: Int, key: String): Int =
-    bucketOf(i, hashJvm(key))
+    cellOf(i, hashJvm(key))
 
   /** Mergeable typed aggregator: buffer = flat d×w counter array. */
   class CmsAggregator extends Aggregator[String, Array[Long], Array[Long]] {
@@ -132,7 +132,7 @@ object CmsSketch {
       val h = hashJvm(key) // one digest per row, like the column face
       var i = 0
       while (i < Depth) {
-        b(i * Width + bucketOf(i, h)) += 1L; i += 1
+        b(i * Width + cellOf(i, h)) += 1L; i += 1
       }
       b
     }
@@ -149,6 +149,6 @@ object CmsSketch {
   /** Estimate from a materialized sketch array (driver-side probe). */
   def estimateFrom(sketch: Array[Long], key: String): Long = {
     val h = hashJvm(key)
-    (0 until Depth).map(i => sketch(i * Width + bucketOf(i, h))).min
+    (0 until Depth).map(i => sketch(i * Width + cellOf(i, h))).min
   }
 }

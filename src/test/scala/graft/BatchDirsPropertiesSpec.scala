@@ -5,39 +5,28 @@ import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 import org.scalacheck.Gen
 
-/** Randomized state-machine property test for the batch-dir
-  * compaction layer: arbitrary interleavings of appends, empty
-  * commits, torn writes, stray debris, and TIERED folds (varying
-  * byte-ratio governor, bucket counts — including mid-stream
-  * re-bucketing, which forces a major merge — and L0 run-count
-  * backstops) against a driver-side reference model. The governor's
-  * minor/major choice depends on real parquet bytes, so the model
-  * asserts the invariants that must hold on EVERY path through the
-  * state space rather than predicting fold decisions:
+/** Randomized state-machine property test for the batch-dir fold:
+  * arbitrary interleavings of appends, empty commits, torn writes,
+  * stray debris, folds and lazy reads against a driver-side reference
+  * model. Invariants checked after every op:
   *
   *  1. content: readCommitted returns every committed row exactly
   *     once, keyed by (batch, k) — no loss, no double count, in any
   *     fold/grace/debris state;
   *  2. committedIds are exactly the committed ids above the
   *     reported cutoff;
-  *  3. the cutoff is monotone non-decreasing and compactTiered()
-  *     returns it;
-  *  4. an empty pruned read (pbuckets = ∅) returns exactly the rows
-  *     ABOVE the cutoff — the compacted part fully prunes, the
-  *     cadence-bounded tail never does;
+  *  3. the cutoff is monotone non-decreasing and compact() returns
+  *     it;
+  *  4. at most two committed compact dirs are listed (the newest and
+  *     its predecessor in its grace window);
   *  5. torn dirs and stray names never crash a reader or change any
   *     of the above;
-  *  6. PINNED READS are loud-or-exact: a generation pinned at a
-  *     random point and read back after every subsequent op must
-  *     answer EXACTLY the current content through its one-call grace
-  *     window (and, by the exactness guard's two-call evidence, at
-  *     age 2 as well — at 2 calls the first fold's tier is still
-  *     listed while its cutoff batch is swept, so the guard fires);
-  *     past that it may instead fail loudly (the guard's
-  *     IllegalStateException or a swept-file FileNotFoundException),
-  *     and beyond the guard's documented evidence horizon (3+ calls)
-  *     it may silently OMIT folded batches but must never invent or
-  *     double-count a row. */
+  *  6. LAZY READS are loud-or-exact: a readCommitted frame built at a
+  *     random point and read back after every subsequent op answers
+  *     EXACTLY the content it was built over while it is at most one
+  *     compactor call old (the grace window); older, it may instead
+  *     fail loudly (a swept-file FileNotFoundException), but it never
+  *     answers a different row set. */
 class BatchDirsPropertiesSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -46,8 +35,7 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
   private case object AppendEmpty extends Op
   private case object TornThenAppend extends Op
   private case object Debris extends Op
-  private case class Tiered(ratio: Double, nBuckets: Int,
-    maxL0Runs: Int) extends Op
+  private case object Fold extends Op
   private case object Pin extends Op
 
   private val opGen: Gen[Op] = Gen.frequency(
@@ -56,13 +44,7 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
     1 -> Gen.const(TornThenAppend),
     1 -> Gen.const(Debris),
     2 -> Gen.const(Pin),
-    // minor L0 runs, run-count-backstop majors, ratio majors, and
-    // modulus-change majors all mix freely against the same invariants
-    4 -> (for {
-      ratio <- Gen.oneOf(0.0, 0.1, 1e9)
-      n <- Gen.oneOf(2, 4, 8)
-      runs <- Gen.oneOf(1, 2, 16)
-    } yield Tiered(ratio, n, runs)))
+    4 -> Gen.const(Fold))
 
   private val caseGen: Gen[List[Op]] = for {
     n <- Gen.choose(6, 14)
@@ -70,7 +52,7 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
   } yield ops
 
   test("random op interleavings preserve the content, snapshot, " +
-    "monotonicity, and pruning invariants") {
+    "monotonicity, and lazy-read invariants") {
     seededForAll(caseGen, 8, 4242L) { ops =>
       val dir = java.nio.file.Files
         .createTempDirectory("bd_prop").toString + "/ix"
@@ -81,10 +63,11 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
       var nextId = 0L
       var nextKey = 0
       var lastCutoff = -1L
-      // invariant 6 state: the pinned generation and its age in
-      // COMPACTOR CALLS (every executed fold call counts — no-op
-      // ones too, since every call sweeps)
-      var pinned = Option.empty[(BatchDirs.Gen, Int)]
+      // invariant 6 state: the lazy frame, the content it was built
+      // over, and its age in COMPACTOR CALLS (every executed fold
+      // call counts — no-op ones too, since every call sweeps)
+      var pinned = Option.empty[
+        (Option[org.apache.spark.sql.DataFrame], Set[(Long, Long)], Int)]
 
       def isFnf(t: Throwable): Boolean = {
         var c: Throwable = t
@@ -101,34 +84,21 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
         model.toSeq.flatMap { case (b, ks) =>
           ks.map(k => (b, k.toLong)) }.toSet
 
-      def checkPinned(): Unit = pinned.foreach { case (g, age) =>
-        val want = modelContent
+      def checkPinned(): Unit = pinned.foreach { case (frame, want, age) =>
         val res =
-          try Right(BatchDirs.readCommittedAt(spark, dir, g)
+          try Right(frame
             .map(_.select(col("batch"), col("k"))
               .as[(Long, Long)].collect().toSet)
             .getOrElse(Set.empty[(Long, Long)]))
           catch { case e: Exception => Left(e) }
         res match {
-          case Right(got) if age <= 2 =>
-            // inside the grace window (and the guard's two-call
-            // evidence): an answering read must be CURRENT-exact
-            assert(got == want, s"pinned read (age $age calls) " +
-              s"wrong: missing=${want -- got} extra=${got -- want} " +
-              s"(ops=$ops)")
           case Right(got) =>
-            // beyond the guard's evidence horizon: omission of folded
-            // batches is the documented blind spot, but a pinned read
-            // must NEVER invent or double-count a row
-            assert((got -- want).isEmpty, s"pinned read (age $age) " +
-              s"produced extra rows: ${got -- want} (ops=$ops)")
+            assert(got == want, s"lazy read (age $age calls) wrong: " +
+              s"missing=${want -- got} extra=${got -- want} (ops=$ops)")
           case Left(e) =>
-            val loud = isFnf(e) ||
-              (e.isInstanceOf[IllegalStateException] &&
-                Option(e.getMessage).exists(_.contains("grace window")))
-            assert(age >= 2 && loud, s"pinned read (age $age calls) " +
-              s"threw unexpectedly: $e (ops=$ops)")
-            pinned = None // dead pin; a later Pin re-arms the check
+            assert(age >= 2 && isFnf(e), s"lazy read (age $age " +
+              s"calls) threw unexpectedly: $e (ops=$ops)")
+            pinned = None // dead frame; a later Pin re-arms the check
         }
       }
 
@@ -162,21 +132,19 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
         assert(got == want,
           s"content diverged: missing=${want -- got} " +
             s"extra=${got -- want} (ops=$ops)")
-        // 4: empty pruned read = exactly the above-cutoff tail
-        if (cutoff >= 0) {
-          val tail = BatchDirs.readCommitted(spark, dir,
-            pbuckets = Some(Seq.empty))
-            .map(_.select(col("batch"), col("k"))
-              .as[(Long, Long)].collect().toSet)
-            .getOrElse(Set.empty)
-          assert(tail == want.filter(_._1 > cutoff),
-            s"empty-bucket read wrong: $tail (cutoff=$cutoff ops=$ops)")
-        }
+        // 4: one live compact dir plus at most one in its grace
+        val compacts = fs.listStatus(new Path(dir)).toSeq
+          .map(_.getPath)
+          .filter(p => p.getName.startsWith("compact=") &&
+            fs.exists(new Path(p, "_SUCCESS")))
+        assert(compacts.size <= 2,
+          s"committed compact dirs: ${compacts.map(_.getName)} (ops=$ops)")
       }
 
       ops.foreach {
         case Pin =>
-          pinned = Some((BatchDirs.generation(spark, dir), 0))
+          pinned = Some((BatchDirs.readCommitted(spark, dir),
+            modelContent, 0))
           checkPinned()
         case Append(rows) => append(rows); check(); checkPinned()
         case AppendEmpty =>
@@ -200,29 +168,17 @@ class BatchDirsPropertiesSpec extends SparkTestBase {
         case Debris =>
           fs.mkdirs(new Path(s"$dir/batch=tmp"))
           fs.create(new Path(s"$dir/batch=tmp/_SUCCESS"), true).close()
-          fs.mkdirs(new Path(s"$dir/compact=9999.n4")) // torn fold
+          fs.mkdirs(new Path(s"$dir/compact=9999")) // torn fold
           check()
           checkPinned()
-        case Tiered(ratio, n, runs) if nextId > 0 =>
-          val upTo = nextId - 1
-          val ret = BatchDirs.compactTiered(spark, dir, upTo, "k",
-            nBuckets = n, majorRatio = ratio, maxL0Runs = runs)
+        case Fold if nextId > 0 =>
+          val ret = BatchDirs.compact(spark, dir, nextId - 1)
           assert(ret == BatchDirs.compactedThrough(spark, dir),
-            s"compactTiered() return != observed coverage (ops=$ops)")
-          // the run-count backstop is an invariant, not a prediction:
-          // the resolved generation never holds more than maxL0Runs
-          // runs is not assertable here (maxL0Runs varies per op), but
-          // the generation must be single-modulus — the contract every
-          // pruned reader derives ONE bucket set from
-          val gen = BatchDirs.generation(spark, dir)
-          val moduli = (gen.compact.map(_._2).toSeq ++
-            gen.l0.map(_.nBuckets)).distinct
-          assert(moduli.size <= 1,
-            s"mixed-modulus generation $gen (ops=$ops)")
-          pinned = pinned.map { case (g, age) => (g, age + 1) }
+            s"compact() return != observed coverage (ops=$ops)")
+          pinned = pinned.map { case (f, want, age) => (f, want, age + 1) }
           check()
           checkPinned()
-        case Tiered(_, _, _) => () // nothing committed
+        case Fold => () // nothing committed
       }
       fs.delete(new Path(dir), true)
     }

@@ -84,7 +84,7 @@ class BatchLedgerSpec extends SparkTestBase {
       val slice = (0 until 40).filter(_ % 8 == w).map(i => s"k$i")
       BatchLedger.record(slice.toDF("k"), d, w,
         status = if (w == 3L) Failed else Completed)
-      if (w > 0) BatchLedger.fold(spark, d, w - 1, nBuckets = 4)
+      if (w > 0) BatchLedger.fold(spark, d, w - 1)
     }
     // every recorded key — completed or failed — is done (the
     // reference reprocesses neither); the folds changed nothing
@@ -94,7 +94,8 @@ class BatchLedgerSpec extends SparkTestBase {
     assert(BatchLedger.doneKeys(spark, d, Seq(Completed))
       .count() == 35L)
     // the layout is folded: coverage reached wave 6, so at most the
-    // newest wave's dir plus tiers plus one call of grace remain
+    // newest wave's dir plus the compact dir plus one call of grace
+    // remain
     assert(BatchDirs.compactedThrough(spark, d) == 6L)
     assert(BatchLedger.nextWave(spark, d) == 8L)
     val fs = new org.apache.hadoop.fs.Path(d).getFileSystem(
@@ -104,26 +105,42 @@ class BatchLedgerSpec extends SparkTestBase {
     assert(batchDirs <= 2, s"unfolded tail too deep: $batchDirs dirs")
   }
 
-  test("doneOf point lookup: exact subset over the folded layout, " +
-    "pruned to the asked keys' buckets; status filter honored") {
+  test("doneOf point lookup: exact subset before and after a fold; " +
+    "status filter honored") {
     val d = dir()
     BatchLedger.record(Seq("a", "b").toDF("k"), d, 0L)
-    // pre-fold (no generation yet): full-scan fallback, still exact
     assert(BatchLedger.doneOf(spark, d, Seq("a", "x"))
       .as[String].collect().toSet == Set("a"))
     BatchLedger.record(Seq("c").toDF("k"), d, 1L,
       status = Failed)
     BatchLedger.record(Seq("e", "f").toDF("k"), d, 2L)
-    BatchLedger.fold(spark, d, 1L, nBuckets = 4)
-    // post-fold: pruned read over tiers + raw tail, one frame
+    BatchLedger.fold(spark, d, 1L)
+    // post-fold: the compact dir and the raw tail, one frame
     assert(BatchLedger.doneOf(spark, d, Seq("a", "c", "e", "nope"))
       .as[String].collect().toSet == Set("a", "c", "e"))
     // completed-only excludes the failed key
     assert(BatchLedger.doneOf(spark, d, Seq("a", "c"),
       Seq(Completed)).as[String].collect().toSet == Set("a"))
-    // pruning is structural: an asked-key set whose buckets miss a
-    // stored key must not surface it (bucket filter + isin agree)
     assert(BatchLedger.doneOf(spark, d, Seq("nope"))
       .as[String].collect().isEmpty)
+  }
+
+  test("bounded listing: 12 waves folded on the never-the-newest " +
+    "cadence keep doneKeys exact and the ledger at most 4 dirs") {
+    val d = dir()
+    val fs = new org.apache.hadoop.fs.Path(d).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    (0L until 12L).foreach { w =>
+      BatchLedger.record(Seq(s"w$w-a", s"w$w-b").toDF("k"), d, w)
+      if (w > 0) assert(BatchLedger.fold(spark, d, w - 1) == w - 1)
+      assert(keysOf(d) ==
+        (0L to w).flatMap(i => Seq(s"w$i-a", s"w$i-b")).toSet,
+        s"doneKeys wrong after wave $w")
+      val listed = fs.listStatus(new org.apache.hadoop.fs.Path(d))
+        .map(_.getPath.getName).sorted
+      assert(listed.length <= 4,
+        s"after wave $w the ledger lists ${listed.mkString(", ")}")
+    }
+    assert(BatchLedger.nextWave(spark, d) == 12L)
   }
 }

@@ -5,7 +5,8 @@ import graft.streaming.BatchDirs
 
 /** REAL-THREAD exercise of the single-compactor contract over the
   * work ledger: an out-of-band maintenance loop
-  * (`compactTiered(failIfBusy = true)` — fails loudly on contention)
+  * (`BatchDirs.compact(failIfBusy = true)` — fails loudly on
+  * contention)
   * races a writer that records waves and folds on its own cadence
   * ([[BatchLedger.fold]], which defers silently on contention), and
   * `doneKeys` readers race both. The required outcome is
@@ -55,8 +56,8 @@ class CompactionConcurrencySpec extends SparkTestBase {
           val n = newest
           if (n - 1 > lastFolded) {
             try {
-              val c = BatchDirs.compactTiered(spark, dir, n - 1, "key",
-                nBuckets = 8, failIfBusy = true)
+              val c = BatchDirs.compact(spark, dir, n - 1,
+                failIfBusy = true)
               folds += 1
               lastFolded = math.max(lastFolded, c)
             } catch {
@@ -74,7 +75,7 @@ class CompactionConcurrencySpec extends SparkTestBase {
       (0 until Waves).foreach { w =>
         BatchLedger.record(keysOf(w).toDF("k"), dir, w.toLong)
         if (w > 0 && w % 4 == 0)
-          BatchLedger.fold(spark, dir, w - 1L, nBuckets = 8)
+          BatchLedger.fold(spark, dir, w - 1L)
       }
     } finally {
       writerDone = true
@@ -140,12 +141,9 @@ class CompactionConcurrencySpec extends SparkTestBase {
               s"${got -- expect(m1)}")
         } catch {
           // a lazy read overlapping two compactor calls exhausts its
-          // grace window: loud (FNF / the exactness guard), never a
-          // wrong answer — tolerated, counted
-          case e: Exception
-            if isFnf(e) || (e.isInstanceOf[IllegalStateException] &&
-              Option(e.getMessage).exists(_.contains("grace window"))) =>
-            loudReads += 1
+          // grace window: loud (FNF), never a wrong answer —
+          // tolerated, counted
+          case e: Exception if isFnf(e) => loudReads += 1
           case t: Throwable =>
             violations.add(s"reader crashed unexpectedly: $t")
         }
@@ -157,7 +155,7 @@ class CompactionConcurrencySpec extends SparkTestBase {
       (0 until Waves).foreach { w =>
         BatchLedger.record(keysOf(w).toDF("k"), dir, w.toLong)
         if (w > 0 && w % 3 == 0)
-          BatchLedger.fold(spark, dir, w - 1L, nBuckets = 8)
+          BatchLedger.fold(spark, dir, w - 1L)
         completed = w + 1
       }
     } finally {

@@ -27,16 +27,24 @@ class ExamplesSpec extends SparkTestBase {
       .doneKeys(spark, s"$work/ledger").collect().map(_.getString(0)).toSet
     val afterFirst = done
     assert(afterFirst.nonEmpty)
-    // second run: analysis an-001 is in the ledger → nothing pending;
-    // it records its (empty) wave under the next id, so wave 0 keeps
-    // the first run's keys
-    Examples.mongoEtl(spark, s"$fx/marks.jsonl", s"$fx/analyses.jsonl",
-      svs.toString + "/*.svs", s"$work/out2", s"$work/ledger")
-    assert(!Files.exists(Paths.get(s"$work/out2")) ||
-      Files.list(Paths.get(s"$work/out2")).count() == 0)
-    assert(done == afterFirst)
-    assert(graft.incremental.BatchLedger
-      .nextWave(spark, s"$work/ledger") == 2L)
+    // later runs: analysis an-001 is in the ledger → nothing pending;
+    // each records its (empty) wave under the next id and first folds
+    // the waves before it, so the listing stays bounded while wave 0's
+    // keys stay done
+    val ledger = Paths.get(s"$work/ledger")
+    (2 to 6).foreach { run =>
+      Examples.mongoEtl(spark, s"$fx/marks.jsonl",
+        s"$fx/analyses.jsonl", svs.toString + "/*.svs",
+        s"$work/out$run", s"$work/ledger")
+      assert(!Files.exists(Paths.get(s"$work/out$run")) ||
+        Files.list(Paths.get(s"$work/out$run")).count() == 0)
+      assert(done == afterFirst)
+      assert(graft.incremental.BatchLedger
+        .nextWave(spark, s"$work/ledger") == run.toLong)
+      val listed = Files.list(ledger).toArray.map(_.toString)
+      assert(listed.length <= 4,
+        s"after run $run the ledger lists ${listed.mkString(", ")}")
+    }
   }
 
   test("rdfRoundTrip converts a golden turtle file across formats") {

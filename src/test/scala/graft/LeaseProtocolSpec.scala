@@ -10,9 +10,9 @@ import java.nio.charset.StandardCharsets
   * release must delete only OUR marker (a takeover's replacement
   * survives it), a clean release leaves zero protocol debris, and
   * graveyard files a crashed compactor leaves mid-takeover are swept
-  * by the next fold instead of leaking forever. The takeover and
-  * contention faces live in TieredCompactionSpec ("the compactor
-  * lease"); the real-thread interleaving in
+  * by the next fold instead of leaking forever — plus the contention
+  * and takeover faces a fold call sees ("the compactor lease") and a
+  * real second JVM. The real-thread interleaving lives in
   * CompactionConcurrencySpec. */
 class LeaseProtocolSpec extends SparkTestBase {
 
@@ -29,6 +29,37 @@ class LeaseProtocolSpec extends SparkTestBase {
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith(BatchDirs.LeaseName)).sorted
+  }
+
+  test("the compactor lease: a held lease defers the fold (or fails " +
+    "loudly with failIfBusy); a stale lease is taken over") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("tc_lease").toString + "/ix"
+    val fs = fsOf(dir)
+    def names: Seq[String] = fs.listStatus(new Path(dir)).toSeq
+      .map(_.getPath.getName).filterNot(_ == BatchDirs.LeaseName).sorted
+    writeBatch(dir, 0L, rows = 50)
+    // another (live) compactor holds the marker
+    fs.create(new Path(dir, BatchDirs.LeaseName), true).close()
+    val before = names
+    assert(BatchDirs.compact(spark, dir, 0L) == -1L, "a busy lease " +
+      "must defer, reporting the current (empty) coverage")
+    assert(names == before, "a deferred fold must not touch the dir")
+    val ex = intercept[IllegalStateException] {
+      BatchDirs.compact(spark, dir, 0L, failIfBusy = true)
+    }
+    assert(ex.getMessage.contains("lease"), ex.getMessage)
+    // a failed call left the marker and the dir untouched too
+    assert(names == before)
+    // a marker older than the stale horizon belongs to a crashed
+    // compactor: taken over, the fold proceeds, and the lease is
+    // released afterwards
+    fs.setTimes(new Path(dir, BatchDirs.LeaseName), 1000L, -1L)
+    assert(BatchDirs.compact(spark, dir, 0L) == 0L)
+    assert(names == Seq("batch=0", "compact=0"))
+    assert(!fs.exists(new Path(dir, BatchDirs.LeaseName)),
+      "the lease must be released after the fold")
+    assert(BatchDirs.readCommitted(spark, dir).get.count() == 50L)
   }
 
   test("a clean acquire/release cycle leaves ZERO lease debris — no " +
@@ -97,8 +128,7 @@ class LeaseProtocolSpec extends SparkTestBase {
     }
     writeBatch(dir, 0L, rows = 50)
     // the graveyards must not be mistaken for a held lease …
-    assert(BatchDirs.compactTiered(spark, dir, 0L, "k",
-      nBuckets = 4) == 0L)
+    assert(BatchDirs.compact(spark, dir, 0L) == 0L)
     // … and the fold's sweep removed them (the lease itself released)
     assert(leaseFiles(dir).isEmpty,
       s"graveyard leaked past a sweep: ${leaseFiles(dir)}")

@@ -10,7 +10,9 @@ targeted suites fail, SURVIVED when they stay green. Targeted suites
 (not the full run — 20 x 15 min is not a sample) bias toward
 survival, which is the conservative direction for this measurement;
 every survivor gets a regression spec regardless of whether some
-other suite might have caught it.
+other suite might have caught it. After each revert the sources are
+recompiled, so target/ holds the unmutated classes when the sample
+ends.
 
 Usage: python3 tools/mutation_sample.py [mutant-id ...]
 Writes the kill matrix to stdout (markdown); exits 0 always (the
@@ -90,22 +92,21 @@ MUTANTS = [
      GEOM_SUITES),
     # ---- BatchDirs protocol guards ----
     ("B1-committed-true", BD, "committed(): ignore the _SUCCESS marker",
-     """    val p = new Path(dir, "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)""",
-     """    val p = new Path(dir, "_SUCCESS")
-    p != null""", BD_SUITES),
-    ("B2-chain-ge", BD, "chain walk: hi == need -> hi >= need",
-     "          .filter(_._1.hi == need.get)",
-     "          .filter(_._1.hi >= need.get)", BD_SUITES),
-    ("B3-covered-0", BD, "coveredThrough: empty -> 0 instead of -1",
-     "        .getOrElse(-1L)", "        .getOrElse(0L)", BD_SUITES),
+     '    fs.exists(new Path(dir, "_SUCCESS"))',
+     "    fs.exists(dir)", BD_SUITES),
+    ("B2-oldest-compact", BD, "compact pick: oldest committed cutoff, not newest",
+     "        .maxOption.getOrElse(-1L)",
+     "        .minOption.getOrElse(-1L)", BD_SUITES),
+    ("B3-covered-0", BD, "no compact dir: coverage 0 instead of -1",
+     "        .maxOption.getOrElse(-1L)",
+     "        .maxOption.getOrElse(0L)", BD_SUITES),
     ("B4-ids-nofilter", BD, "committedIds: keep ids under the fold coverage",
-     "        .filter(_ > covered))", "        .filter(_ => true))",
+     "        .filter { case (id, p) => id > covered && committed(fs, p) }",
+     "        .filter { case (_, p) => committed(fs, p) }",
      BD_SUITES),
-    ("B5-narrowest", BD, "chain walk: narrowest run wins instead of widest",
-     "          .sortBy { case (r, t) => (-r.lo, t, r.nBuckets) }",
-     "          .sortBy { case (r, t) => (r.lo, t, r.nBuckets) }",
-     BD_SUITES),
+    ("B5-no-grace", BD, "sweep: no grace window (deletes this call's inputs)",
+     "      sweep(fs, baseDir, covered)",
+     "      sweep(fs, baseDir, cutoff)", BD_SUITES),
     ("B6-lease-overwrite", BD, "lease tryCreate: overwrite=true (not exclusive)",
      "          try Some(fs.create(marker, false))",
      "          try Some(fs.create(marker, true))", BD_SUITES),
@@ -313,6 +314,10 @@ def run(mutant):
         verdict = "KILLED (timeout/hang)"
     finally:
         subprocess.run(["git", "checkout", "--", fn], cwd=REPO)
+        # recompile the restored source: target/ otherwise keeps the
+        # mutant's bytecode for anything that runs the classes next
+        subprocess.run(["sbt", "-client", "Test/compile"], cwd=REPO,
+                       capture_output=True, text=True, timeout=1800)
     return (mid, desc, verdict)
 
 
