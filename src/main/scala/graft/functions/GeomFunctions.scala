@@ -1,15 +1,18 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.functions._
 
 /** In-house geometry expression family (no Sedona jar ships with this
   * build — SURVEY §7.3). Replaces the reference's shapely usage
-  * (`mongo-etl/utils/geometry.py:12-242`) with pure Catalyst
-  * higher-order-function compositions over the coordinate
-  * representation `array<array<array<double>>>` (rings × points × [x,y])
-  * — no UDFs, so everything stays inside Catalyst's optimizer and the
-  * narrow map stage.
+  * (`mongo-etl/utils/geometry.py:12-242`) with Catalyst expressions over
+  * the coordinate representation `array<array<array<double>>>` (rings ×
+  * points × [x,y]) — no UDFs, so everything stays inside Catalyst's
+  * optimizer and the narrow map stage. The measures and predicates are
+  * higher-order-function compositions; the WKT writers (F1, F3) are one
+  * codegen'd kernel, [[graft.expressions.RingWkt]], which formats a
+  * ring in one loop where a per-point `format_string` lambda would run
+  * interpreted and build a Formatter per point.
   *
   * Reference quirks preserved on purpose (SURVEY §7.4):
   *  - `wktOuterRing` uses ONLY `coordinates[0]` and does NOT close the
@@ -78,17 +81,11 @@ object GeomFunctions {
   private def pointsWellFormed(geom: Column): Column =
     forall(flatten(geom), p => size(p) >= 2)
 
-  private def ringPointsWellFormed(ring: Column): Column =
-    forall(ring, p => size(p) >= 2)
-
   /** F1: WKT of the outer ring only, NO ring closure, "%.2f" formatting.
-    */
-  def wktOuterRing(geom: Column): Column = {
-    val r = outerRing(geom)
-    // NULL on a degenerate point (reference: except -> None), not an
-    // ANSI crash from the coordinate accessors
-    when(ringPointsWellFormed(r), ringToWkt(r))
-  }
+    * NULL on a degenerate point (reference: except -> None), not an
+    * ANSI crash from the coordinate accessors. */
+  def wktOuterRing(geom: Column): Column = ringWkt(outerRing(geom), Nil,
+    close = false)
 
   /** F3: WKT with coordinates denormalized from [0,1] to pixel space
     * (x*width, y*height), "%.2f", operating on the outer ring closed.
@@ -98,41 +95,17 @@ object GeomFunctions {
     * `wkt_coords[0] != wkt_coords[-1]`, i.e. post-format) — a
     * raw-value comparison would disagree on rings whose endpoints
     * differ in raw value but format equal at 2 decimals. This is THE
-    * one implementation, in two halves that MongoMarksPipeline.markSide
-    * also uses: [[denormalizedPairs]] then [[closedRingWkt]]. */
+    * one implementation; MongoMarksPipeline.markSide uses it too. */
   def wktDenormalized(geom: Column, width: Column, height: Column): Column =
-    closedRingWkt(denormalizedPairs(outerRing(geom), width, height))
+    ringWkt(outerRing(geom), Seq(width, height), close = true)
 
-  /** First half of F3 over an extracted ring (points × 2): each point
-    * denormalized and formatted "%.2f %.2f". NULL on a degenerate
-    * point (reference: except → None), never an ANSI crash from the
-    * coordinate accessors. */
-  def denormalizedPairs(ring: Column, width: Column,
-    height: Column): Column =
-    when(ringPointsWellFormed(ring), transform(ring, p =>
-      format_string("%.2f %.2f",
-        element_at(p, 1) * width, element_at(p, 2) * height)))
-
-  /** Second half of F3: close the ring on the formatted strings and
-    * build the WKT; NULL pairs give NULL. `pairs` is referenced seven
-    * times here, and subexpression elimination does not reach into
-    * CASE branches — so a caller formatting many rings should bind
-    * [[denormalizedPairs]] to a column of its own first (markSide
-    * does), or every reference formats the ring again. */
-  def closedRingWkt(pairs: Column): Column = {
-    val closed = when(size(pairs) === 0, pairs)
-      .when(element_at(pairs, 1) === element_at(pairs, -1), pairs)
-      .otherwise(concat(pairs, array(element_at(pairs, 1))))
-    when(pairs.isNotNull,
-      concat(lit("POLYGON (("), concat_ws(", ", closed), lit("))")))
-  }
-
-  private def ringToWkt(ring: Column): Column =
-    concat(lit("POLYGON (("),
-      concat_ws(", ", transform(ring, p =>
-        concat(format_string("%.2f", element_at(p, 1)), lit(" "),
-          format_string("%.2f", element_at(p, 2))))),
-      lit("))"))
+  /** The codegen'd ring kernel ([[graft.expressions.RingWkt]]): one
+    * loop over the points, no interpreted lambda, no Formatter. */
+  private def ringWkt(ring: Column, scale: Seq[Column],
+    close: Boolean): Column =
+    GraftShims.column(graft.expressions.RingWkt(
+      GraftShims.expression(ring),
+      scale.map(c => GraftShims.expression(c.cast("double"))), close))
 
   /** Folds `step(ring, acc, i)` over the edges i = 1..n-1 of `ring`.
     * The ring rides in the accumulator: a fold's lambda body runs

@@ -157,26 +157,17 @@ object MongoMarksPipeline {
         col("feature.geometry.type") === "Polygon" &&
         expr("size(feature.geometry.coordinates) >= 1") &&
         expr("size(feature.geometry.coordinates[0]) >= 1") &&
-        // a degenerate POINT ([], [x]) would throw INVALID_ARRAY_INDEX
-        // under Spark 4's default ANSI mode inside the WKT transform,
-        // aborting the whole 4B-mark job; the reference silently skips
+        // a degenerate POINT ([], [x]): the reference silently skips
         // such a mark (polygon_to_wkt's bare except → None,
-        // mongodb_to_rdf.py:260-261) — so must we
+        // mongodb_to_rdf.py:260-261) — so must we; the WKT kernel
+        // would keep the mark with a NULL wkt
         expr("forall(feature.geometry.coordinates[0], p -> size(p) >= 2)"))
-      // ONE implementation of the F3 denormalize+format+close contract
-      // (ring access stays the filter-guarded coordinates[0], not
-      // try_element_at — see the codegen note above). The formatted
-      // points are a column of their own: closedRingWkt refers to them
-      // repeatedly inside CASE branches, where subexpression
-      // elimination does not reach, and CollapseProject does not
-      // inline an expensive expression used more than once — so each
-      // ring is formatted once, not once per reference.
-      .withColumn("pairs", graft.functions.GeomFunctions.denormalizedPairs(
-        expr("feature.geometry.coordinates[0]"),
+      // ONE implementation of the F3 denormalize+format+close contract:
+      // the codegen'd ring kernel, whose outer-ring access the filter
+      // above guards
+      .withColumn("wkt", graft.functions.GeomFunctions.wktDenormalized(
+        col("feature.geometry.coordinates"),
         col("image_width"), col("image_height")))
-      .withColumn("wkt",
-        graft.functions.GeomFunctions.closedRingWkt(col("pairs")))
-      .drop("pairs")
       .withColumn("nucleustype",
         coalesce(col("feature.properties.nucleustype"), lit("")))
       .withColumn("footprint",

@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.RingWkt
 import graft.functions.GeomFunctions
 import graft.operators.Broadcasting
 import graft.pipelines.{MongoMarksPipeline, TtlFileSink}
@@ -213,13 +214,16 @@ class MongoMarksPipelineSpec extends SparkTestBase
       val side = MongoMarksPipeline.markSide(fixtureMarks,
         MongoMarksPipeline.analysisSide(fixtureAnalyses, hashes))
       side.collect()
-      val formats = collect(side.queryExecution.executedPlan) { case p =>
-        p.expressions.flatMap(_.collect {
-          case f @ FormatString(Literal(fmt, _), _*)
-              if String.valueOf(fmt) == "%.2f %.2f" => f
-        })
-      }.flatten
-      assert(formats.size == 1, side.queryExecution.executedPlan)
+      // one ring kernel per plan, and no per-point "%.2f %.2f" format
+      val sidePlan = side.queryExecution.executedPlan
+      val exprs = collect(sidePlan)(_.expressions).flatten
+      assert(exprs.map(_.collect { case k: RingWkt => k }.size).sum == 1,
+        sidePlan)
+      assert(exprs.forall(_.find {
+        case FormatString(Literal(fmt, _), _*) =>
+          String.valueOf(fmt) == "%.2f %.2f"
+        case _ => false
+      }.isEmpty), sidePlan)
     } finally Broadcasting.releaseAll()
   }
 

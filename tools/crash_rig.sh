@@ -10,29 +10,41 @@
 # wave loop's anti-join resume + TtlFileSink's temp+rename + the
 # startup temp sweep, under real SIGKILL.
 #
+# Each kill's delay counts from the first .ttl.gz that its crash run
+# writes, not from launch: JVM and Spark start-up take tens of seconds,
+# and a kill before the first wave commits tests no resume.
+#
 # usage: tools/crash_rig.sh [nMarks] [nAnalyses] [nWaves] [delays_csv]
+# SPARK_GRAFT_CPUS (default 32) and RIG_HEAP (default 24g) size the JVMs.
 set -u
 cd "$(dirname "$0")/.."
 
 N_MARKS=${1:-2000000}
 N_ANALYSES=${2:-40}
 N_WAVES=${3:-8}
-DELAYS=${4:-12,25,40}
+DELAYS=${4:-3,6,9}
+CPUS=${SPARK_GRAFT_CPUS:-32}
+HEAP=${RIG_HEAP:-24g}
 
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=$(grep -o '\-\-add-opens=[^ "]*' tools/verify_local.sh | tr '\n' ' ')
 BASE=$(mktemp -d /tmp/crash_rig.XXXX)
-echo "rig dir: $BASE  (marks=$N_MARKS analyses=$N_ANALYSES waves=$N_WAVES kills at ${DELAYS}s)"
+echo "rig dir: $BASE  (marks=$N_MARKS analyses=$N_ANALYSES waves=$N_WAVES cpus=$CPUS" \
+  "kills ${DELAYS}s after each crash run's first new file)"
 
 run() { # outDir ledgerDir logFile
-  SPARK_GRAFT_CPUS=32 java $OPENS -Xmx24g -cp "$CP" \
+  SPARK_GRAFT_CPUS=$CPUS java $OPENS -Xmx$HEAP -cp "$CP" \
     graft.EtlBench "$N_MARKS" "$N_ANALYSES" "$1" "$2" "$N_WAVES" \
     >"$3" 2>/dev/null
 }
 
+outputs() { # outDir — committed .ttl.gz files
+  find "$1" -name '*.ttl.gz' 2>/dev/null | wc -l
+}
+
 state() { # label outDir ledgerDir — progress snapshot after a kill
   local files temps batches
-  files=$(find "$2" -name '*.ttl.gz' 2>/dev/null | wc -l)
+  files=$(outputs "$2")
   temps=$(find "$2" -regextype posix-extended -regex '.*\.tmp-[0-9a-f]{8}$' 2>/dev/null | wc -l)
   batches=$(find "$3" -maxdepth 1 -mindepth 1 -type d 2>/dev/null | wc -l)
   echo "$1: files=$files orphaned_temps=$temps ledger_dirs=$batches"
@@ -47,8 +59,14 @@ IFS=, read -ra KILLS <<<"$DELAYS"
 k=0
 for d in "${KILLS[@]}"; do
   k=$((k + 1))
+  before=$(outputs "$BASE/crash")
   run "$BASE/crash" "$BASE/ledger_crash" "$BASE/crash_$k.log" &
   pid=$!
+  t0=$SECONDS
+  while kill -0 "$pid" 2>/dev/null && [ "$(outputs "$BASE/crash")" -le "$before" ]; do
+    sleep 0.2
+  done
+  echo "kill #$k: first new file $((SECONDS - t0))s after launch"
   sleep "$d"
   # $! is the subshell running run(), whose child is the JVM: SIGKILL
   # the JVM too, or the "killed" run keeps writing under the next one
@@ -56,10 +74,10 @@ for d in "${KILLS[@]}"; do
     pkill -9 -P "$pid" 2>/dev/null
     kill -9 "$pid" 2>/dev/null
     wait "$pid" 2>/dev/null
-    state "kill #$k after ${d}s" "$BASE/crash" "$BASE/ledger_crash"
+    state "kill #$k ${d}s after it" "$BASE/crash" "$BASE/ledger_crash"
   else
     wait "$pid" 2>/dev/null
-    echo "kill #$k after ${d}s: run already finished (increase nMarks or shorten delays)"
+    echo "kill #$k ${d}s after it: run already finished (increase nMarks or shorten delays)"
   fi
 done
 echo "-- final rerun to completion"

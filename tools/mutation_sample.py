@@ -25,6 +25,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 GEOM = "src/main/scala/graft/functions/GeomFunctions.scala"
+RING = "src/main/scala/graft/expressions/RingWkt.scala"
 TTL = "src/main/scala/graft/ttl/Turtle.scala"
 TTLP = "src/main/scala/graft/ttl/TurtleParser.scala"
 RDFF = "src/main/scala/graft/ttl/RdfFormats.scala"
@@ -33,6 +34,7 @@ BD = "src/main/scala/graft/streaming/BatchDirs.scala"
 GEOM_SUITES = ("graft.GeomFunctionsSpec graft.GeomPropertiesSpec "
                "graft.GeoJsonPipelineSpec graft.MongoMarksPipelineSpec "
                "graft.SegCsvPipelineSpec")
+RING_SUITES = GEOM_SUITES + " graft.RingWktSpec"
 TTL_SUITES = ("graft.TurtleSpec graft.TurtleParserSpec "
               "graft.RdfFormatsSpec graft.RdfPropertiesSpec "
               "graft.W3cRdfConformanceSpec graft.HashRepairJobSpec")
@@ -83,13 +85,17 @@ MUTANTS = [
      "case XsdInteger => lex", TTL_SUITES),
     ("T6-merge-bag", TTL, "merge: union without distinct",
      "a.union(b).distinct()", "a.union(b)", TTL_SUITES),
-    ("T7-close-postfmt", GEOM,
-     "closedRingWkt: ignore post-format endpoint equality (always close)",
-     """    val closed = when(size(pairs) === 0, pairs)
-      .when(element_at(pairs, 1) === element_at(pairs, -1), pairs)""",
-     """    val closed = when(size(pairs) === 0, pairs)
-      .when(lit(false), pairs)""",
-     GEOM_SUITES),
+    ("T7-close-postfmt", RING,
+     "RingWkt: ignore post-format endpoint equality (always close)",
+     """    if (close && n > 0 &&
+        !out.same(firstStart, firstEnd, lastStart, out.pos)) {""",
+     """    if (close && n > 0) {""",
+     RING_SUITES),
+    ("R1-no-tie-fallback", RING,
+     "RingWkt %.2f: drop the String.format fallback near a .5 tie",
+     "if (!(a < FastLimit) || math.abs(frac - 0.5) <= TieUlps * math.ulp(s))",
+     "if (!(a < FastLimit))",
+     RING_SUITES),
     # ---- BatchDirs protocol guards ----
     ("B1-committed-true", BD, "committed(): ignore the _SUCCESS marker",
      '    fs.exists(new Path(dir, "_SUCCESS"))',
