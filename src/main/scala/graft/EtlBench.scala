@@ -63,9 +63,7 @@ object EtlBench {
         val batchSize = sys.env.get("SPARK_GRAFT_BATCH_SIZE")
           .map(_.toInt).getOrElse(MongoMarksPipeline.BatchSize)
         // per-stage task-duration capture: under skew the question is
-        // whether ANY stage develops a straggler tail (the W1
-        // batch_num-in-key construction should keep the hot group's
-        // work split into BatchSize-bounded files)
+        // whether ANY stage develops a straggler tail
         val tally = new TaskTally(spark.sparkContext)
         val t0 = System.nanoTime()
         val docs = MongoMarksPipeline.documents(marks, analyses, hashes,
@@ -74,7 +72,7 @@ object EtlBench {
         val secs = (System.nanoTime() - t0) / 1e9
         val rate = nMarks / secs
         // task-spread table of the heaviest stage (by total task
-        // time — the window/write stage at scale), computed OUTSIDE
+        // time — the grouping/write stage at scale), computed OUTSIDE
         // the timed window after the listener bus drains
         val spread = tally.read().stageTaskMs.toSeq
           .map { case (sid, ds) => (sid, ds.sorted) }

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   *    plan: marks ⋈ analyses equi-join on (execution_id, imageid) (J3),
   *    a shuffled hash join that builds the analysis side, so the
   *    marks stream through it and are shuffled exactly once.
-  *  - cursor micro-batching + manual flush every 1000 (T1/W1) → window
-  *    batch numbering: row_number over (exec, image) ordered by mark
-  *    id, batch = (rn-1)/1000+1 — deterministic, resumable.
+  *  - cursor micro-batching + manual flush every 1000 (T1/W1) → one
+  *    sorted-group pass: each group's marks, in mark-id order, cut
+  *    into a document every `batchSize` — deterministic, resumable.
   *  - Drupal hash memo-cache (J4/X5) → precomputed slide→hash lookup
   *    joined once (broadcast while Catalyst's size estimate is under
   *    Broadcasting's cap), `coalesce` fallback to sha2(imageid) and
@@ -26,18 +26,13 @@ import org.apache.spark.sql.types._
   *
   * Scale: the mark→TTL map is narrow; the one wide op over the marks
   * is the join's hash partitioning on (exec, image), which the
-  * (analysis, exec, image) window and the batch grouping reuse.
-  * No Spark job runs while the plan is built: every pass is one lazy
-  * plan, run by its sink.
-  * (exec, image) groups are ~1k-1M marks — far below partition-skew
-  * territory; the final grouping key includes batch_num, so no group
-  * ever exceeds BATCH_SIZE rows when assembling documents.
+  * (analysis, exec, image) grouping reuses, holding one document at a
+  * time. No Spark job runs while the plan is built: every pass is one
+  * lazy plan, run by its sink.
   *
   * A SKEWED corpus (one analysis holding a large share of all marks)
-  * sorts its hot (exec, image) group in ONE window task: the r20 Zipf
-  * rung measured a 4.5× straggler at a 23% hot share. The file
-  * assembly stays BatchSize-bounded because batch_num is in the
-  * grouping key.
+  * sorts its hot (exec, image) group in ONE task: the r20 Zipf rung
+  * measured a 4.5× straggler at a 23% hot share.
   */
 object MongoMarksPipeline {
 
@@ -90,6 +85,7 @@ object MongoMarksPipeline {
   def analysisSide(analyses: DataFrame, slideHashes: DataFrame)
     : DataFrame = {
     val a = analyses.select(
+      coalesce(col("image.slide"), lit("")).as("slide"),
       col("_id").as("analysis_id"),
       col("analysis.execution_id").as("exec_id"),
       col("image.imageid").as("image_id"),
@@ -101,8 +97,7 @@ object MongoMarksPipeline {
         col("analysis.algorithm_params.case_id")), col("image.imageid"))
         .as("case_id"),
       coalesce(col("image.subject"), lit("")).as("subject_id"),
-      coalesce(col("image.study"), lit("")).as("study"),
-      coalesce(col("image.slide"), lit("")).as("slide"))
+      coalesce(col("image.study"), lit("")).as("study"))
     // size-gated by Catalyst's ESTIMATE, which fires no job: one row
     // per slide — small today, but it tracks the corpus. A lookup read
     // from slide_hashes.json is estimated near its file size; one
@@ -110,11 +105,10 @@ object MongoMarksPipeline {
     // estimated far too high and so shuffle-joins, never OOMs.
     a.join(graft.operators.Broadcasting.maybeBroadcast(slideHashes),
       Seq("slide"), "left")
-      .withColumn("hash_missing",
-        col("slide") =!= "" && col("real_hash").isNull)
-      .withColumn("image_hash",
-        coalesce(col("real_hash"), sha2(col("image_id"), 256)))
-      .drop("real_hash")
+      .select(a.columns.toSeq.map(col) ++ Seq(
+        (col("slide") =!= "" && col("real_hash").isNull).as("hash_missing"),
+        coalesce(col("real_hash"), sha2(col("image_id"), 256))
+          .as("image_hash")): _*)
   }
 
   /** Mark side: first-feature extraction (W2), predicates P7-P9,
@@ -144,14 +138,15 @@ object MongoMarksPipeline {
       // Catalyst (no CBO) sizes the analysis side as the PRODUCT of
       // its join children and broadcasts the MARKS instead (measured:
       // BroadcastHashJoin BuildLeft over the marks scan), and one task
-      // then runs the WKT, window and aggregate for every mark. The
+      // then runs the WKT and batching for every mark. The
       // hint outranks any broadcast threshold and builds no
       // driver-side relation that ~4M analyses could overflow. Its
       // hash partitioning on (exec, image) also serves the analysis
-      // dedupe window below it and the batch window and grouping
-      // above it, so the marks are shuffled exactly once.
+      // dedupe window below it and the batch grouping above it, so the
+      // marks are shuffled exactly once.
       .join(analysisSide.hint("shuffle_hash"), Seq("exec_id", "image_id"))
 
+    val nucleus = coalesce(col("feature.properties.nucleustype"), lit(""))
     joined
       .filter(col("feature").isNotNull &&
         col("feature.geometry.type") === "Polygon" &&
@@ -165,85 +160,103 @@ object MongoMarksPipeline {
       // ONE implementation of the F3 denormalize+format+close contract:
       // the codegen'd ring kernel, whose outer-ring access the filter
       // above guards
-      .withColumn("wkt", graft.functions.GeomFunctions.wktDenormalized(
-        col("feature.geometry.coordinates"),
-        col("image_width"), col("image_height")))
-      .withColumn("nucleustype",
-        coalesce(col("feature.properties.nucleustype"), lit("")))
-      .withColumn("footprint",
-        coalesce(col("feature.properties.footprint"), lit(0.0)))
-      .withColumn("is_nuclear",
-        col("nucleustype") =!= "" &&
-          expr("size(split(nucleustype, '\\\\.')) >= 3"))
-      .withColumn("valid_ann",
-        col("ann_id").isNotNull &&
+      .select(col("*"),
+        graft.functions.GeomFunctions.wktDenormalized(
+          col("feature.geometry.coordinates"),
+          col("image_width"), col("image_height")).as("wkt"),
+        nucleus.as("nucleustype"),
+        coalesce(col("feature.properties.footprint"), lit(0.0))
+          .as("footprint"),
+        (nucleus =!= "" && size(split(nucleus, "\\.")) >= 3)
+          .as("is_nuclear"),
+        (col("ann_id").isNotNull &&
           col("ann_id").startsWith("http://snomed.info/id/"))
+          .as("valid_ann"))
   }
 
-  /** Per-mark TTL fragment (mongodb_to_rdf.py:414-451): starts with
-    * " ;" continuing the previous predicate list. */
-  private val markFragment: Column = concat(
-    lit(" ;\n        geo:hasMember [\n            a geo:Feature ;\n"),
-    format_string("            hal:markId \"%s\" ;\n", col("mark_id")),
-    format_string("            hal:executionId \"%s\" ;\n", col("exec_id")),
-    when(col("nucleustype") =!= "",
-      format_string("            hal:nucleusType \"%s\" ;\n",
-        col("nucleustype"))).otherwise(lit("")),
-    when(col("is_nuclear"),
-      lit("            hal:hasMaterialType snomed:68841002 ;  # Nuclear material\n"))
-      .otherwise(lit("")),
-    when(col("valid_ann"),
-      format_string("            hal:hasAnnotation <%s> ;  # Human-verified SNOMED code\n",
-        col("ann_id"))).otherwise(lit("")),
-    format_string("            hal:footprint %s ;\n",
-      col("footprint").cast("string")),
-    lit("            geo:hasGeometry [\n                geo:asWKT \""),
-    col("wkt"),
-    lit("\"^^geo:wktLiteral\n            ]\n        ]"))
+  /** A batching row: its group's header columns, then its own. A NULL
+    * string appends as "null", as `format_string("%s", NULL)` did. */
+  final case class MarkRow(image_width: Long, image_height: Long,
+    case_id: String, subject_id: String, study: String, slide: String,
+    hash_missing: Boolean, image_hash: String, mark_id: String,
+    nucleustype: String, is_nuclear: Boolean, valid_ann: Boolean,
+    ann_id: String, footprint: String, wkt: String)
 
-  /** TTL header (mongodb_to_rdf.py:303-357). */
-  private val header: Column = concat(
-    format_string(
-      "# GeoSPARQL representation of pathology image analysis\n" +
-        "# Analysis ID: %s\n# Execution: %s\n# Image: %s\n# Batch: %06d\n\n",
-      col("analysis_id"), col("exec_id"), col("image_id"),
-      col("batch_num")),
-    lit("@prefix geo: <http://www.opengis.net/ont/geosparql#> .\n" +
+  private def nonEmpty(s: String): Boolean = s != null && !s.isEmpty
+  /** `%06d`: zero-padded to six digits, never truncated. */
+  private def batchNumber(n: Int): String = "0" * (6 - s"$n".length) + n
+
+  /** TTL header (mongodb_to_rdf.py:303-357), once per document. */
+  private def header(analysisId: String, execId: String, imageId: String,
+    batch: String, r: MarkRow): String = {
+    def opt(pred: String, v: String) =
+      if (nonEmpty(v)) s"""    hal:$pred "$v" ;\n""" else ""
+    val (w, h) = (r.image_width, r.image_height)
+    "# GeoSPARQL representation of pathology image analysis\n" +
+      s"# Analysis ID: $analysisId\n# Execution: $execId\n" +
+      s"# Image: $imageId\n# Batch: $batch\n\n" +
+      "@prefix geo: <http://www.opengis.net/ont/geosparql#> .\n" +
       "@prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .\n" +
       "@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .\n" +
       "@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .\n" +
       "@prefix snomed: <http://snomed.info/id/> .\n" +
       "@prefix so:   <https://schema.org/> .\n" +
       "@prefix loinc: <http://loinc.org/rdf/> .\n" +
-      "@prefix hal: <https://halcyon.is/ns/> .\n\n"),
-    format_string("<urn:sha256:%s>\n    a so:ImageObject ;\n" +
-      "    hal:imageId \"%s\" ;\n", col("image_hash"), col("image_id")),
-    when(col("case_id") =!= "",
-      format_string("    hal:caseId \"%s\" ;\n", col("case_id")))
-      .otherwise(lit("")),
-    when(col("subject_id") =!= "",
-      format_string("    hal:subjectId \"%s\" ;\n", col("subject_id")))
-      .otherwise(lit("")),
-    when(col("study") =!= "",
-      format_string("    hal:studyId \"%s\" ;\n", col("study")))
-      .otherwise(lit("")),
-    when(col("slide") =!= "",
-      format_string("    hal:slideId \"%s\" ;\n", col("slide")))
-      .otherwise(lit("")),
-    when(col("hash_missing"),
-      lit("    hal:hashMissing \"true\"^^xsd:boolean ;\n"))
-      .otherwise(lit("")),
-    format_string("    hal:imageWidth %s ;\n    hal:imageHeight %s ;\n" +
-      "    hal:analysisId \"%s\" ;\n    geo:hasGeometry [\n" +
-      "        geo:asWKT \"POLYGON ((0 0, %s 0, %s %s, 0 %s, 0 0))\"^^geo:wktLiteral\n" +
-      "    ] ;\n    hal:hasFeatureCollection [\n        a geo:FeatureCollection",
-      col("image_width"), col("image_height"), col("analysis_id"),
-      col("image_width"), col("image_width"), col("image_height"),
-      col("image_height")))
+      "@prefix hal: <https://halcyon.is/ns/> .\n\n" +
+      s"<urn:sha256:${r.image_hash}>\n    a so:ImageObject ;\n" +
+      s"""    hal:imageId "$imageId" ;\n""" + opt("caseId", r.case_id) +
+      opt("subjectId", r.subject_id) + opt("studyId", r.study) +
+      opt("slideId", r.slide) + (if (r.hash_missing)
+        "    hal:hashMissing \"true\"^^xsd:boolean ;\n" else "") +
+      s"    hal:imageWidth $w ;\n    hal:imageHeight $h ;\n" +
+      s"""    hal:analysisId "$analysisId" ;\n    geo:hasGeometry [\n""" +
+      s"""        geo:asWKT "POLYGON ((0 0, $w 0, $w $h, 0 $h, 0 0))"""" +
+      "^^geo:wktLiteral\n    ] ;\n    hal:hasFeatureCollection [\n" +
+      "        a geo:FeatureCollection"
+  }
+
+  /** Per-mark TTL fragment (mongodb_to_rdf.py:414-451), " ;"-led; the
+    * markSide filter drops every ring whose `wkt` would be NULL. */
+  private def appendMark(sb: java.lang.StringBuilder, execId: String,
+    r: MarkRow): Unit = {
+    sb.append(" ;\n        geo:hasMember [\n            a geo:Feature ;\n" +
+      "            hal:markId \"").append(r.mark_id)
+      .append("\" ;\n            hal:executionId \"").append(execId).append("\" ;\n")
+    if (nonEmpty(r.nucleustype))
+      sb.append("            hal:nucleusType \"").append(r.nucleustype)
+        .append("\" ;\n")
+    if (r.is_nuclear)
+      sb.append("            hal:hasMaterialType snomed:68841002 ;  # Nuclear material\n")
+    if (r.valid_ann)
+      sb.append("            hal:hasAnnotation <").append(r.ann_id)
+        .append("> ;  # Human-verified SNOMED code\n")
+    sb.append("            hal:footprint ").append(r.footprint)
+      .append(" ;\n            geo:hasGeometry [\n                geo:asWKT \"")
+      .append(r.wkt).append("\"^^geo:wktLiteral\n            ]\n        ]")
+  }
+
+  /** One group's documents: its marks, in mark-id order, cut every
+    * `batchSize` into (rel_path, ttl, n_marks), numbered from 1. */
+  private[graft] def batches(analysisId: String, execId: String,
+    imageId: String, rows: Iterator[MarkRow], batchSize: Int)
+    : Iterator[(String, String, Long)] = {
+    val marks = rows.buffered
+    Iterator.from(1).takeWhile(_ => marks.hasNext).map { batch =>
+      val num = batchNumber(batch)
+      val sb = new java.lang.StringBuilder(
+        header(analysisId, execId, imageId, num, marks.head))
+      var n = 0
+      while (n < batchSize && marks.hasNext) {
+        appendMark(sb, execId, marks.next()); n += 1
+      }
+      (s"$execId/$imageId/batch_$num.ttl.gz",
+        sb.append("\n    ] .\n").toString, n.toLong)
+    }
+  }
 
   /** Full pipeline: marks + analyses (+ slide hash lookup) →
-    * (rel_path, ttl) batch documents of ≤ BatchSize marks, paths
-    * `exec_id/image_id/batch_%06d.ttl.gz` (K3). */
+    * (rel_path, ttl, n_marks) batch documents of ≤ batchSize marks,
+    * paths `exec_id/image_id/batch_%06d.ttl.gz` (K3). */
   def documents(marks: DataFrame, analyses: DataFrame,
     slideHashes: DataFrame, batchSize: Int = BatchSize): DataFrame = {
     // rel_path carries only (exec, image, batch): if two analysis
@@ -260,31 +273,20 @@ object MongoMarksPipeline {
     val aSide = analysisSide(analyses, slideHashes)
       .withColumn("a_rn", row_number().over(dedupW))
       .filter(col("a_rn") === 1).drop("a_rn")
-    val m = markSide(marks, aSide)
-
+    import marks.sparkSession.implicits._
     // analysis_id is unique per (exec, image) after the dedupe above;
-    // keeping it in the batching key documents the invariant
-    val w = Window.partitionBy(col("analysis_id"), col("exec_id"),
-      col("image_id")).orderBy(col("mark_id"))
-    val batched = m.withColumn("rn", row_number().over(w))
-      .withColumn("batch_num",
-        (floor((col("rn") - 1) / batchSize) + 1).cast("int"))
-      .withColumn("fragment", markFragment)
-
-    val headerCols = Seq("analysis_id", "exec_id", "image_id",
-      "image_width", "image_height", "case_id", "subject_id", "study",
-      "slide", "hash_missing", "image_hash")
-    batched
-      .groupBy((headerCols.map(col) :+ col("batch_num")): _*)
-      .agg(expr(
-        """concat_ws('', transform(
-          | array_sort(collect_list(named_struct('rn', rn, 'f', fragment))),
-          | x -> x.f))""".stripMargin).as("members"),
-        count(lit(1)).as("n_marks"))
-      .withColumn("ttl",
-        concat(header, col("members"), lit("\n    ] .\n")))
-      .withColumn("rel_path", format_string("%s/%s/batch_%06d.ttl.gz",
-        col("exec_id"), col("image_id"), col("batch_num")))
-      .select("rel_path", "ttl", "n_marks")
+    // keeping it in the key documents the invariant. A column key, not
+    // a key lambda, adds no AppendColumns: the join's partitioning
+    // serves the grouping, and the marks are shuffled once.
+    markSide(marks, aSide).select((Seq("analysis_id", "exec_id",
+      "image_id", "image_width", "image_height", "case_id", "subject_id",
+      "study", "slide", "hash_missing", "image_hash", "mark_id",
+      "nucleustype", "is_nuclear", "valid_ann", "ann_id", "wkt").map(col) :+
+      col("footprint").cast("string").as("footprint")): _*)
+      .groupBy(col("analysis_id"), col("exec_id"), col("image_id"))
+      .as[(String, String, String), MarkRow]
+      .flatMapSortedGroups(col("mark_id")) { case ((a, e, i), rows) =>
+        batches(a, e, i, rows, batchSize)
+      }.toDF("rel_path", "ttl", "n_marks")
   }
 }

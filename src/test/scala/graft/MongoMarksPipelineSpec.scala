@@ -9,8 +9,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPInputStream
@@ -210,6 +212,16 @@ class MongoMarksPipelineSpec extends SparkTestBase
         case b: BroadcastExchangeExec if find(b)(isMarksScan).isDefined => b
       }
       assert(marksBroadcast.isEmpty, finalPlan)
+      // the sorted-group pass: the only window is the analysis dedupe,
+      // and there is no collect_list aggregate and no format_string
+      val marksWindows = collect(finalPlan) {
+        case w: WindowExec if find(w)(isMarksScan).isDefined => w
+      }
+      assert(marksWindows.isEmpty, finalPlan)
+      assert(collect(finalPlan) { case a: ObjectHashAggregateExec => a }
+        .isEmpty, finalPlan)
+      assert(collect(finalPlan)(_.expressions).flatten
+        .forall(_.find(_.isInstanceOf[FormatString]).isEmpty), finalPlan)
 
       val side = MongoMarksPipeline.markSide(fixtureMarks,
         MongoMarksPipeline.analysisSide(fixtureAnalyses, hashes))

@@ -295,6 +295,22 @@ MUTANTS += [
      '"*-features.csv")', '"*")', LIST_SUITES),
 ]
 
+# ---- set 6: the mark batching pass. Each group's marks arrive sorted
+# and are cut into documents in Scala, so only the specs guard the cut
+# and the NULL rendering that format_string used to do.
+MMP = "src/main/scala/graft/pipelines/MongoMarksPipeline.scala"
+MARKS_SUITES = "graft.MongoMarksPipelineSpec graft.MongoMarksBatchingSpec"
+
+MUTANTS += [
+    ("W1-batch-cut", MMP, "batches: cut after batchSize + 1 marks (< -> <=)",
+     "while (n < batchSize && marks.hasNext) {",
+     "while (n <= batchSize && marks.hasNext) {", MARKS_SUITES),
+    ("W2-null-mark-id", MMP, "appendMark: a NULL mark id prints as \"\", not \"null\"",
+     'hal:markId \\"").append(r.mark_id)',
+     'hal:markId \\"").append(Option(r.mark_id).getOrElse(""))',
+     MARKS_SUITES),
+]
+
 
 def run(mutant):
     mid, fn, desc, old, new, suites = mutant
