@@ -39,8 +39,9 @@ object EtlBench {
     val spark = GraftSession.create(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // volume-sized AQE fan-out (GraftSession doc): at 10M marks the
-    // cores-sized reducer count spills the window sort (31.3k vs
-    // 65.0k marks/sec, r13 A/B); one initial partition per ~20k
+    // cores-sized reducer count spills the sort under the batch
+    // assembly (31.3k vs 65.0k marks/sec, r13 A/B, measured on a
+    // window sort); one initial partition per ~20k
     // marks keeps per-partition volume flat as nMarks grows, and AQE
     // coalesces small stages back down so the 1M rung is unaffected
     spark.conf.set(

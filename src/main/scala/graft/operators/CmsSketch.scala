@@ -121,9 +121,6 @@ object CmsSketch {
   private[graft] def cellOf(i: Int, h: Long): Int =
     ((h >> (i * 8)) & 255L).toInt
 
-  private[graft] def bucketJvm(i: Int, key: String): Int =
-    cellOf(i, hashJvm(key))
-
   /** Mergeable typed aggregator: buffer = flat d×w counter array. */
   class CmsAggregator extends Aggregator[String, Array[Long], Array[Long]] {
     def zero: Array[Long] = new Array[Long](Depth * Width)

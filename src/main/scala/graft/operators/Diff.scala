@@ -68,11 +68,10 @@ object Diff {
     * the CDC bridge: removed/changed keys emit their OLD row at
     * `_op = -1`, added/changed keys their NEW row at `_op = +1`,
     * unchanged keys emit nothing. Feeding the result to
-    * `IncrementalAgg.maintain` (or `StreamingSummary.applyBatch`)
-    * refreshes any stored count/sum summary to the new snapshot's
-    * state without hand-building deltas — and the changelog itself
-    * is diff-sized, so downstream cost tracks what actually changed,
-    * not the table. */
+    * `IncrementalAgg.maintain` refreshes any stored count/sum summary
+    * to the new snapshot's state without hand-building deltas — and
+    * the changelog itself is diff-sized, so downstream cost tracks
+    * what actually changed, not the table. */
   def toChangelog(oldDf: DataFrame, newDf: DataFrame,
     keyCols: Seq[String]): DataFrame = {
     val payload = oldDf.columns.filterNot(keyCols.contains).toSeq

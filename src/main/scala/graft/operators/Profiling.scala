@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-pass table profiling ("analyze"): per-column row/null/distinct
@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * profiled in a single aggregation job. Multiple exact distinct
   * counts make Catalyst plan an Expand (the input is replayed once per
   * distinct aggregate) — correct, but at 100 TB that is k scans' worth
-  * of shuffle for k columns; `approxSummary` swaps in HyperLogLog++
-  * (`approx_count_distinct`, one pass, no Expand) for the monitoring
-  * use-case where ±2% on n_distinct is fine.
+  * of shuffle for k columns. Where an estimate of n_distinct is
+  * enough, `approx_count_distinct` (HyperLogLog++) needs one pass and
+  * no Expand.
   *
   * min/max are stringified AFTER aggregating (one cast per column per
   * final row, not per input row) to give the long format a uniform
@@ -21,25 +21,15 @@ import org.apache.spark.sql.functions._
   */
 object Profiling {
 
-  def summary(df: DataFrame, cols: Seq[String]): DataFrame =
-    profile(df, cols, c => count_distinct(col(c)))
-
-  /** HLL++ distinct counts (default relative error 5%, tunable via
-    * `rsd`); everything else identical to `summary`. */
-  def approxSummary(df: DataFrame, cols: Seq[String],
-    rsd: Double = 0.05): DataFrame =
-    profile(df, cols, c => approx_count_distinct(col(c), rsd))
-
-  private def profile(df: DataFrame, cols: Seq[String],
-    distinctAgg: String => Column): DataFrame = {
-    require(cols.nonEmpty, "profile needs at least one column")
+  def summary(df: DataFrame, cols: Seq[String]): DataFrame = {
+    require(cols.nonEmpty, "summary needs at least one column")
     val missing = cols.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"column(s) ${missing.mkString(", ")} not found — have " +
         s"[${df.columns.mkString(", ")}]")
     val aggs = cols.flatMap(c => Seq(
       count(col(c)).as(s"_nn_$c"),
-      distinctAgg(c).as(s"_nd_$c"),
+      count_distinct(col(c)).as(s"_nd_$c"),
       min(col(c)).cast("string").as(s"_mn_$c"),
       max(col(c)).cast("string").as(s"_mx_$c")))
     val one = df.agg(count(lit(1)).as("_n_rows"), aggs: _*)

@@ -1528,7 +1528,7 @@ object RelationalQueries {
     // One-pass exact table profile (Profiling.summary): per-column
     // null/distinct/min/max in long format — the ingest-time data-
     // quality summary. Exact distinct counts cost an Expand (documented
-    // there; approxSummary is the HLL monitoring path).
+    // there).
     // Columnar-format interop: orders → ORC → back, then an integer-
     // cents aggregate over the re-read frame; the oracle aggregates
     // the PARQUET original, so the hash compare proves values (incl.

@@ -30,9 +30,8 @@ object TextDedupQueries {
   /** The x2 quality score appended to a documents frame: columns
     * `w` (tokens), `n_tokens`, `n_uniq`, `stop_cnt`, `score_e4`
     * added; empty documents dropped. ONE definition shared by the
-    * x2/x25 faces and by the batch↔stream admission-equivalence spec
-    * (AdmissionSpec derives its stream input from this ordering), so
-    * "quality order" cannot drift between the twins. */
+    * x2, x14 and x25 faces, so "quality order" cannot drift between
+    * them. */
   def qualityScored(df: DataFrame): DataFrame =
     df.withColumn("w", expr(tokensSql))
       .filter(size(col("w")) > 0) // divide-by-zero guard (oracle too)
@@ -1007,7 +1006,7 @@ object TextDedupQueries {
     // ties land differently but no global window is needed.
     "x14_quality_buckets" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      // THE shared score definition (x2/x25/Admission) — a private
+      // THE shared score definition (x2/x14/x25) — a private
       // re-spelling here could drift the bucket order from the
       // quality order the rest of the pipeline ranks by
       qualityScored(docs(s, dir))

@@ -108,7 +108,8 @@ object SegCsvPipeline {
     // explicit member order: collect_list alone takes shuffle-fetch
     // arrival order, which varies across runs when several map tasks
     // feed one group (multi-split CSVs, speculative retries) — the
-    // sibling pipelines sort by pos/rn for exactly this reason.
+    // sibling pipelines sort for exactly this reason: GeoJSON by
+    // `pos`, the mark path by `mark_id`.
     // monotonically_increasing_id alone is NOT file order for a CSV
     // larger than one split: ids are (partition id, row-in-partition)
     // and Spark packs file splits into FilePartitions in DESCENDING

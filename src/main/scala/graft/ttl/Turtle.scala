@@ -42,11 +42,9 @@ object Turtle {
     regexp_replace(n, "\r", "\\\\r")
   }
 
-  /** `"lit"` / `"lit"^^xsd:type` object terms. */
+  /** `"lit"` and `<iri>` object terms. */
   def strLit(c: Column): Column =
     concat(lit("\""), escapeLiteral(c), lit("\""))
-  def typedLit_(c: Column, dtype: String): Column =
-    concat(lit("\""), escapeLiteral(c), lit("\"^^"), lit(dtype))
   def iri(c: Column): Column = concat(lit("<"), c, lit(">"))
 
   /** Canonical Turtle text per subject: predicates `;`-chained, sorted;
