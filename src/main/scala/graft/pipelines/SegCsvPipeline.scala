@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,10 +15,11 @@ import org.apache.spark.sql.types._
   * document (K2/K4); per-patch parallelism replaces the per-SVS
   * process pool (X2).
   *
-  * Scale: a narrow scan→map over millions of small CSVs; file-count
-  * parallelism, no shuffle except the per-patch collect_list (bounded:
-  * one patch's rows). maxRecordsPerFile/partitionBy handle the tree
-  * layout.
+  * Scale: a narrow scan→map over millions of small CSVs, with no
+  * shuffle. The multiLine read is not splittable, so one task reads
+  * each CSV whole, in file order, and assembles its document in the
+  * same pass. The cost: one huge CSV no longer splits across tasks;
+  * the reference's CSVs hold one patch each.
   */
 object SegCsvPipeline {
 
@@ -36,7 +37,8 @@ object SegCsvPipeline {
     * root paths (one listing task per slide, not per CSV). */
   def read(spark: SparkSession, baseDir: String): DataFrame =
     PathMeta.filesIn(
-      spark.read.format("csv").option("header", true).schema(csvSchema),
+      spark.read.format("csv").option("header", true)
+        .option("multiLine", true).schema(csvSchema),
       baseDir + "/*_polygon/*.svs.tar.gz/*_polygon/*.svs", "*-features.csv")
       .withColumn("cancer_type",
         regexp_extract(col("path"), "/([a-z]+)_polygon/[^/]+\\.svs/", 1))
@@ -62,6 +64,54 @@ object SegCsvPipeline {
       .withColumn("patch_w", when(ok, col("pw")).otherwise(40000L))
       .withColumn("patch_h", when(ok, col("ph")).otherwise(40000L))
       .drop("fparts", "px", "py", "pw", "ph")
+  }
+
+  /** A nucleus row: its file's header columns, then its member
+    * fragment. None is NULL (`regexp_extract` gives "" on no match). */
+  final case class SegRow(path: String, image_name: String,
+    cancer_type: String, base_name: String, image_hash: String,
+    patch_x: Long, patch_y: Long, patch_w: Long, patch_h: Long,
+    fragment: String)
+
+  /** A patch document's TTL, up to its first member. */
+  private def header(r: SegRow, timestamp: String): String =
+    graft.ttl.Turtle.PrefixHeader +
+      s"<urn:sha256:${r.image_hash}>\n        a            so:ImageObject;\n" +
+      s"        dc:identifier \"${r.image_name}\" .\n\n" +
+      "<>      a                    geo:FeatureCollection;\n" +
+      "        dc:creator           \"http://orcid.org/0000-0003-4165-4062\";\n" +
+      s"        dc:date              \"$timestamp\"^^xsd:dateTime;\n" +
+      s"        dc:description       \"Nuclear segmentation predictions for ${r.image_name}" +
+      s" - patch ${r.patch_x}_${r.patch_y} (${r.patch_w}x${r.patch_h})\";\n" +
+      "        dc:publisher         <https://ror.org/01882y777> , <https://ror.org/05qghxh33>;\n" +
+      "        dc:references        \"https://doi.org/10.1038/s41597-020-0528-1\";\n" +
+      "        dc:title             \"nuclear-segmentation-predictions\";" +
+      (if (r.cancer_type.isEmpty) "" else s"\n        hal:cancerType       \"${r.cancer_type}\";") +
+      s"\n        hal:patchX           \"${r.patch_x}\"^^xsd:int;\n" +
+      s"        hal:patchY           \"${r.patch_y}\"^^xsd:int;\n" +
+      s"        hal:patchWidth       \"${r.patch_w}\"^^xsd:int;\n" +
+      s"        hal:patchHeight      \"${r.patch_h}\"^^xsd:int;\n" +
+      "        prov:wasGeneratedBy  [ a                       prov:Activity;\n" +
+      s"                               prov:used               <urn:sha256:${r.image_hash}>;\n" +
+      "                             ];\n"
+
+  /** One (rel_path, ttl) document per run of rows that share a `path`:
+    * the header, the members joined by ";\n", then " .\n". */
+  private def patches(rows: Iterator[SegRow], timestamp: String)
+    : Iterator[(String, String)] = {
+    val rs = rows.buffered
+    new Iterator[(String, String)] {
+      def hasNext: Boolean = rs.hasNext
+      def next(): (String, String) = {
+        val first = rs.next()
+        val sb = new java.lang.StringBuilder(header(first, timestamp))
+          .append(first.fragment)
+        while (rs.hasNext && rs.head.path == first.path)
+          sb.append(";\n").append(rs.next().fragment)
+        (first.image_name + ".svs/" + first.cancer_type + "_" +
+          first.base_name + ".ttl.gz", sb.append(" .\n").toString)
+      }
+    }
   }
 
   /** One TTL document per CSV file (gzip sink is TtlFileSink's job). */
@@ -105,64 +155,14 @@ object SegCsvPipeline {
           col("PhysicalSize"), lit("\"^^xsd:float"))).otherwise(lit("")),
       lit("\n                             ]"))
 
-    // explicit member order: collect_list alone takes shuffle-fetch
-    // arrival order, which varies across runs when several map tasks
-    // feed one group (multi-split CSVs, speculative retries) — the
-    // sibling pipelines sort for exactly this reason: GeoJSON by
-    // `pos`, the mark path by `mark_id`.
-    // monotonically_increasing_id alone is NOT file order for a CSV
-    // larger than one split: ids are (partition id, row-in-partition)
-    // and Spark packs file splits into FilePartitions in DESCENDING
-    // split-size order, so a later split can land in an earlier
-    // partition. Prefixing the sort key with input_file_block_start()
-    // (the split's byte offset within its file) restores exact file
-    // row order with no single-split assumption: splits sort by file
-    // offset, rows within a split by the monotonic id.
-    val byFile = withMeta
-      .withColumn("split_off", expr("input_file_block_start()"))
-      .withColumn("row_pos", monotonically_increasing_id())
-      .withColumn("fragment", frag)
-      .groupBy(col("path"), col("image_name"), col("cancer_type"),
-        col("base_name"), col("image_hash"),
-        col("patch_x"), col("patch_y"), col("patch_w"), col("patch_h"))
-      .agg(concat_ws(";\n", expr("transform(array_sort(collect_list(" +
-        "named_struct('off', split_off, 'pos', row_pos, 'f', fragment)" +
-        ")), x -> x.f)"))
-        .as("members"))
-
-    byFile.select(
-      concat(col("image_name"), lit(".svs/"), col("cancer_type"),
-        lit("_"), col("base_name"), lit(".ttl.gz")).as("rel_path"),
-      concat(
-        lit(graft.ttl.Turtle.PrefixHeader),
-        format_string(
-          "<urn:sha256:%s>\n        a            so:ImageObject;\n" +
-            "        dc:identifier \"%s\" .\n\n",
-          col("image_hash"), col("image_name")),
-        format_string(
-          "<>      a                    geo:FeatureCollection;\n" +
-            "        dc:creator           \"http://orcid.org/0000-0003-4165-4062\";\n" +
-            "        dc:date              \"%s\"^^xsd:dateTime;\n" +
-            "        dc:description       \"Nuclear segmentation predictions for %s - patch %s_%s (%sx%s)\";\n" +
-            "        dc:publisher         <https://ror.org/01882y777> , <https://ror.org/05qghxh33>;\n" +
-            "        dc:references        \"https://doi.org/10.1038/s41597-020-0528-1\";\n" +
-            "        dc:title             \"nuclear-segmentation-predictions\";",
-          lit(timestamp), col("image_name"), col("patch_x"), col("patch_y"),
-          col("patch_w"), col("patch_h")),
-        when(col("cancer_type") =!= "", format_string(
-          "\n        hal:cancerType       \"%s\";", col("cancer_type")))
-          .otherwise(lit("")),
-        format_string(
-          "\n        hal:patchX           \"%s\"^^xsd:int;\n" +
-            "        hal:patchY           \"%s\"^^xsd:int;\n" +
-            "        hal:patchWidth       \"%s\"^^xsd:int;\n" +
-            "        hal:patchHeight      \"%s\"^^xsd:int;\n" +
-            "        prov:wasGeneratedBy  [ a                       prov:Activity;\n" +
-            "                               prov:used               <urn:sha256:%s>;\n" +
-            "                             ];\n",
-          col("patch_x"), col("patch_y"), col("patch_w"), col("patch_h"),
-          col("image_hash")),
-        col("members"), lit(" .\n")).as("ttl"))
+    // The read is unsplittable, so each task reads whole files, one
+    // after another: a file's rows are contiguous and in file order.
+    import rows.sparkSession.implicits._
+    withMeta.select(col("path"), col("image_name"), col("cancer_type"),
+      col("base_name"), col("image_hash"), col("patch_x"), col("patch_y"),
+      col("patch_w"), col("patch_h"), frag.as("fragment"))
+      .as[SegRow].mapPartitions(patches(_, timestamp))
+      .toDF("rel_path", "ttl")
   }
 
   def run(spark: SparkSession, baseDir: String, timestamp: String)

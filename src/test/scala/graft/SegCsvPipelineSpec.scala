@@ -1,11 +1,15 @@
 package graft
 
-import graft.pipelines.SegCsvPipeline
+import graft.pipelines.{SegCsvPipeline, TtlFileSink}
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.catalyst.expressions.FormatString
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Golden test vs. the reference's nuclear_segmentation_etl output on
   * the fixtures/segtree tree (timestamp injected). */
-class SegCsvPipelineSpec extends SparkTestBase {
+class SegCsvPipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   private val base = "src/test/resources/fixtures/segtree"
   private def golden(name: String): String =
     new String(Files.readAllBytes(
@@ -57,37 +61,97 @@ class SegCsvPipelineSpec extends SparkTestBase {
     assert(a.values.forall(_.nonEmpty))
   }
 
-  test("a CSV split across multiple FilePartitions still serializes " +
-    "members in file row order") {
-    // Spark packs splits into partitions by DESCENDING split size, so
-    // partition ids alone are not file order — the pipeline's
-    // input_file_block_start() sort prefix is what this pins.
-    val tmp = Files.createTempDirectory("segsplit")
-    val dir = tmp.resolve("x_polygon/I.svs.tar.gz/x_polygon/I.svs")
+  /** Writes a features CSV of `n` rows whose areas are 1..n. */
+  private def csvOf(dir: java.nio.file.Path, name: String, n: Int): Unit = {
     Files.createDirectories(dir)
-    val n = 500
     val rows = (1 to n).map(i => s"$i,1.5,[1:2:3:4:5:6]").mkString("\n")
-    Files.writeString(dir.resolve("1_2_3_4_z-features.csv"),
+    Files.writeString(dir.resolve(name),
       s"AreaInPixels,PhysicalSize,Polygon\n$rows\n")
+  }
+
+  private def areas(ttl: String): Seq[Int] =
+    "hal:areaInPixels    \"(\\d+)\"".r.findAllMatchIn(ttl)
+      .map(_.group(1).toInt).toSeq
+
+  private def withTinySplits[T](body: => T): T = {
     val conf = spark.conf
     val saved = (conf.get("spark.sql.files.maxPartitionBytes"),
       conf.get("spark.sql.files.openCostInBytes"))
     try {
       conf.set("spark.sql.files.maxPartitionBytes", "2048")
       conf.set("spark.sql.files.openCostInBytes", "0")
-      val scanned = SegCsvPipeline.read(spark, tmp.toString)
-      assert(scanned.rdd.getNumPartitions > 1,
-        s"test is vacuous: ${scanned.rdd.getNumPartitions} partition(s)")
-      val out = SegCsvPipeline.run(spark, tmp.toString, "T").collect()
-      assert(out.length == 1)
-      val areas = "hal:areaInPixels    \"(\\d+)\"".r
-        .findAllMatchIn(out.head.getAs[String]("ttl"))
-        .map(_.group(1).toInt).toSeq
-      assert(areas == (1 to n), s"member order broke: ${areas.take(20)}")
+      body
     } finally {
       conf.set("spark.sql.files.maxPartitionBytes", saved._1)
       conf.set("spark.sql.files.openCostInBytes", saved._2)
     }
+  }
+
+  test("the read is unsplittable: a CSV over maxPartitionBytes is read " +
+    "by one task, and a packed tree keeps one document per CSV, in file " +
+    "row order") {
+    withTinySplits {
+      // a line-mode read splits this 9 KB file into 2 KB partitions
+      val one = Files.createTempDirectory("segsplit")
+      csvOf(one.resolve("x_polygon/I.svs.tar.gz/x_polygon/I.svs"),
+        "1_2_3_4_z-features.csv", 500)
+      assert(SegCsvPipeline.read(spark, one.toString).rdd
+        .getNumPartitions == 1)
+
+      // 14 CSVs over 2 slides: the 500-row one, and 13 small ones that
+      // Spark packs several to a 2 KB partition
+      val tree = Files.createTempDirectory("segpack")
+      val sizes = (Seq(500) ++ (1 to 13).map(i => 10 + 3 * i)).zipWithIndex
+      for ((n, f) <- sizes) csvOf(
+        tree.resolve(s"x_polygon/S${f % 2}.svs.tar.gz/x_polygon/S${f % 2}.svs"),
+        s"${f}_0_10_10_z-features.csv", n)
+      val byPart = SegCsvPipeline.read(spark, tree.toString)
+        .select("path").rdd.mapPartitionsWithIndex((p, rs) =>
+          rs.map(r => (r.getString(0), p))).distinct().collect()
+      val parts = byPart.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      assert(parts.size == sizes.size)
+      assert(parts.values.forall(_.length == 1),
+        s"a CSV was read by several tasks: $parts")
+      val perPart = byPart.groupBy(_._2).values.map(_.length)
+      assert(perPart.size >= 2 && perPart.exists(_ >= 2),
+        s"test is vacuous: files per partition $perPart")
+
+      val out = SegCsvPipeline.run(spark, tree.toString, "T").collect()
+        .map(r => r.getAs[String]("rel_path") -> r.getAs[String]("ttl"))
+      assert(out.map(_._1).distinct.length == out.length)
+      assert(out.map(_._1).toSet == sizes.map { case (_, f) =>
+        s"S${f % 2}.svs/x_${f}_0_10_10_z-features.ttl.gz" }.toSet)
+      val docs = out.toMap
+      for ((n, f) <- sizes) {
+        val got = areas(docs(s"S${f % 2}.svs/x_${f}_0_10_10_z-features.ttl.gz"))
+        assert(got == (1 to n), s"file $f: member order broke: ${got.take(20)}")
+      }
+    }
+  }
+
+  test("plan shape: the seg tree is one stage, and one sink write of it " +
+    "is one job") {
+    val docs = SegCsvPipeline.run(spark, base, "T")
+    docs.collect()
+    val plan = docs.queryExecution.executedPlan
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, plan)
+    assert(collect(plan) {
+      case a: ObjectHashAggregateExec => a
+      case a: SortAggregateExec => a
+    }.isEmpty, plan)
+    assert(collect(plan)(_.expressions).flatten
+      .forall(_.find(_.isInstanceOf[FormatString]).isEmpty), plan)
+
+    val out = Files.createTempDirectory("segsink")
+    val docs2 = SegCsvPipeline.run(spark, base, "T").select("rel_path", "ttl")
+    val tally = new TaskTally(spark.sparkContext)
+    try {
+      val before = tally.read()
+      TtlFileSink.write(docs2, out.toString)
+      assert((tally.read() - before).jobMs.length == 1)
+    } finally spark.sparkContext.removeSparkListener(tally)
+    assert(Files.exists(out.resolve("TCGA-XX-0001-01Z-00-DX1.svs/" +
+      "blca_100_200_4000_4000_0.5_1-features.ttl.gz")))
   }
 
   test("filename-parse fallback (0,0,40000,40000) matches reference") {

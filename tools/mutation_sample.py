@@ -312,6 +312,21 @@ MUTANTS += [
 ]
 
 
+# ---- set 7: the seg patch assembly. Each task reads whole CSVs and
+# walks each file's run of rows into one document in Scala, so only
+# the specs guard the run boundary and the member separator.
+SEG_SUITES = "graft.SegCsvPipelineSpec graft.SegCsvAssemblySpec"
+
+MUTANTS += [
+    ("S1-seg-run-by-image", SEG, "patches: a run is the rows of one image, not of one file",
+     "rs.head.path == first.path", "rs.head.image_name == first.image_name",
+     SEG_SUITES),
+    ("S2-seg-leading-sep", SEG, "patches: write \";\\n\" before the first member too",
+     ".append(first.fragment)", '.append(";\\n").append(first.fragment)',
+     SEG_SUITES),
+]
+
+
 def run(mutant):
     mid, fn, desc, old, new, suites = mutant
     p = REPO / fn
