@@ -8,17 +8,18 @@ import org.apache.spark.sql.types._
   * point json-etl/geojson_to_geosparql_etl.py:252-265).
   *
   * One declarative plan replaces the reference's 20-process pool:
-  * multiLine JSON scan (S1) → posexplode features → map-argmax dominant
-  * class (A1, strict `>` first-max tie-break, :45-60) → literal-map
-  * SNOMED lookup (J1 — constant-folded, zero shuffle, vs. a broadcast
-  * join) → raw-format outer-ring WKT (F1, :27-42 — ring NOT closed,
-  * Python str() float formatting) → per-file Turtle assembly (F17)
-  * with ";\n" member separators → one .ttl per input stem (K1).
+  * multiLine JSON scan (S1, one row per file) → per feature of the
+  * row's `features` array: map-argmax dominant class (A1, strict `>`
+  * first-max tie-break, :45-60) → literal-map SNOMED lookup (J1 —
+  * constant-folded, zero shuffle, vs. a broadcast join) → raw-format
+  * outer-ring WKT (F1, :27-42 — ring NOT closed, Python str() float
+  * formatting) → per-file Turtle assembly (F17) with ";\n" member
+  * separators → one .ttl per input stem (K1).
   *
-  * The only shuffle is the groupBy(file) assembly; at 100 TB the unit
-  * of work is a file (471-file corpus in the reference, :256), so
-  * partition-by-file parallelism is exactly the reference's pool
-  * parallelism, minus the driver-side loop. Clock is injected for
+  * No shuffle: each file is read and assembled by one task. At 100 TB
+  * the unit of work is a file (471-file corpus in the reference,
+  * :256), so partition-by-file parallelism is exactly the reference's
+  * pool parallelism, minus the driver-side loop. Clock is injected for
   * deterministic goldens (reference stamps wall-clock, :83).
   */
 object GeoJsonPipeline {
@@ -71,19 +72,21 @@ object GeoJsonPipeline {
       .withColumn("image_id", element_at(split(col("stem"), "\\."), 1))
       .withColumn("image_hash", sha2(col("image_id"), 256))
 
-  /** A1: dominant `prob_*` class via strict-`>` fold in map iteration
-    * order (first max wins; all-zero → '' → dropped). */
-  private val dominant: Column = expr(
-    """aggregate(map_entries(measurements),
-      | named_struct('cls', '', 'prob', cast(0.0 as double)),
-      | (acc, e) -> IF(startswith(e.key, 'prob_')
-      |     AND e.value > acc.prob,
-      |   named_struct('cls', substring(e.key, 6), 'prob', e.value),
-      |   acc))""".stripMargin)
+  /** A1: dominant `prob_*` class of measurements `m` via strict-`>`
+    * fold in map iteration order (first max wins; all-zero → '' →
+    * dropped). */
+  private def dominantClass(m: Column): Column = aggregate(map_entries(m),
+    struct(lit("").as("cls"), lit(0.0).as("prob")),
+    (acc, e) => when(e.getField("key").startsWith("prob_") &&
+      e.getField("value") > acc.getField("prob"),
+      struct(e.getField("key").substr(lit(6), lit(Int.MaxValue)).as("cls"),
+        e.getField("value").as("prob")))
+      .otherwise(acc))
+    .getField("cls")
 
-  /** F1: outer-ring WKT, raw float formatting, NO ring closure. A
-    * degenerate point ([], [x]) yields NULL and the feature is
-    * skipped. DELIBERATE deviation: json-etl's polygon_to_wkt
+  /** F1: outer-ring WKT of `geometry`, raw float formatting, NO ring
+    * closure. A degenerate point ([], [x]) yields NULL and the feature
+    * is skipped. DELIBERATE deviation: json-etl's polygon_to_wkt
     * (json-etl:27-42) has no try/except, so its IndexError propagates
     * to process_single_file's file-level except (json-etl:208) and
     * the reference emits NO output file for that input; the
@@ -93,16 +96,15 @@ object GeoJsonPipeline {
     * dropping the whole file or aborting the job under Spark 4's
     * default ANSI mode — one dirty feature should not erase its
     * siblings' output at 100 TB. */
-  private val wktRaw: Column = {
-    val ring = expr("geometry.coordinates[0]")
-    when(expr("size(geometry.coordinates) >= 1") &&
-      size(ring) >= 1 &&
-      expr("forall(geometry.coordinates[0], p -> size(p) >= 2)"),
+  private def wktRaw(geometry: Column): Column = {
+    val coords = geometry.getField("coordinates")
+    val ring = coords.getItem(0)
+    when(size(coords) >= 1 && size(ring) >= 1 &&
+      forall(ring, p => size(p) >= 2),
       concat(lit("POLYGON (("),
-        concat_ws(", ", expr(
-          """transform(geometry.coordinates[0],
-            | p -> concat(cast(p[0] as string), ' ',
-            |             cast(p[1] as string)))""".stripMargin)),
+        concat_ws(", ", transform(ring, p => concat(
+          p.getItem(0).cast("string"), lit(" "),
+          p.getItem(1).cast("string")))),
         lit("))")))
   }
 
@@ -115,8 +117,8 @@ object GeoJsonPipeline {
     val k = e.getField("key")
     element_at(snomedIdMap, k.substr(lit(6), length(k)))
   }
-  private val measurementFrag: Column = concat_ws(",", transform(
-    filter(map_entries(col("measurements")), e =>
+  private def measurementFrag(m: Column): Column = concat_ws(",", transform(
+    filter(map_entries(m), e =>
       e.getField("key").startsWith("prob_") &&
         e.getField("value").isNotNull && entryCls(e).isNotNull),
     e => concat(
@@ -126,79 +128,54 @@ object GeoJsonPipeline {
       format_string("%.6f", e.getField("value")),
       lit("\"^^xsd:float\n                                             ]"))))
 
-  private val fragmentCol: Column = concat(
-    lit("        rdfs:member          [ a                   geo:Feature;\n" +
-      "                               geo:hasGeometry     [ geo:asWKT  \""),
-    col("wkt"),
-    lit("\"^^geo:wktLiteral ];\n" +
-      "                               hal:classification  sno:"),
-    col("snomed_id"),
-    lit(";\n                               hal:measurement     "),
-    measurementFrag,
-    lit("\n                             ]"))
-
-  /** One row per (file, feature) with validity columns; `pos` keeps
-    * document order. posexplode_OUTER: an empty file still yields one
-    * row, so `documents` needs no second scan for headers. */
-  private def explodedFeatures(files: DataFrame): DataFrame = files
-    .select(col("stem"), col("image_id"), col("image_hash"),
-      posexplode_outer(col("features")).as(Seq("pos", "f")))
-    .select(col("stem"), col("image_id"), col("image_hash"), col("pos"),
-      col("f.geometry").as("geometry"),
-      col("f.properties.measurements").as("measurements"))
-    .withColumn("dom", dominant)
-    .withColumn("cls", col("dom.cls"))
-    .withColumn("snomed_id", element_at(snomedIdMap, col("cls")))
-    .withColumn("wkt", wktRaw)
-
-  /** Per-feature TTL fragments for the valid features of every file. */
-  def features(files: DataFrame): DataFrame =
-    explodedFeatures(files)
-      .filter(col("snomed_id").isNotNull && col("wkt").isNotNull)
-      .withColumn("fragment", fragmentCol)
+  /** F17: one feature's `rdfs:member` fragment. `concat` is NULL when
+    * the WKT or the SNOMED id of the dominant class is NULL, so an
+    * invalid feature is a NULL member. */
+  private def member(f: Column): Column = {
+    val m = f.getField("properties").getField("measurements")
+    concat(
+      lit("        rdfs:member          [ a                   geo:Feature;\n" +
+        "                               geo:hasGeometry     [ geo:asWKT  \""),
+      wktRaw(f.getField("geometry")),
+      lit("\"^^geo:wktLiteral ];\n" +
+        "                               hal:classification  sno:"),
+      element_at(snomedIdMap, dominantClass(m)),
+      lit(";\n                               hal:measurement     "),
+      measurementFrag(m),
+      lit("\n                             ]"))
+  }
 
   /** Full document per file: header + ";\n"-joined member fragments +
-    * " .\n" terminator (empty files keep header + terminator, like the
-    * reference). `timestamp` is the injected clock (ISO-8601 `Z`).
+    * " .\n" terminator. `timestamp` is the injected clock (ISO-8601
+    * `Z`).
     *
-    * ONE scan: headers ride the same exploded rows (posexplode_outer
-    * keeps a row for empty files), so the multiLine JSON corpus is
-    * read and parsed once — not once for members and again for the
-    * header side of a rejoin. */
-  def documents(files: DataFrame, timestamp: String): DataFrame = {
-    val frags = explodedFeatures(files)
-      .withColumn("fragment",
-        when(col("snomed_id").isNotNull && col("wkt").isNotNull,
-          fragmentCol))
-      .groupBy(col("stem"), col("image_id"), col("image_hash"))
-      // collect_list skips NULL structs, so invalid features drop out
-      // while their file's group (and header) survives
-      .agg(concat_ws(";\n", expr("transform(array_sort(collect_list(" +
-        "CASE WHEN fragment IS NOT NULL" +
-        " THEN named_struct('pos', pos, 'f', fragment) END))," +
-        " x -> x.f)")).as("members"))
-
-    frags
-      .select(col("stem"), concat(
-        lit(graft.ttl.Turtle.PrefixHeader),
-        format_string(
-          "<urn:sha256:%s>\n        a            so:ImageObject;\n" +
-            "        dc:identifier \"%s\" ;\n" +
-            "        exif:height  \"40000\"^^xsd:int;\n" +
-            "        exif:width   \"40000\"^^xsd:int .\n\n",
-          col("image_hash"), col("image_id")),
-        format_string(
-          "<>      a                    geo:FeatureCollection;\n" +
-            "        dc:creator           \"http://orcid.org/0000-0003-4165-4062\";\n" +
-            "        dc:date              \"%s\"^^xsd:dateTime;\n" +
-            "        dc:description       \"Raj's 10-class classification results produced via wsinfer and Tammy's PyTorch model for %s\";\n" +
-            "        dc:title             \"tissue-classification-predictions\";\n" +
-            "        prov:wasGeneratedBy  [ a                       prov:Activity;\n" +
-            "                               prov:used               <urn:sha256:%s>;\n" +
-            "                             ];\n",
-          lit(timestamp), col("image_id"), col("image_hash")),
-        col("members"), lit(" .\n")).as("ttl"))
-  }
+    * One projection of the scan row: the file's `features` array is
+    * turned into members where it sits. `concat_ws` skips the NULL
+    * members of invalid features and keeps the rest in array order,
+    * and an empty, NULL or missing `features` array still gives the
+    * header + terminator, like the reference. */
+  def documents(files: DataFrame, timestamp: String): DataFrame =
+    files.select(col("stem"), concat(
+      lit(graft.ttl.Turtle.PrefixHeader + "<urn:sha256:"), col("image_hash"),
+      lit(">\n        a            so:ImageObject;\n" +
+        "        dc:identifier \""), col("image_id"),
+      lit("\" ;\n" +
+        "        exif:height  \"40000\"^^xsd:int;\n" +
+        "        exif:width   \"40000\"^^xsd:int .\n\n" +
+        "<>      a                    geo:FeatureCollection;\n" +
+        "        dc:creator           \"http://orcid.org/0000-0003-4165-4062\";\n" +
+        "        dc:date              \"" + timestamp + "\"^^xsd:dateTime;\n" +
+        "        dc:description       \"Raj's 10-class classification results produced via wsinfer and Tammy's PyTorch model for "),
+      col("image_id"),
+      lit("\";\n" +
+        "        dc:title             \"tissue-classification-predictions\";\n" +
+        "        prov:wasGeneratedBy  [ a                       prov:Activity;\n" +
+        "                               prov:used               <urn:sha256:"),
+      col("image_hash"),
+      lit(">;\n" +
+        "                             ];\n"),
+      concat_ws(";\n", transform(col("features"), member(_))),
+      lit(" .\n")).as("ttl"))
 
   /** End-to-end: dir of .geojson → Dataset of (stem, ttl); sink via
     * TtlFileSink.write (one `<stem>.ttl` per input — K1). */

@@ -259,6 +259,8 @@ object MongoMarksPipeline {
     * paths `exec_id/image_id/batch_%06d.ttl.gz` (K3). */
   def documents(marks: DataFrame, analyses: DataFrame,
     slideHashes: DataFrame, batchSize: Int = BatchSize): DataFrame = {
+    // a batch of 0 marks consumes none, so `batches` would never end
+    require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
     // rel_path carries only (exec, image, batch): if two analysis
     // docs ever share (exec, image), their outputs would collide on
     // the same paths and TtlFileSink's unique-path contract breaks —

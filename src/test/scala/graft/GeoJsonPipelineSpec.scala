@@ -1,14 +1,20 @@
 package graft
 
-import graft.pipelines.GeoJsonPipeline
+import graft.pipelines.{GeoJsonPipeline, TtlFileSink}
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.{col, concat, lit}
 
 /** Golden test: the engine's GeoJSON→TTL output must be byte-identical
   * to the reference implementation's output on the same fixture (the
   * golden was produced by running the reference's create_geosparql_ttl
   * on fixtures/TCGA-….geojson; only the wall-clock timestamp is
   * normalized via injection). */
-class GeoJsonPipelineSpec extends SparkTestBase {
+class GeoJsonPipelineSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   private val fixtureDir = "src/test/resources/fixtures"
   private val goldenPath = "src/test/resources/golden/geojson_expected.ttl"
 
@@ -49,16 +55,41 @@ class GeoJsonPipelineSpec extends SparkTestBase {
     assert(!ttl.contains("rdfs:member") && ttl.endsWith(" .\n"))
   }
 
-  test("plan: documents() reads the JSON corpus ONCE (headers ride " +
-    "the exploded rows, no rejoin)") {
-    val plan = GeoJsonPipeline.run(spark, fixtureDir, "T")
-      .queryExecution.executedPlan.toString
-    val scans = "FileScan json".r.findAllIn(plan).size
-    assert(scans == 1, s"expected 1 json scan, got $scans:\n" +
-      plan.linesIterator.filter(_.contains("FileScan"))
-        .mkString("\n"))
-    // and no join resurfaced (the old shape joined headers back on)
-    assert(!plan.contains("Join"), plan)
+  test("plan: documents() reads the JSON corpus ONCE and assembles " +
+    "each file in the row that was read (no join, exchange, generate or " +
+    "aggregate), and one sink write of a directory is one job") {
+    val docs = GeoJsonPipeline.run(spark, fixtureDir, "T")
+    docs.collect()
+    val plan = docs.queryExecution.executedPlan
+    val scans = collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.length == 1 && scans.head.relation.fileFormat.toString ==
+      "JSON", s"expected 1 json scan, got:\n${scans.mkString("\n")}")
+    // and no join resurfaced (an old shape joined headers back on)
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
+    assert(collect(plan) {
+      case e: Exchange => e
+      case g: GenerateExec => g
+      case a: BaseAggregateExec => a
+    }.isEmpty, plan)
+
+    val dir = Files.createTempDirectory("geojson_sink")
+    for (i <- 1 to 4) Files.copy(
+      Paths.get(fixtureDir, "TCGA-AA-1111-01Z-00-DX1.abcd-uuid-1234.geojson"),
+      dir.resolve(s"TCGA-AA-111$i-01Z-00-DX1.u.geojson"))
+    Files.writeString(dir.resolve("TCGA-AA-1115-01Z-00-DX1.u.geojson"),
+      """{"features": []}""")
+    val out = Files.createTempDirectory("geojson_sink_out")
+    val rel = GeoJsonPipeline.run(spark, dir.toString, "T")
+      .select(concat(col("stem"), lit(".ttl")).as("rel_path"), col("ttl"))
+    val tally = new TaskTally(spark.sparkContext)
+    try {
+      val before = tally.read()
+      TtlFileSink.write(rel, out.toString)
+      val jobs = (tally.read() - before).jobMs
+      assert(jobs.length == 1, jobs)
+    } finally spark.sparkContext.removeSparkListener(tally)
+    assert((1 to 5).forall(i =>
+      Files.exists(out.resolve(s"TCGA-AA-111$i-01Z-00-DX1.u.ttl"))))
   }
 
   test("degenerate points drop the FEATURE (reference's except→None), " +

@@ -151,6 +151,19 @@ class MongoMarksBatchingSpec extends SparkTestBase {
     }
   }
 
+  for (bs <- Seq(0, -1))
+    test(s"batch size $bs is refused when the plan is built, with no job") {
+      val (marks, analyses, _) = corpus(1)
+      val tally = new TaskTally(spark.sparkContext)
+      try {
+        val before = tally.read()
+        val e = intercept[IllegalArgumentException](
+          MongoMarksPipeline.documents(marks, analyses, hashes, bs))
+        assert(e.getMessage.contains(s"got $bs"), e.getMessage)
+        assert((tally.read() - before).jobMs.isEmpty)
+      } finally spark.sparkContext.removeSparkListener(tally)
+    }
+
   test("a 25,000-mark group at batch size 1000 is 25 full documents " +
     "over ascending, disjoint mark ranges") {
     import spark.implicits._

@@ -326,6 +326,24 @@ MUTANTS += [
      SEG_SUITES),
 ]
 
+# ---- set 8: the GeoJSON assembly. Each file's features become members
+# inside the row that was read, so only the specs guard the member
+# separator, the dominant-class tie-break and the NULL-WKT drop.
+GEO = "src/main/scala/graft/pipelines/GeoJsonPipeline.scala"
+GEO_SUITES = "graft.GeoJsonPipelineSpec graft.GeoJsonAssemblySpec"
+
+MUTANTS += [
+    ("G1-geo-member-sep", GEO, "documents: members joined by \";\" instead of \";\\n\"",
+     'concat_ws(";\\n", transform(col("features")',
+     'concat_ws(";", transform(col("features")', GEO_SUITES),
+    ("G2-geo-tie-ge", GEO, "dominantClass: strict > -> >= (last max wins a tie)",
+     'e.getField("value") > acc.getField("prob")',
+     'e.getField("value") >= acc.getField("prob")', GEO_SUITES),
+    ("G3-geo-keep-null-wkt", GEO, "member: a NULL WKT becomes \"\" (the feature is kept, not dropped)",
+     'wktRaw(f.getField("geometry")),',
+     'coalesce(wktRaw(f.getField("geometry")), lit("")),', GEO_SUITES),
+]
+
 
 def run(mutant):
     mid, fn, desc, old, new, suites = mutant
