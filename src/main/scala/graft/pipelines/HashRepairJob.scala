@@ -1,5 +1,7 @@
 package graft.pipelines
 
+import java.io.ByteArrayInputStream
+import java.util.zip.GZIPInputStream
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,22 +51,26 @@ object HashRepairJob {
       .option("multiLine", true).json(path)
       .select(col("slide"), lower(col("hash")).as("real_hash"))
 
-  /** S8: whole-file scan of `<base>/<slide>.svs/batch_*.ttl.gz`
-    * (gzip transparent), one row per file with its slide key. The
-    * slide directories are the root paths (one listing task per
-    * slide, not per file). */
+  /** S8: whole-file scan of `<base>/<slide>.svs/batch_*.ttl.gz`, one
+    * row per file with its slide key. The slide directories are the
+    * root paths (one listing task per slide, not per file). The task
+    * gunzips each `binaryFile` row (`wholetext` would copy the Hadoop
+    * conf into a new `JobConf` per file), and the cast keeps malformed
+    * UTF-8 raw, as the text source does. */
   def readTtlTree(spark: SparkSession, baseDir: String): DataFrame =
     // `path` is DECODED: a slide dir with a space would otherwise
     // never match its slide_hashes.json key (silently unrepaired) and
     // the new snapshot would land under the %20-spelled directory
-    PathMeta.filesIn(spark.read.format("text").option("wholetext", true),
+    PathMeta.filesIn(spark.read.format("binaryFile"),
       baseDir + "/*.svs", "*.ttl.gz")
       .withColumn("slide",  // folder name INCLUDING .svs, like the
         // reference's svs_folder.name lookup key (:119-121)
         regexp_extract(col("path"), "/([^/]+\\.svs)/[^/]+$", 1))
       .withColumn("rel_path",
         regexp_extract(col("path"), "/([^/]+\\.svs/[^/]+)$", 1))
-      .select(col("rel_path"), col("slide"), col("value").as("ttl"))
+      .select(col("rel_path"), col("slide"), udf((gz: Array[Byte]) =>
+        new GZIPInputStream(new ByteArrayInputStream(gz)).readAllBytes())
+        .apply(col("content")).cast("string").as("ttl"))
 
   /** F13: replace every `<urn:sha256:hex>` subject with the slide's
     * real hash; if none present, upgrade `<urn:md5:hex>` instead

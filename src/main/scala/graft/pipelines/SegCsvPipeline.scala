@@ -1,17 +1,18 @@
 package graft.pipelines
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.regex.Pattern
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Nuclear-segmentation CSV → TTL pipeline (§3.2 of SURVEY; reference
   * entry point segmentation-etl/nuclear_segmentation_etl.py:506-587).
   *
   * The reference's 4-level directory walk (S3, :362-446) becomes a
   * glob over the slide directories plus a file-name filter
-  * (`PathMeta.filesIn`); cancer type, slide name and patch metadata
-  * come from `input_file_name()` regex extraction (F6/F7) instead of
-  * nested loops. Each CSV (≈ one patch) yields one gzip'd TTL
+  * (`PathMeta.filesIn`). Each CSV (≈ one patch) yields one gzip'd TTL
   * document (K2/K4); per-patch parallelism replaces the per-SVS
   * process pool (X2).
   *
@@ -20,6 +21,12 @@ import org.apache.spark.sql.types._
   * each CSV whole, in file order, and assembles its document in the
   * same pass. The cost: one huge CSV no longer splits across tasks;
   * the reference's CSVs hold one patch each.
+  *
+  * What is constant within a file is derived once, at its first row,
+  * not per nucleus: cancer type, slide name and patch metadata from the
+  * path (F6/F7), the slide's hash and the header. Each CSV gets its own
+  * univocity parser, so the parse buffer is sized for a ~1 KB file:
+  * the 2 MB default is a G1 humongous allocation at a 3 GB heap.
   */
 object SegCsvPipeline {
 
@@ -31,69 +38,75 @@ object SegCsvPipeline {
     StructField("PhysicalSize", StringType),
     StructField("Polygon", StringType)))
 
+  /** univocity's parse buffer, in chars. It detects the line separator
+    * in the first load only: a CRLF file whose first line is longer
+    * keeps a `\r` in each row's last field (MIGRATION §2). */
+  private val InputBufferSize = 8192
+
   /** S2/S3: scan `<base>/<cancer>_polygon/<slide>.svs.tar.gz/
-    * <cancer>_polygon/<slide>.svs/<X>_<Y>_<W>_<H>_*-features.csv`,
-    * extracting path-encoded metadata. The slide directories are the
-    * root paths (one listing task per slide, not per CSV). */
+    * <cancer>_polygon/<slide>.svs/<X>_<Y>_<W>_<H>_*-features.csv` with
+    * each file's decoded `path`. The slide directories are the root
+    * paths (one listing task per slide, not per CSV). */
   def read(spark: SparkSession, baseDir: String): DataFrame =
     PathMeta.filesIn(
       spark.read.format("csv").option("header", true)
-        .option("multiLine", true).schema(csvSchema),
+        .option("multiLine", true).option("inputBufferSize", InputBufferSize)
+        .schema(csvSchema),
       baseDir + "/*_polygon/*.svs.tar.gz/*_polygon/*.svs", "*-features.csv")
-      .withColumn("cancer_type",
-        regexp_extract(col("path"), "/([a-z]+)_polygon/[^/]+\\.svs/", 1))
-      .withColumn("image_name",
-        regexp_extract(col("path"), "/([^/]+)\\.svs/[^/]+$", 1))
-      .withColumn("csv_name",
-        regexp_extract(col("path"), "([^/]+)$", 1))
-      .withColumn("base_name", regexp_replace(col("csv_name"), "\\.csv$", ""))
 
-  /** F6: patch metadata from `X_Y_W_H_*` filename; fallback
-    * {0,0,40000,40000} on any non-integer part (:79-114). try_cast /
-    * try_element_at keep ANSI mode error-free on malformed names. */
-  def withPatchInfo(df: DataFrame): DataFrame = {
-    val d = df.withColumn("fparts", split(col("base_name"), "_"))
-      .withColumn("px", expr("try_cast(try_element_at(fparts, 1) as bigint)"))
-      .withColumn("py", expr("try_cast(try_element_at(fparts, 2) as bigint)"))
-      .withColumn("pw", expr("try_cast(try_element_at(fparts, 3) as bigint)"))
-      .withColumn("ph", expr("try_cast(try_element_at(fparts, 4) as bigint)"))
-    val ok = size(col("fparts")) >= 4 && col("px").isNotNull &&
-      col("py").isNotNull && col("pw").isNotNull && col("ph").isNotNull
-    d.withColumn("patch_x", when(ok, col("px")).otherwise(0L))
-      .withColumn("patch_y", when(ok, col("py")).otherwise(0L))
-      .withColumn("patch_w", when(ok, col("pw")).otherwise(40000L))
-      .withColumn("patch_h", when(ok, col("ph")).otherwise(40000L))
-      .drop("fparts", "px", "py", "pw", "ph")
+  /** A nucleus row: its file's path and its member fragment. */
+  final case class SegRow(path: String, fragment: String)
+
+  private val CancerType = Pattern.compile("/([a-z]+)_polygon/[^/]+\\.svs/")
+  private val ImageName = Pattern.compile("/([^/]+)\\.svs/[^/]+$")
+  private val CsvName = Pattern.compile("([^/]+)$")
+  private val CsvSuffix = Pattern.compile("\\.csv$")
+
+  /** `regexp_extract(s, p, 1)`: "" on no match or a NULL group. */
+  private def group1(p: Pattern, s: String): String = {
+    val m = p.matcher(s)
+    if (m.find() && m.group(1) != null) m.group(1) else ""
   }
 
-  /** A nucleus row: its file's header columns, then its member
-    * fragment. None is NULL (`regexp_extract` gives "" on no match). */
-  final case class SegRow(path: String, image_name: String,
-    cancer_type: String, base_name: String, image_hash: String,
-    patch_x: Long, patch_y: Long, patch_w: Long, patch_h: Long,
-    fragment: String)
+  /** F6: patch x/y/w/h from the `X_Y_W_H_*` base name, fallback
+    * {0,0,40000,40000} (:79-114). A part parses as `try_cast(… as
+    * bigint)` does: padding trimmed, no fraction and no overflow. */
+  private def patchOf(baseName: String): Array[Long] = {
+    val parts = baseName.split("_", -1)
+    val xywh = if (parts.length < 4) None
+      else try Some(Array.tabulate(4)(i => UTF8String.fromString(parts(i)).toLongExact))
+      catch { case _: NumberFormatException => None }
+    xywh.getOrElse(Array(0L, 0L, 40000L, 40000L))
+  }
 
-  /** A patch document's TTL, up to its first member. */
-  private def header(r: SegRow, timestamp: String): String =
-    graft.ttl.Turtle.PrefixHeader +
-      s"<urn:sha256:${r.image_hash}>\n        a            so:ImageObject;\n" +
-      s"        dc:identifier \"${r.image_name}\" .\n\n" +
-      "<>      a                    geo:FeatureCollection;\n" +
-      "        dc:creator           \"http://orcid.org/0000-0003-4165-4062\";\n" +
-      s"        dc:date              \"$timestamp\"^^xsd:dateTime;\n" +
-      s"        dc:description       \"Nuclear segmentation predictions for ${r.image_name}" +
-      s" - patch ${r.patch_x}_${r.patch_y} (${r.patch_w}x${r.patch_h})\";\n" +
-      "        dc:publisher         <https://ror.org/01882y777> , <https://ror.org/05qghxh33>;\n" +
-      "        dc:references        \"https://doi.org/10.1038/s41597-020-0528-1\";\n" +
-      "        dc:title             \"nuclear-segmentation-predictions\";" +
-      (if (r.cancer_type.isEmpty) "" else s"\n        hal:cancerType       \"${r.cancer_type}\";") +
-      s"\n        hal:patchX           \"${r.patch_x}\"^^xsd:int;\n" +
-      s"        hal:patchY           \"${r.patch_y}\"^^xsd:int;\n" +
-      s"        hal:patchWidth       \"${r.patch_w}\"^^xsd:int;\n" +
-      s"        hal:patchHeight      \"${r.patch_h}\"^^xsd:int;\n" +
-      "        prov:wasGeneratedBy  [ a                       prov:Activity;\n" +
-      s"                               prov:used               <urn:sha256:${r.image_hash}>;\n" +
-      "                             ];\n"
+  /** The CSV's rel_path and its document up to the first member. */
+  private def patchHeader(path: String, timestamp: String): (String, String) = {
+    val cancerType = group1(CancerType, path)
+    val imageName = group1(ImageName, path)
+    val baseName = CsvSuffix.matcher(group1(CsvName, path)).replaceAll("")
+    val Array(x, y, w, h) = patchOf(baseName)
+    val hash = graft.Hex.digest("SHA-256", imageName.getBytes(UTF_8))
+    (imageName + ".svs/" + cancerType + "_" + baseName + ".ttl.gz",
+      graft.ttl.Turtle.PrefixHeader +
+        s"<urn:sha256:$hash>\n        a            so:ImageObject;\n" +
+        s"        dc:identifier \"$imageName\" .\n\n" +
+        "<>      a                    geo:FeatureCollection;\n" +
+        "        dc:creator           \"http://orcid.org/0000-0003-4165-4062\";\n" +
+        s"        dc:date              \"$timestamp\"^^xsd:dateTime;\n" +
+        s"        dc:description       \"Nuclear segmentation predictions for $imageName" +
+        s" - patch ${x}_$y (${w}x$h)\";\n" +
+        "        dc:publisher         <https://ror.org/01882y777> , <https://ror.org/05qghxh33>;\n" +
+        "        dc:references        \"https://doi.org/10.1038/s41597-020-0528-1\";\n" +
+        "        dc:title             \"nuclear-segmentation-predictions\";" +
+        (if (cancerType.isEmpty) "" else s"\n        hal:cancerType       \"$cancerType\";") +
+        s"\n        hal:patchX           \"$x\"^^xsd:int;\n" +
+        s"        hal:patchY           \"$y\"^^xsd:int;\n" +
+        s"        hal:patchWidth       \"$w\"^^xsd:int;\n" +
+        s"        hal:patchHeight      \"$h\"^^xsd:int;\n" +
+        "        prov:wasGeneratedBy  [ a                       prov:Activity;\n" +
+        s"                               prov:used               <urn:sha256:$hash>;\n" +
+        "                             ];\n")
+  }
 
   /** One (rel_path, ttl) document per run of rows that share a `path`:
     * the header, the members joined by ";\n", then " .\n". */
@@ -104,20 +117,18 @@ object SegCsvPipeline {
       def hasNext: Boolean = rs.hasNext
       def next(): (String, String) = {
         val first = rs.next()
-        val sb = new java.lang.StringBuilder(header(first, timestamp))
-          .append(first.fragment)
+        val (relPath, header) = patchHeader(first.path, timestamp)
+        val sb = new java.lang.StringBuilder(header).append(first.fragment)
         while (rs.hasNext && rs.head.path == first.path)
           sb.append(";\n").append(rs.next().fragment)
-        (first.image_name + ".svs/" + first.cancer_type + "_" +
-          first.base_name + ".ttl.gz", sb.append(" .\n").toString)
+        (relPath, sb.append(" .\n").toString)
       }
     }
   }
 
   /** One TTL document per CSV file (gzip sink is TtlFileSink's job). */
   def documents(rows: DataFrame, timestamp: String): DataFrame = {
-    val withMeta = withPatchInfo(rows)
-      .withColumn("image_hash", sha2(col("image_name"), 256))
+    val withWkt = rows
       .withColumn("tokens",
         split(regexp_replace(trim(col("Polygon")), "^\\[|\\]$", ""), ":"))
       // sequence(1,0) would DESCEND and drive element_at(_, 0) into an
@@ -158,9 +169,7 @@ object SegCsvPipeline {
     // The read is unsplittable, so each task reads whole files, one
     // after another: a file's rows are contiguous and in file order.
     import rows.sparkSession.implicits._
-    withMeta.select(col("path"), col("image_name"), col("cancer_type"),
-      col("base_name"), col("image_hash"), col("patch_x"), col("patch_y"),
-      col("patch_w"), col("patch_h"), frag.as("fragment"))
+    withWkt.select(col("path"), frag.as("fragment"))
       .as[SegRow].mapPartitions(patches(_, timestamp))
       .toDF("rel_path", "ttl")
   }

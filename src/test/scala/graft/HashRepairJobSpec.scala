@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipelines.{HashRepairJob, MongoMarksPipeline => M}
+import graft.pipelines.{HashRepairJob, MongoMarksPipeline => M, PathMeta}
 import java.nio.file.{Files, Paths}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
@@ -95,6 +95,44 @@ class HashRepairJobSpec extends SparkTestBase {
     assert(row.getAs[String]("slide") == "GTEX 123.svs", row)
     assert(row.getAs[String]("rel_path") ==
       "GTEX 123.svs/batch_000001.ttl.gz", row)
+  }
+
+  test("readTtlTree reads each file's bytes as the wholetext reader " +
+    "did: malformed UTF-8 stays raw, gzip members concatenate, a zero-byte " +
+    "file is skipped") {
+    val base = Files.createTempDirectory("hr_bytes")
+    def gz(bytes: Array[Byte]*): Array[Byte] = bytes.map { b =>
+      val bos = new java.io.ByteArrayOutputStream
+      val os = new GZIPOutputStream(bos); os.write(b); os.close()
+      bos.toByteArray
+    }.reduce(_ ++ _)
+    val files = Seq(
+      "slideA.svs/bad.ttl.gz" -> gz(Array[Byte]('<', 0xff.toByte, 0xc3.toByte,
+        '>', 0xed.toByte, 0xa0.toByte, 0x80.toByte, '\n')),
+      "slideA.svs/two.ttl.gz" -> gz("<urn:a> a so:X .\n".getBytes("UTF-8"),
+        "<urn:b> a so:Y .\r\n".getBytes("UTF-8")),
+      "slideB.svs/bom.ttl.gz" -> gz("\uFEFFé 图像\n".getBytes("UTF-8")),
+      "slideB.svs/blank.ttl.gz" -> gz(Array.emptyByteArray),
+      "slideB.svs/zero.ttl.gz" -> Array.emptyByteArray)
+    for ((rel, bytes) <- files) {
+      Files.createDirectories(base.resolve(rel).getParent)
+      Files.write(base.resolve(rel), bytes)
+    }
+    def bytesOf(df: org.apache.spark.sql.DataFrame) = df
+      .selectExpr("rel_path", "slide", "cast(ttl as binary)").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Array[Byte]](2).toSeq)
+      .toMap
+    val got = bytesOf(HashRepairJob.readTtlTree(spark, base.toString))
+    val want = bytesOf(PathMeta.filesIn(
+      spark.read.format("text").option("wholetext", true),
+      base.toString + "/*.svs", "*.ttl.gz")
+      .selectExpr("regexp_extract(path, '/([^/]+\\\\.svs/[^/]+)$', 1) as rel_path",
+        "regexp_extract(path, '/([^/]+\\\\.svs)/[^/]+$', 1) as slide",
+        "value as ttl"))
+    assert(got == want)
+    // Spark plans no split for a zero-byte file: neither reader has a row
+    assert(got.size == files.size - 1, got.keySet)
+    assert(got(("slideA.svs/bad.ttl.gz", "slideA.svs")).contains(0xff.toByte))
   }
 
   test("buildHashLookup computes sha256 of file bytes (binaryFile)") {

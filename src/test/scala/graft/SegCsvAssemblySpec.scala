@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   * its document in the scan task. These specs hold it to the spelling
   * it replaced — a line-mode read, then a `collect_list` / `array_sort`
   * aggregate and a `format_string` header, kept below as
-  * `LineModeSpelling` — on adversarial files, and pin the new output of
-  * the three inputs on which the two reads differ: a field that holds a
-  * line break. */
+  * `LineModeSpelling` — on adversarial files and patch names, and pin
+  * the new output of the three inputs on which the two reads differ: a
+  * field that holds a line break. The parse buffer is smaller than
+  * univocity's default: a CSV longer than it reads as with the default,
+  * except a CRLF file whose first line does not fit the buffer. */
 class SegCsvAssemblySpec extends SparkTestBase {
 
   private val Header = "AreaInPixels,PhysicalSize,Polygon"
@@ -83,7 +85,15 @@ class SegCsvAssemblySpec extends SparkTestBase {
       s"$luad/1_1_1_1_g-features.csv" -> s"$Header\n5,1.5,[1:2:3:4]\n6,1.5,[3:4:5:6]\n",
       s"$luad/2_1_1_1_g-features.csv" -> s"$Header\n7,1.5,[1:2:3:4]\n",
       s"$anon/1_1_1_1_h-features.csv" -> s"$Header\n5,1.5,[1:2:3:4]\n")
-    for ((rel, body) <- files) put(base, rel, body)
+    // patch names at the edge of the X_Y_W_H parse: a sign, a leading
+    // zero, a fraction, padding, an empty part, too few parts, and the
+    // bigint bounds and one past them
+    val names = Seq("+5_2_3_4_p", "05_2_3_4_z", "-1_2_3_4_n", "5.0_2_3_4_f",
+      " 5 _2_3_4_s", "1__3_4_e", "1_2_3", "1_2_3_4",
+      "9223372036854775808_2_3_4_o", "-9223372036854775808_2_3_9223372036854775807_m")
+    val patchFiles = names.map(n =>
+      s"$luad/$n-features.csv" -> s"$Header\n5,1.5,[1:2:3:4]\n")
+    for ((rel, body) <- files ++ patchFiles) put(base, rel, body)
 
     val ts = "2024-01-02T03:04:05"
     val got = docs(SegCsvPipeline.run(spark, base.toString, ts))
@@ -93,7 +103,18 @@ class SegCsvAssemblySpec extends SparkTestBase {
       assert(got(path) == doc, s"$path: first diff ${firstDiff(got(path), doc)}")
     // not vacuous: every file but the header-only and empty ones is a
     // document, and the corner cases reached the output
-    assert(got.size == files.size - 2, got.keySet)
+    assert(got.size == files.size + patchFiles.size - 2, got.keySet)
+    def patch(name: String) = "patch [^\"]*".r
+      .findFirstIn(got(s"G 1+2.svs/luad_$name-features.ttl.gz")).get
+    assert(patch("+5_2_3_4_p") == "patch 5_2 (3x4)")
+    assert(patch("05_2_3_4_z") == "patch 5_2 (3x4)")
+    assert(patch("-1_2_3_4_n") == "patch -1_2 (3x4)")
+    assert(patch(" 5 _2_3_4_s") == "patch 5_2 (3x4)")
+    assert(patch("-9223372036854775808_2_3_9223372036854775807_m") ==
+      "patch -9223372036854775808_2 (3x9223372036854775807)")
+    for (n <- Seq("5.0_2_3_4_f", "1__3_4_e", "1_2_3", "1_2_3_4",
+      "9223372036854775808_2_3_4_o"))
+      assert(patch(n) == "patch 0_0 (40000x40000)", n)
     assert(got.keySet.contains("TCGA-XX-01.svs/blca_weird-features.ttl.gz"))
     assert(got.keySet.contains("G 1+2.svs/luad_1_1_1_1_g-features.ttl.gz"))
     assert(got.keySet.contains("S.svs/_1_1_1_1_h-features.ttl.gz"))
@@ -116,14 +137,20 @@ class SegCsvAssemblySpec extends SparkTestBase {
       ("3", "2.5", "[]", "/b/X_polygon/Ü-图像.svs/ñ-features.csv",
         "", "Ü-图像", "ñ-features.csv", "ñ-features"),
       (null, null, "[9:9]", "/b/luad_polygon/é.svs/5_6_7_8_c-features.csv",
-        "luad", "é", "5_6_7_8_c-features.csv", "5_6_7_8_c-features"))
+        "luad", "é", "5_6_7_8_c-features.csv", "5_6_7_8_c-features"),
+      // three parts that all parse, which no `-features.csv` name has:
+      // still the fallback
+      ("4", "1.5", "[1:2:3:4]", "/b/luad_polygon/é.svs/7_8_9.csv",
+        "luad", "é", "7_8_9.csv", "7_8_9"))
       .toDF("AreaInPixels", "PhysicalSize", "Polygon", "path", "cancer_type",
         "image_name", "csv_name", "base_name").coalesce(1)
     val got = docs(SegCsvPipeline.documents(rows, "tš"))
     val want = docs(LineModeSpelling.documents(rows, "tš"))
     assert(got == want, got.keySet)
     assert(got.keySet == Set("Ü-图像.svs/blca_1_2_3_4_a-features.ttl.gz",
-      "Ü-图像.svs/_ñ-features.ttl.gz", "é.svs/luad_5_6_7_8_c-features.ttl.gz"))
+      "Ü-图像.svs/_ñ-features.ttl.gz", "é.svs/luad_5_6_7_8_c-features.ttl.gz",
+      "é.svs/luad_7_8_9.ttl.gz"))
+    assert(got("é.svs/luad_7_8_9.ttl.gz").contains("patch 0_0 (40000x40000)"))
   }
 
   test("a quoted field with a line break is one row: the line break " +
@@ -169,12 +196,67 @@ class SegCsvAssemblySpec extends SparkTestBase {
         .mkString(";\n") + " .\n")
     assert(docs(LineModeSpelling.run(spark, base.toString, "T")) != got)
   }
+
+  /** `SegCsvPipeline.run` with the multiLine read at univocity's
+    * default parse buffer (1,048,576 chars). */
+  private def defaultBufferRun(base: Path, ts: String): DataFrame =
+    SegCsvPipeline.documents(PathMeta.filesIn(
+      spark.read.format("csv").option("header", true)
+        .option("multiLine", true).schema(SegCsvPipeline.csvSchema),
+      base.toString + "/*_polygon/*.svs.tar.gz/*_polygon/*.svs",
+      "*-features.csv"), ts)
+
+  test("a CSV longer than the parse buffer, with quoted line breaks " +
+    "across its boundary, reads as with the default buffer") {
+    val base = Files.createTempDirectory("segbuffer")
+    val rel = "blca_polygon/I.svs.tar.gz/blca_polygon/I.svs/1_2_3_4_b-features.csv"
+    val head = new StringBuilder(s"$Header\n")
+    var n = 0
+    while (head.length < 8000) { n += 1; head.append(s"$n,1.5,[1:2:3:4]\n") }
+    // one quoted field from char ~8000 to ~8400, a line break in every
+    // char after its first coordinates: whatever char a buffer load
+    // ends at, it splits the field inside the quotes
+    val breaks = "\n" * 400
+    val open = head.length + "0,2.5,\"".length
+    val body = head.toString + "0,2.5,\"[1:2:3:4" + breaks + ":5:6]\"\n" +
+      (1 to 600).map(i => s"$i,3.5,[7:8:9:10]").mkString("\n") + "\n"
+    assert(open < 8192 && body.indexOf('"', open) > 8192 && body.length > 16384)
+    put(base, rel, body)
+    val got = docs(SegCsvPipeline.run(spark, base.toString, "T"))
+    assert(got == docs(defaultBufferRun(base, "T")))
+    val path = "I.svs/blca_1_2_3_4_b-features.ttl.gz"
+    assert(members(got(path)) == ((1 to n).map(i =>
+      member("POLYGON ((1 2, 3 4, 1 2))", s"$i", "1.5")) ++
+      Seq(member(s"POLYGON ((1 2, 3 4$breaks, 5 6, 1 2))", "0", "2.5")) ++
+      (1 to 600).map(i => member("POLYGON ((7 8, 9 10, 7 8))", s"$i", "3.5")))
+      .mkString(";\n") + " .\n")
+  }
+
+  test("a CRLF file whose first line is longer than the parse buffer " +
+    "keeps a trailing CR in the last field") {
+    val base = Files.createTempDirectory("segcrlf")
+    val rel = "blca_polygon/I.svs.tar.gz/blca_polygon/I.svs/1_2_3_4_l-features.csv"
+    // univocity looks for the line separator in its first buffer load
+    // only: the 9 KB header line holds none, so "\n" ends each row
+    put(base, rel, s"$Header,${"c" * 9000}\r\n5,1.5,[1:2:3:4]\r\n6,2.5,[7:8:9:10]\r\n")
+    val got = docs(SegCsvPipeline.run(spark, base.toString, "T"))
+    val path = "I.svs/blca_1_2_3_4_l-features.ttl.gz"
+    assert(got.keySet == Set(path))
+    assert(members(got(path)) ==
+      Seq(member("POLYGON ((1 2, 3 4\r, 1 2))", "5", "1.5"),
+        member("POLYGON ((7 8, 9 10\r, 7 8))", "6", "2.5"))
+        .mkString(";\n") + " .\n")
+    assert(docs(defaultBufferRun(base, "T")) != got)
+    assert(docs(LineModeSpelling.run(spark, base.toString, "T")) != got)
+  }
 }
 
 /** Test-only copy of `SegCsvPipeline.read` and `documents` as they were
-  * spelled before the per-file assembly: a splittable line-mode read,
-  * rows regrouped by file with `collect_list`, sorted back into file
-  * order by (split offset, row id), and a `format_string` header. */
+  * spelled before the per-file assembly: a splittable line-mode read
+  * that derives the header columns per row with regexes, `try_cast`
+  * and `sha2`, rows regrouped by file with `collect_list`, sorted back
+  * into file order by (split offset, row id), and a `format_string`
+  * header. */
 object LineModeSpelling {
 
   def read(spark: SparkSession, baseDir: String): DataFrame =
@@ -190,8 +272,27 @@ object LineModeSpelling {
         regexp_extract(col("path"), "([^/]+)$", 1))
       .withColumn("base_name", regexp_replace(col("csv_name"), "\\.csv$", ""))
 
+  /** F6 as the pipeline spelled it per row: patch metadata from the
+    * `X_Y_W_H_*` base name, fallback {0,0,40000,40000} on any
+    * non-integer part. try_cast / try_element_at keep ANSI mode
+    * error-free on malformed names. */
+  def withPatchInfo(df: DataFrame): DataFrame = {
+    val d = df.withColumn("fparts", split(col("base_name"), "_"))
+      .withColumn("px", expr("try_cast(try_element_at(fparts, 1) as bigint)"))
+      .withColumn("py", expr("try_cast(try_element_at(fparts, 2) as bigint)"))
+      .withColumn("pw", expr("try_cast(try_element_at(fparts, 3) as bigint)"))
+      .withColumn("ph", expr("try_cast(try_element_at(fparts, 4) as bigint)"))
+    val ok = size(col("fparts")) >= 4 && col("px").isNotNull &&
+      col("py").isNotNull && col("pw").isNotNull && col("ph").isNotNull
+    d.withColumn("patch_x", when(ok, col("px")).otherwise(0L))
+      .withColumn("patch_y", when(ok, col("py")).otherwise(0L))
+      .withColumn("patch_w", when(ok, col("pw")).otherwise(40000L))
+      .withColumn("patch_h", when(ok, col("ph")).otherwise(40000L))
+      .drop("fparts", "px", "py", "pw", "ph")
+  }
+
   def documents(rows: DataFrame, timestamp: String): DataFrame = {
-    val withMeta = SegCsvPipeline.withPatchInfo(rows)
+    val withMeta = withPatchInfo(rows)
       .withColumn("image_hash", sha2(col("image_name"), 256))
       .withColumn("tokens",
         split(regexp_replace(trim(col("Polygon")), "^\\[|\\]$", ""), ":"))

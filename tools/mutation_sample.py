@@ -313,17 +313,25 @@ MUTANTS += [
 
 
 # ---- set 7: the seg patch assembly. Each task reads whole CSVs and
-# walks each file's run of rows into one document in Scala, so only
-# the specs guard the run boundary and the member separator.
+# walks each file's run of rows into one document in Scala, deriving
+# the header from the file's path at its first row, so only the specs
+# guard the run boundary, the member separator and the patch parse.
 SEG_SUITES = "graft.SegCsvPipelineSpec graft.SegCsvAssemblySpec"
 
 MUTANTS += [
-    ("S1-seg-run-by-image", SEG, "patches: a run is the rows of one image, not of one file",
-     "rs.head.path == first.path", "rs.head.image_name == first.image_name",
+    ("S1-seg-run-by-image", SEG, "patches: a run is the rows of one image directory, not of one file",
+     "rs.head.path == first.path",
+     "rs.head.path.take(first.path.lastIndexOf('/')) == "
+     "first.path.take(first.path.lastIndexOf('/'))",
      SEG_SUITES),
     ("S2-seg-leading-sep", SEG, "patches: write \";\\n\" before the first member too",
      ".append(first.fragment)", '.append(";\\n").append(first.fragment)',
      SEG_SUITES),
+    ("S3-seg-three-parts", SEG, "patchOf: a base name of 3 parts is parsed, not the fallback",
+     "if (parts.length < 4) None", "if (parts.length < 3) None", SEG_SUITES),
+    ("S4-seg-fallback-width", SEG, "patchOf: the fallback width is 0, not 40000",
+     "xywh.getOrElse(Array(0L, 0L, 40000L, 40000L))",
+     "xywh.getOrElse(Array(0L, 0L, 0L, 40000L))", SEG_SUITES),
 ]
 
 # ---- set 8: the GeoJSON assembly. Each file's features become members
